@@ -110,11 +110,6 @@ object Bench {
           System.err.println(s"[bench] _setup FAILED: $e")
           Failed
       }
-    // Setup-level cache blocks (the stable-order churn dataset) are
-    // load-bearing across queries: an RDD-level unpersist would disable
-    // them for the rest of the run (storageLevel can't be re-enabled on
-    // a live cached plan), so they are exempted from every sweep.
-    val setupIds = spark.sparkContext.getPersistentRDDs.keySet
     // Each query runs three times: the first (cold) pays JIT/codegen
     // warmup (single-shot numbers moved 3-16x between identical-code
     // rounds purely from warmup order); the reported warm time is the
@@ -128,23 +123,9 @@ object Bench {
     // and those blocks outlive the query: by late bench the block
     // manager was full of dead cache (round-2's 138 s minhash outlier
     // was this — 13 s in a fresh JVM). Release each query's OWN
-    // persists after measuring it; setup-level caches survive.
-    // Release goes through Pins.scoped (Dataset-level): the raw
-    // RDD.unpersist sweep used through round 6 left dead CacheManager
-    // entries that silently no-op'd any LATER persist of the same
-    // canonical plan — q_dedup_ngram_jaccard's warm runs measured
-    // SLOWER than cold because q_dedup_cc's sweep had killed their
-    // shared capped-shingle pin for the rest of the JVM. The RDD diff
-    // below stays as a fallback for persists that bypass Pins.
-    def swept[T](f: => T): T = {
-      val persistedBefore =
-        spark.sparkContext.getPersistentRDDs.keySet ++ setupIds
-      val out = graft.core.Pins.scoped(f)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => persistedBefore(id) }
-        .values.foreach(_.unpersist(blocking = true))
-      out
-    }
+    // persists after measuring it (Pins.scoped); setup-level caches
+    // (the stable-order churn dataset) were pinned outside any scope,
+    // so they survive every query.
     def once(name: String): Obs = measure {
       // execute the EXACT planned query: df.count() would let Catalyst
       // column-prune the measured work (a projection-shaped query like
@@ -160,7 +141,7 @@ object Bench {
         !ParityBaselines(_)).toMap
       else SparkEntry.queries
     val measured = benchQueries.map { case (name, _) =>
-      val (cold, warm) = swept {
+      val (cold, warm) = graft.core.Pins.scoped {
         try {
           val c = once(name)
           (c, minByWall(once(name), once(name)))
@@ -189,7 +170,7 @@ object Bench {
     val guarded = measured.map { case (name, (cold, warm)) =>
       if (cold.wall >= 0 &&
           warm.wall > math.max(2.0 * cold.wall, cold.wall + 1.0)) {
-        val re = swept {
+        val re = graft.core.Pins.scoped {
           try once(name)
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name re-measure FAILED: $e")
@@ -213,7 +194,7 @@ object Bench {
     // Bounded cost: only the handful of genuinely-slow queries pay it.
     val results = guarded.map { case (name, (cold, warm)) =>
       if (cold.wall >= 0 && warm.wall >= 1.0) {
-        val re = swept {
+        val re = graft.core.Pins.scoped {
           try once(name)
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name settle FAILED: $e")

@@ -33,7 +33,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Materialize the shared churn dataset once (its cache pins predate
-    // the per-query scopes below, so the sweeps leave them alone):
+    // the per-query scopes below, so the scopes leave them alone):
     // operators persist intermediates that outlive their query, and 50+
     // queries in one session otherwise fill the block manager with dead
     // cache.
@@ -42,7 +42,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-        graft.core.CacheScope(spark) {
+        graft.core.Pins.scoped {
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>

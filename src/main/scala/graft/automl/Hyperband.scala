@@ -223,11 +223,9 @@ final class Hyperband(
     * Rung evaluations discard the fitted artifact (survivors re-fit at
     * the next rung's epoch budget): release its pinned caches or every
     * evaluated config leaks persisted blocks for the session. release()
-    * drops the DataFrame-level pins; the surrounding Pins scope
-    * releases the registered RDD-level ones too (Breslow's range-scan
-    * rows, each score()'s censoring-KM rows), which otherwise wait for
-    * ContextCleaner GC and pile up across a rung's many configs.
-    * TrainCache entries are exempt by construction (raw persists) —
+    * drops the fitted model's own pins (the Breslow baseline); the
+    * surrounding Pins scope releases whatever else the config pinned.
+    * TrainCache entries are held by their own scope, not the config's:
     * they outlive the config and are released when the search ends.
     */
   private def evalParams(m: ModelFactory, ds: SurvDataset,

@@ -2,49 +2,71 @@ package graft.core
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
 
-/** Registry of operator cache pins, releasable at the DATASET level.
+/** The one owner of every cache the engine takes: nothing else in
+  * `src/main` persists or unpersists (a source-scan spec enforces it).
   *
   * Why this exists: operators persist load-bearing intermediates
   * (shingle sets, minhash signatures, LSH candidates, fitted
-  * baselines). Sweeping those pins via `SparkContext.getPersistentRDDs`
-  * + `RDD.unpersist` — the shape CacheScope/Bench used through round 6
-  * — drops the cached blocks but leaves the entry in Catalyst's
-  * CacheManager. The entry is then poison twice over: a LATER identical
-  * plan's `.persist()` is a silent no-op ("already cached") against a
-  * relation whose storage level can never be re-enabled, and plan
-  * substitution keeps routing scans through the dead InMemoryRelation
-  * (recompute + columnar re-encode per scan, nothing stored). Measured:
-  * q_dedup_ngram_jaccard ran its WARM runs slower than cold (2.1 s vs
-  * 1.5 s) because q_dedup_cc — which pins the same capped-shingle plan
-  * — ran first and its sweep left the dead entry.
+  * baselines, shared training prep). Sweeping those pins via
+  * `SparkContext.getPersistentRDDs` + `RDD.unpersist` drops the cached
+  * blocks but leaves the entry in Catalyst's CacheManager. The entry is
+  * then poison twice over: a LATER identical plan's `.persist()` is a
+  * silent no-op ("already cached") against a relation whose storage
+  * level can never be re-enabled, and plan substitution keeps routing
+  * scans through the dead InMemoryRelation (recompute + columnar
+  * re-encode per scan, nothing stored). Measured: q_dedup_ngram_jaccard
+  * ran its WARM runs slower than cold (2.1 s vs 1.5 s) because
+  * q_dedup_cc — which pins the same capped-shingle plan — ran first and
+  * its sweep left the dead entry. `Dataset.unpersist` is the only
+  * release that removes the CacheManager entry, so plan caches are
+  * released through the Dataset handle.
   *
-  * `Dataset.unpersist` is the only release that removes the
-  * CacheManager entry, so pins must be released through the Dataset
-  * handle. Operators register every persist here ([[pin]]); sweeps
-  * release by scope ([[scoped]]) and a raw-RDD fallback stays in the
-  * sweeps only for persists that never touched the Dataset API.
+  * Ownership is REFCOUNTED per cache entry: every scope that pins a
+  * plan (or RDD) holds one reference, the check-and-persist runs under
+  * one lock, and the entry is unpersisted only when its last holder
+  * releases. Concurrently-evaluated Hyperband configs pin the same
+  * tensorized test split; the first to finish no longer drops it from
+  * under a sibling that is still scoring, and no two of them persist
+  * it twice.
   *
-  * Scopes are a per-thread stack, so concurrently-evaluated Hyperband
-  * configs (each fit inside its own CacheScope on its own thread)
-  * release exactly their own pins.
+  * Holders are scopes: [[scoped]] releases its pins when its block
+  * ends, [[held]] hands the release to the caller (shared training
+  * prep, a fitted model's baseline, a loop's superseded round). Scopes
+  * are a per-thread stack, so concurrent configs (each in its own
+  * scope on its own thread) release exactly their own pins. A pin
+  * taken outside any scope is never released here: a plan stays cached
+  * for the session (the memoized churn dataset), an RDD until it is
+  * garbage-collected.
   */
 object Pins {
 
-  private sealed trait Pin { def release(): Unit }
-  private final case class DsPin(ds: Dataset[_]) extends Pin {
-    def release(): Unit = ds.unpersist(blocking = true)
+  // A cached plan (keyed by its normalized plan) or RDD (keyed by
+  // itself) and the number of scopes holding it.
+  private final class Entry(val key: AnyRef, val drop: () => Unit) {
+    var holders = 0
   }
-  private final case class RddPin(rdd: RDD[_]) extends Pin {
-    def release(): Unit = rdd.unpersist(blocking = true)
-  }
-  private final case class CkptPin(ds: Dataset[_]) extends Pin {
-    def release(): Unit = releaseCheckpoint(ds)
+
+  // Live entries. `lock` guards them and every persist and release, so
+  // a check-and-persist can never race another one.
+  private val lock = new Object
+  private val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
+
+  // Plans match the way the CacheManager matches them; RDDs by identity.
+  private def sameKey(a: AnyRef, b: AnyRef): Boolean = (a, b) match {
+    case (p: LogicalPlan, q: LogicalPlan) => p.sameResult(q)
+    case _                                => a eq b
   }
 
   private final class Scope {
-    val pins = new java.util.concurrent.ConcurrentLinkedQueue[Pin]()
+    private val releases =
+      new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+    def add(release: () => Unit): Unit = { releases.add(release); () }
+    // draining poll: a second release() finds nothing left to drop
+    def release(): Unit =
+      Iterator.continually(releases.poll()).takeWhile(_ != null).foreach(_())
   }
 
   // Innermost active scope per thread. Plain ThreadLocal, NOT
@@ -52,33 +74,51 @@ object Pins {
   // an inherited stack would freeze whatever scope happened to be
   // active at thread creation and leak every later pin into it. Each
   // worker opens its own scope (Hyperband's parallel rung evaluation
-  // wraps every config in CacheScope on its evaluation thread).
+  // wraps every config in Pins.scoped on its evaluation thread).
   private val current = new ThreadLocal[List[Scope]] {
     override def initialValue(): List[Scope] = Nil
   }
 
-  private def register(p: Pin): Unit = current.get() match {
-    case s :: _ => s.pins.add(p)
-    case Nil    => () // unscoped pin: caller owns the lifecycle
+  // Persist unless already cached, then take one reference for the
+  // innermost scope: on the live entry for `key`, on a new entry when
+  // this call persisted, on nothing when the cache belongs to someone
+  // outside Pins (theirs to release). Unscoped: persist only.
+  private def acquire(key: AnyRef, cached: => Boolean)(
+      persist: => Any, unpersist: => Any): Unit = lock.synchronized {
+    val known = entries.find(e => sameKey(e.key, key))
+    val wasCached = cached
+    if (!wasCached) persist
+    current.get().headOption.foreach { s =>
+      if (known.isDefined || !wasCached) {
+        val entry = known.getOrElse {
+          val e = new Entry(key, () => { unpersist; () })
+          entries += e
+          e
+        }
+        entry.holders += 1
+        s.add(() => lock.synchronized {
+          entry.holders -= 1
+          if (entry.holders == 0) { entries -= entry; entry.drop() }
+        })
+      }
+    }
   }
 
-  /** Persist `ds` and register it with the innermost scope on this
-    * thread (no scope → the caller owns the release).
+  /** Persist `ds` (unless its plan is already cached) and take a
+    * reference on the cache for the innermost scope on this thread.
     *
-    * Idempotent per canonical plan: if the plan already has a
-    * CacheManager entry (a sibling operator or the shared setup
-    * already pinned it), the persist is skipped and the EXISTING
-    * owner keeps the release — a second `.persist()` would no-op
-    * with a "Asked to cache already cached data" warning while this
-    * scope wrongly believed it held a pin to drop.
+    * Idempotent per canonical plan: a plan a sibling scope already
+    * pinned gains one more holder instead of a second `.persist()`
+    * (which would no-op with a "Asked to cache already cached data"
+    * warning). A plan cached by someone outside Pins stays theirs.
     */
   def pin[T](ds: Dataset[T],
              level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
     requireConsumable(ds, "pin() input")
-    if (!org.apache.spark.sql.graft.bridge.isCached(ds)) {
-      ds.persist(level)
-      register(DsPin(ds))
-    }
+    // analysed before taking the lock
+    val plan = ds.queryExecution.normalized
+    acquire(plan, org.apache.spark.sql.graft.bridge.isCached(ds))(
+      ds.persist(level), ds.unpersist(blocking = true))
     ds
   }
 
@@ -104,24 +144,22 @@ object Pins {
     */
   def pinRdd[T](rdd: RDD[T],
                 level: StorageLevel = StorageLevel.MEMORY_AND_DISK): RDD[T] = {
-    rdd.persist(level)
-    register(RddPin(rdd))
+    acquire(rdd, rdd.getStorageLevel != StorageLevel.NONE)(
+      rdd.persist(level), rdd.unpersist(blocking = true))
     rdd
   }
 
   /** Register an eagerly-checkpointed Dataset for release at the
-    * innermost scope's exit (no scope → the caller owns the release,
-    * exactly like [[pin]]). This is how an iterative operator's FINAL
-    * checkpoint — the one round the rotation can't release, because
-    * the returned frame reads it — gets the same lifecycle under bare
-    * [[scoped]] that `CacheScope`'s getPersistentRDDs-diff fallback
-    * already gives it: released once the scope closes.
+    * innermost scope's exit (no scope → not released here; the blocks
+    * go when the checkpoint RDD is garbage-collected). This is how an
+    * iterative operator's FINAL checkpoint — the one round the
+    * rotation can't release, because the returned frame reads it —
+    * gets released once the caller's scope closes.
     *
     * Same safety contract as [[releaseCheckpoint]]: the scope must
     * materialize every consumer of the returned frame before it exits
-    * — a truncated-lineage block can never recompute. That is already
-    * the documented CacheScope contract ("consume the result inside
-    * the scope").
+    * — a truncated-lineage block can never recompute ("consume the
+    * result inside the scope").
     *
     * HAZARD (scope nesting): registration is with the INNERMOST scope
     * on the current thread. If an operator returning a
@@ -132,11 +170,12 @@ object Pins {
     * ids are tombstoned ([[requireConsumable]]) so the failure names
     * the contract instead of surfacing as a block-manager error.
     */
-  def pinCheckpoint(ds: Dataset[_]): Unit = register(CkptPin(ds))
+  def pinCheckpoint(ds: Dataset[_]): Unit =
+    current.get().headOption.foreach(_.add(() => releaseCheckpoint(ds)))
 
   // ---- use-after-release tombstones -------------------------------
   // RDD ids of checkpoints released through releaseCheckpoint (state
-  // rotation AND scope-exit CkptPins). A released local checkpoint's
+  // rotation AND scope-exit checkpoint pins). A released local checkpoint's
   // lineage is truncated, so any later execution over it dies deep in
   // the block manager with a generic "block not found" that names
   // neither the operator nor the contract; the tombstones let the
@@ -223,7 +262,7 @@ object Pins {
           "truncated-lineage checkpoint cannot recompute, so this frame " +
           "is permanently dead (Spark would fail with a generic 'block " +
           "not found' at execution). Consume an operator's result inside " +
-          "the Pins.scoped/CacheScope block that produced it.")
+          "the Pins.scoped block that produced it.")
     }
 
   /** Release the cached blocks of a locally-checkpointed Dataset —
@@ -265,24 +304,30 @@ object Pins {
     rdds.foreach { r => recordTombstone(r); r.unpersist(blocking = false) }
   }
 
-  /** Run `f` in a fresh scope; every pin taken during `f` on THIS
-    * thread is released — Dataset-level, so the CacheManager entry
-    * goes too — when `f` finishes. Pins taken on other threads
-    * (including threads `f` spawns) are NOT scoped here: `current` is
-    * deliberately non-inheritable (see its comment), so each worker
-    * thread opens its own scope.
+  /** Run `f` in a fresh scope and return its result with the scope's
+    * release instead of running it: the caller decides when the pins
+    * taken during `f` on THIS thread are dropped (each one only once
+    * its last holder lets go). Calling the release again does nothing.
+    * If `f` throws, its pins are released before the exception leaves.
+    * Pins taken on other threads (including threads `f` spawns) are
+    * not in this scope: `current` is deliberately non-inheritable (see
+    * its comment), so each worker thread opens its own scope.
     */
-  def scoped[T](f: => T): T = {
+  def held[T](f: => T): (T, () => Unit) = {
     val s = new Scope
     current.set(s :: current.get())
-    try f
-    finally {
-      current.set(current.get() match {
-        case `s` :: rest => rest
-        case other       => other.filterNot(_ eq s)
-      })
-      s.pins.forEach(_.release())
-      s.pins.clear()
-    }
+    try (f, () => s.release())
+    catch { case t: Throwable => s.release(); throw t }
+    finally current.set(current.get().filterNot(_ eq s))
+  }
+
+  /** Run `f` in a fresh scope; the pins taken during `f` on this
+    * thread are released when `f` finishes ([[held]] plus an immediate
+    * release).
+    */
+  def scoped[T](f: => T): T = {
+    val (out, release) = held(f)
+    release()
+    out
   }
 }

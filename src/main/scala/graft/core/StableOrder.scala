@@ -44,13 +44,10 @@ object StableOrder {
     // different partitionings — numbering would then be wrong. Caching
     // pins one physical partitioning for both passes. (At 100 TB you
     // don't do this on the fly at all: materialize rn once at ingest.)
-    // Pins.pin: ownership-aware (two stable orders over the SAME
-    // canonical plan share the one cached partitioning — a raw second
-    // persist would warn + no-op) AND scope-registered, so an
-    // enclosing CacheScope releases it at the DATASET level. The old
-    // acquire-and-drop-the-flag shape left the pin releasable only by
-    // the raw-RDD fallback sweep, whose dead CacheManager entry
-    // poisons any later persist of the same plan (Pins scaladoc).
+    // Pins.pin: refcounted (two stable orders over the SAME canonical
+    // plan share the one cached partitioning — a raw second persist
+    // would warn + no-op) AND scope-registered, so an enclosing
+    // Pins.scoped releases it at the DATASET level.
     val sorted = Pins.pin(df
       .repartitionByRange(np, keys: _*)
       .sortWithinPartitions(keys: _*)

@@ -31,7 +31,7 @@ object Width {
     * statistic AQE uses) are exactly the wrong signal.
     */
   def explode(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_EXPLODE_WIDTH").map(_.toInt).getOrElse {
+    fixedOr(sys.env.get(Knob)) {
       val sessionParts =
         spark.conf.get("spark.sql.shuffle.partitions").toLong
       math.max(1L, math.min(sessionParts,
@@ -50,10 +50,25 @@ object Width {
     * separate because the loop helper's 2×cores cap is spec-pinned
     * with its own target semantics.
     */
-  def explodeRows(spark: SparkSession, rows: Long,
+  def explodeRows(spark: SparkSession, rows: => Long,
                   rowsPerTask: Long): Int =
-    sys.env.get("SPARK_GRAFT_EXPLODE_WIDTH").map(_.toInt).getOrElse {
+    fixedOr(sys.env.get(Knob)) {
       math.max(1L, math.min(explode(spark).toLong,
         rows / rowsPerTask + 1L)).toInt
+    }
+
+  private val Knob = "SPARK_GRAFT_EXPLODE_WIDTH"
+
+  /** The `SPARK_GRAFT_EXPLODE_WIDTH` override (`raw`), parsed and
+    * validated here for both widths: when set it must be a positive
+    * integer and replaces the derived width, which is then never
+    * computed (so `explodeRows` skips its row count).
+    */
+  private[core] def fixedOr(raw: Option[String])(derived: => Int): Int =
+    raw match {
+      case None => derived
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$Knob must be a positive integer, got '$v'"))
     }
 }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
 object ScalableConcordance {
 
   def harrell(df: DataFrame, tCol: String, eCol: String, riskCol: String,
-              numBuckets: Int = 64): DataFrame = {
+              numBuckets: Int = 64): DataFrame = graft.core.Pins.scoped {
     val spark = df.sparkSession
     import spark.implicits._
 
@@ -47,7 +47,7 @@ object ScalableConcordance {
     // Concordance.harrell (a null would NPE the primitive-tuple
     // encoder in the within-bucket sweep; NaN risks are handled, see
     // countWithin)
-    val (s, ownS) = graft.core.Caches.acquire(
+    val s = graft.core.Pins.pin(
       df.filter(col(tCol).isNotNull && col(eCol).isNotNull &&
           col(riskCol).isNotNull)
         .select(col(tCol).cast("double").as("t"),
@@ -129,7 +129,6 @@ object ScalableConcordance {
     // sequential job round-trips over the same cached base.
     val Seq(comparable, ties, cross, within) =
       collectCounts(Seq(comparableDf, tiesDf, crossDf, withinDf))
-    if (ownS) { s.unpersist(); () }
 
     val concordant = cross + within + 0.5 * ties
     Seq((comparable, concordant, concordant / comparable.toDouble))
@@ -158,7 +157,7 @@ object ScalableConcordance {
     */
   def antolini(df: DataFrame, idCol: String, tCol: String, eCol: String,
                surv: DataFrame, grid: Array[Double],
-               numBuckets: Int = 16): DataFrame = {
+               numBuckets: Int = 16): DataFrame = graft.core.Pins.scoped {
     val spark = df.sparkSession
     import spark.implicits._
 
@@ -175,7 +174,7 @@ object ScalableConcordance {
 
     // One Harrell slice per active τ: every subject once, as risk
     // r = −s(τ|x); the event flag is LOCAL to the subject's own slice.
-    val (x, ownX) = graft.core.Caches.acquire(
+    val x = graft.core.Pins.pin(
       surv.select(col(idCol).as("k"), col("tau"), col("s"))
         .join(broadcast(activeTau), Seq("tau"), "left_semi")
         .join(base, Seq("k"))
@@ -253,7 +252,6 @@ object ScalableConcordance {
     // over the cached slice table → concurrently scheduled stages).
     val Seq(comparable, ties, cross, within) =
       collectCounts(Seq(comparableDf, tiesDf, crossDf, withinDf))
-    if (ownX) { x.unpersist(); () }
 
     val concordant = cross + within + 0.5 * ties
     Seq((comparable, concordant, concordant / comparable.toDouble))
@@ -341,15 +339,15 @@ object ScalableConcordance {
     // (RangePartitioner's sampling job, then the shuffle write) — pin
     // it across pass 1 so the groupBy aggregation runs once, release as
     // soon as the sorted rows RDD below is materialized.
-    val (cellsP, ownCells) = graft.core.Caches.acquire(cells
+    val (cellsP, releaseCells) = graft.core.Pins.held(graft.core.Pins.pin(cells
       .select((keyCols.map(col) :+ col("t").cast("double").as("t") :+
-        col("m").cast("long").as("m") :+ col("ev").cast("long").as("ev")): _*))
+        col("m").cast("long").as("m") :+ col("ev").cast("long").as("ev")): _*)))
     val g = cellsP
       .repartitionByRange(sortExprs: _*)
       .sortWithinPartitions(sortExprs: _*)
     // RDD-level persist shared by object across both passes (same
     // contract as KaplanMeier.curveExpr: one sampled partitioning;
-    // Pins-scoped release, ContextCleaner as the unscoped fallback).
+    // released with the calling harrell/antolini scope).
     val rows = graft.core.Pins.pinRdd(g.rdd)
     def keyOf(r: Row): Seq[Any] = Seq.tabulate(k)(r.get)
 
@@ -374,7 +372,7 @@ object ScalableConcordance {
       }
     }.collect().sortBy(_._1)
     // pass 1 materialized `rows`; the unsorted cell cache is done
-    if (ownCells) { cellsP.unpersist(blocking = false); () }
+    releaseCells()
 
     // Driver scan, ascending partitions: a key's run spans consecutive
     // partitions, so carry-in for p's leading run = the accumulated sum

@@ -4,7 +4,6 @@ import graft.core.Attach.AttachOps
 import graft.surv.SurvDataset
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Neural Cox proportional hazards — the DeepSurv flavor the
   * reference actually ships (reference: src/elastic_surv/models/
@@ -93,7 +92,7 @@ final case class CoxMlp(
 
       val muA = array(mu0.map(lit(_)): _*)
       val sdA = array(sd0.map(lit(_)): _*)
-      val (tr, ownTr) = graft.core.Caches.acquire(raw
+      val tr = graft.core.Pins.pin(raw
         .select(col("rn"),
           zip_with(zip_with(col("x"), muA, (v, m) => v - m), sdA,
             (v, s) => v / s).as("x"),
@@ -101,7 +100,7 @@ final case class CoxMlp(
         .sortWithinPartitions("rn")
         .as[(Long, Array[Double], Double, Int)])
       tr.count()
-      ((tr, mu0, sd0), () => if (ownTr) { tr.unpersist(); () })
+      (tr, mu0, sd0)
     }
 
     val stack = new MlpStack(p, hidden,
@@ -128,9 +127,9 @@ final case class CoxMlp(
     val trDf = ds.tensorized(ds.train)
       .select(col("t").cast("double").as("t"), col("e").cast("int").as("e"),
         transform(col("x"), _.cast("double")).as("x"))
-    val baseline = CoxPH.breslow(trDf, fitted0.riskScore(col("x")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    fitted0.copy(baseline = baseline)
+    val (baseline, releaseBaseline) = graft.core.Pins.held(
+      graft.core.Pins.pin(CoxPH.breslow(trDf, fitted0.riskScore(col("x")))))
+    fitted0.copy(baseline = baseline, releaseBaseline = releaseBaseline)
   }
 }
 
@@ -280,7 +279,8 @@ final case class FittedCoxMlp(
     layers: Seq[(Array[Array[Double]], Array[Double])],
     mu: Array[Double],
     sd: Array[Double],
-    baseline: DataFrame) extends CoxSurvPredict {
+    baseline: DataFrame,
+    releaseBaseline: () => Unit = () => ()) extends CoxSurvPredict {
 
   protected def scoreStd(xstd: Column): Column =
     CoxPH.scoreCol(MlpStack.stackCol(xstd, layers), w)

@@ -6,7 +6,6 @@ import breeze.optimize.{DiffFunction, LBFGS}
 import graft.surv.SurvDataset
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Linear Cox proportional hazards — the engine's re-expression of
   * the reference's CoxPH adaptor (reference: src/elastic_surv/models/
@@ -78,8 +77,7 @@ final case class CoxPH(
       val xstd = zip_with(
         zip_with(col("x"), array(mu0.map(lit(_)): _*), (v, m) => v - m),
         array(sd0.map(lit(_)): _*), (v, s) => v / s)
-      val (tr, ownTr) = graft.core.Caches.acquire(
-        raw.select(col("t"), col("e"), xstd.as("x")))
+      val tr = graft.core.Pins.pin(raw.select(col("t"), col("e"), xstd.as("x")))
       tr.count() // materialize once
 
       // ONE shuffle for the whole optimization: rows range-partitioned
@@ -94,17 +92,12 @@ final case class CoxPH(
       // become prefix carries in partition order, exactly like
       // [[CoxPH.breslow]].
       // width: session-default map side, AQE advisory-size coalescing
-      val sorted = tr
+      val sorted = graft.core.Pins.pinRdd(tr
         .repartitionByRange(col("t").desc)
         .sortWithinPartitions(col("t").desc)
-        .rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        .rdd)
       sorted.count()
-      ((tr, sorted, mu0, sd0),
-        () => {
-          sorted.unpersist(blocking = false)
-          if (ownTr) tr.unpersist()
-          ()
-        })
+      (tr, sorted, mu0, sd0)
     }
     val session = train.sparkSession
 
@@ -124,13 +117,17 @@ final case class CoxPH(
     // ---- Breslow baseline on the FULL train split at final β ----
     // (deviation from the reference's last-batch artifact, SURVEY §4.2.1)
     // Kept DISTRIBUTED (one row per distinct event time): materialized
-    // via persist so the train cache can be released, never collected.
-    val baseline = CoxPH.breslow(train, CoxPH.scoreCol(col("x"), beta.toArray))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    baseline.count()
+    // via a pin so the train cache can be released, never collected.
+    // The fitted model holds the pin until its release().
+    val (baseline, releaseBaseline) = graft.core.Pins.held {
+      val b = graft.core.Pins.pin(
+        CoxPH.breslow(train, CoxPH.scoreCol(col("x"), beta.toArray)))
+      b.count()
+      b
+    }
 
     releasePrep()
-    FittedCoxPH(this, beta.toArray, mu, sd, baseline)
+    FittedCoxPH(this, beta.toArray, mu, sd, baseline, releaseBaseline)
   }
 
   /** Exact partial log-likelihood + gradient over the pinned
@@ -394,12 +391,15 @@ trait CoxSurvPredict extends FittedSurvModel {
   /** Risk score in the STANDARDIZED feature space. */
   protected def scoreStd(xstd: Column): Column
 
-  /** Unpin the persisted Breslow baseline (it recomputes if used
-    * again). Discarded fits (Hyperband losers) must call this. Null
-    * guard: the pre-baseline fitted0 stage of the neural fit.
+  /** Releases the pinned Breslow baseline (it recomputes if used
+    * again); a no-op for a model built without a fit.
     */
-  override def release(): Unit =
-    if (baseline != null) { baseline.unpersist(); () }
+  def releaseBaseline: () => Unit
+
+  /** Unpin the persisted Breslow baseline (it recomputes if used
+    * again). Discarded fits (Hyperband losers) must call this.
+    */
+  override def release(): Unit = releaseBaseline()
 
   /** Risk score on the ORIGINAL feature space — pure column algebra. */
   final def riskScore(x: Column): Column = {
@@ -431,7 +431,8 @@ final case class FittedCoxPH(
     beta: Array[Double],
     mu: Array[Double],
     sd: Array[Double],
-    baseline: DataFrame) extends CoxSurvPredict {
+    baseline: DataFrame,
+    releaseBaseline: () => Unit = () => ()) extends CoxSurvPredict {
 
   protected def scoreStd(xstd: Column): Column = CoxPH.scoreCol(xstd, beta)
 }

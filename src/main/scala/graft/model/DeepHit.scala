@@ -3,7 +3,6 @@ package graft.model
 import graft.surv.{DurationCuts, SurvDataset}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** DeepHit, single risk (reference: src/elastic_surv/models/
   * model_deephit.py). The reference trains a pycox DeepHitSingle net
@@ -65,14 +64,14 @@ final case class DeepHit(
     val ((train, cuts, nRows), releasePrep) = TrainCache.acquire(
       TrainCache.key("discrete_ti", ds, s"$numDurations")) {
       val cts = DurationCuts.fit(ds.train, ds.timeCol, numDurations)
-      val (tr, ownTr) = graft.core.Caches.acquire(ds.tensorized(ds.train)
+      val tr = graft.core.Pins.pin(ds.tensorized(ds.train)
         .select(col("rn"),
           transform(col("x"), _.cast("double")).as("x"),
           cts.indexCol(col("t")).as("ti"), col("e"))
         .sortWithinPartitions("rn")
         .as[(Long, Array[Double], Int, Int)])
       val n0 = tr.count()
-      ((tr, cts, n0), () => if (ownTr) { tr.unpersist(); () })
+      (tr, cts, n0)
     }
     val k = cuts.k
     val n = nRows.toDouble

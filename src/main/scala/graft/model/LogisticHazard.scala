@@ -111,14 +111,14 @@ final case class LogisticHazardMlp(
     val ((train, cuts, _), releasePrep) = TrainCache.acquire(
       TrainCache.key("discrete_ti", ds, s"$numDurations")) {
       val cts = DurationCuts.fit(ds.train, ds.timeCol, numDurations)
-      val (tr, ownTr) = graft.core.Caches.acquire(ds.tensorized(ds.train)
+      val tr = graft.core.Pins.pin(ds.tensorized(ds.train)
         .select(col("rn"),
           transform(col("x"), _.cast("double")).as("x"),
           cts.indexCol(col("t")).as("ti"), col("e"))
         .sortWithinPartitions("rn")
         .as[(Long, Array[Double], Int, Int)])
       val n0 = tr.count()
-      ((tr, cts, n0), () => if (ownTr) { tr.unpersist(); () })
+      (tr, cts, n0)
     }
     val k = cuts.k
 

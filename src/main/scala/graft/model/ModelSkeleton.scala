@@ -39,28 +39,23 @@ trait FittedSurvModel {
     * the 100-point grid), mirroring base.py:61-82. No collect until
     * the two final scalars.
     */
-  def score(ds: SurvDataset): Map[String, Double] = {
-    // ownership-aware persists: concurrent Hyperband configs score
-    // against the SAME canonical tensorized-test plan — a raw persist
-    // pair would no-op the second and the first finally-unpersist
-    // would drop the cache out from under the sibling (Caches scaladoc)
-    val (test, ownT) = graft.core.Caches.acquire(
+  def score(ds: SurvDataset): Map[String, Double] = graft.core.Pins.scoped {
+    // concurrent Hyperband configs score against the SAME canonical
+    // tensorized-test plan: each scope holds one reference on the one
+    // cache, which goes when the last of them finishes
+    val test = graft.core.Pins.pin(
       ds.tensorized(ds.test).withColumnRenamed("rn", "id"))
-    try {
-      val grid = BrierScore.defaultGrid(test, "t")
-      val (surv, ownS) = graft.core.Caches.acquire(predictSurv(test, grid))
-      try {
-        // concordance_td via the counting aggregator (O(n·|grid|)), not
-        // the quadratic pair join — identical value (q_cindex_td vs
-        // q_cindex_td_sorted hash-match), but survives a 100× test set.
-        val c = graft.eval.ScalableConcordance
-          .antolini(test, "id", "t", "e", surv, grid)
-          .head().getAs[Double]("cindex")
-        val ibs = BrierScore
-          .integrated(BrierScore.grid(test, "id", "t", "e", surv, grid))
-          .head().getAs[Double]("ibs")
-        Map("c_index" -> c, "brier_score" -> ibs)
-      } finally if (ownS) { surv.unpersist(); () }
-    } finally if (ownT) { test.unpersist(); () }
+    val grid = BrierScore.defaultGrid(test, "t")
+    val surv = graft.core.Pins.pin(predictSurv(test, grid))
+    // concordance_td via the counting aggregator (O(n·|grid|)), not
+    // the quadratic pair join — identical value (q_cindex_td vs
+    // q_cindex_td_sorted hash-match), but survives a 100× test set.
+    val c = graft.eval.ScalableConcordance
+      .antolini(test, "id", "t", "e", surv, grid)
+      .head().getAs[Double]("cindex")
+    val ibs = BrierScore
+      .integrated(BrierScore.grid(test, "id", "t", "e", surv, grid))
+      .head().getAs[Double]("ibs")
+    Map("c_index" -> c, "brier_score" -> ibs)
   }
 }

@@ -22,11 +22,10 @@ import java.util.concurrent.ConcurrentHashMap
   * configs (any rung, any thread) reuse; the scope releases every
   * entry on exit.
   *
-  * The build's persists MUST be raw `.persist` (never [[graft.core
-  * .Pins.pin]]): a shared entry is built on some config's evaluation
-  * thread inside that config's cache scope, and a scoped pin would be
-  * released when THAT config finishes while other configs still read
-  * the entry.
+  * The build runs in its own [[graft.core.Pins.held]] scope, so its
+  * pins belong to the entry, not to the config whose evaluation thread
+  * happened to build it: that config's scope can end while other
+  * configs still read the entry.
   */
 object TrainCache {
 
@@ -44,7 +43,7 @@ object TrainCache {
   @volatile private var owner: Thread = null
 
   /** Activate sharing for the duration of `f`; releases every cached
-    * entry (their persisted Datasets/RDDs) on exit. Same-thread
+    * entry (its pins) on exit. Same-thread
     * nesting restores the outer memo; a concurrent scope from another
     * thread throws (see the memo field comment).
     */
@@ -69,21 +68,18 @@ object TrainCache {
     }
   }
 
-  /** Build-or-reuse a config-independent prep. `build` returns the
-    * value and an OWNERSHIP-AWARE release callback. Returns the value
-    * plus the release the caller must invoke when done: outside a
-    * sharing scope that is the build's own callback (which already
-    * folds in Caches.acquire ownership — returning a bare `owned`
-    * boolean here once made callers unpersist plans a CONCURRENT
-    * standalone fit owned, un-caching it mid-training); inside a
-    * scope it is a no-op, the scope releases at exit.
+  /** Build-or-reuse a config-independent prep. `build` runs in a
+    * fresh [[graft.core.Pins.held]] scope; returns its value plus the
+    * release the caller must invoke when done: outside a sharing scope
+    * that drops the build's own pins, inside one it is a no-op and the
+    * sharing scope releases at exit.
     */
-  def acquire[A](key: String)(build: => (A, () => Unit)): (A, () => Unit) = {
+  def acquire[A](key: String)(build: => A): (A, () => Unit) = {
     val m = memo
-    if (m == null) build
+    if (m == null) graft.core.Pins.held(build)
     else {
       val e = m.computeIfAbsent(key, _ => {
-        val (a, release) = build
+        val (a, release) = graft.core.Pins.held(build)
         Entry(a, release)
       })
       (e.value.asInstanceOf[A], () => ())

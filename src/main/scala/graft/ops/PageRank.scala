@@ -277,8 +277,8 @@ object PageRank {
     // ranks checkpoint is self-contained, so it goes too
     graft.core.Pins.releaseCheckpoint(nodes)
     // the final ranks checkpoint backs the returned frame — registered
-    // with the caller's pin scope (released at scope exit, matching
-    // CacheScope's RDD-diff fallback; consume the result in the scope)
+    // with the caller's pin scope (released at scope exit; consume the
+    // result in the scope)
     graft.core.Pins.pinCheckpoint(ranks)
     // back to the caller's session (and its shuffle width): the rows
     // come straight off the final round's checkpoint blocks

@@ -115,7 +115,8 @@ object QualityChecks {
     * aggregate over one table (uniqueness/completeness/accepted/
     * range) — referential stays a keyed anti-join.
     */
-  def fused(df: DataFrame, named: Seq[(String, Column)]): CheckFn =
+  def fused(df: DataFrame, named: Seq[(String, Column)]): CheckFn = {
+    require(named.nonEmpty, "QualityChecks.fused: no checks to fuse")
     () => {
       val wide = df.agg(
         named.head._2.cast("long").as(named.head._1),
@@ -125,6 +126,7 @@ object QualityChecks {
       }: _*)).as("kv"))
         .select(col("kv.check_name"), col("kv.violations"))
     }
+  }
 
   /** child keys with no parent — a keyed LEFT ANTI join count (the
     * optimizer broadcasts when the parent side is small).

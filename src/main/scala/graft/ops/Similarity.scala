@@ -162,7 +162,7 @@ object Similarity {
           // round 0 reads the lazy init table — pinned, because the
           // round consumes it on BOTH the candidate fold and the
           // empty-cell fallback join (scoped release by the caller's
-          // CacheScope, like every operator pin); iters ≤ 1 therefore
+          // Pins scope, like every operator pin); iters ≤ 1 therefore
           // stays fully lazy end to end
           graft.core.Pins.pin(fine)
         else {
@@ -188,10 +188,9 @@ object Similarity {
     // the FINAL round stays a live dataflow over the last checkpoint
     // (spec-pinned: fallback join + in-plan argmin visible in the
     // analyzed plan); that last checkpoint is registered with the
-    // caller's pin scope so bare Pins.scoped callers release it at
-    // scope exit exactly like CacheScope's RDD-diff fallback does —
-    // consume the returned frame inside the scope (the documented
-    // contract for every operator pin)
+    // caller's pin scope, released at scope exit — consume the
+    // returned frame inside the scope (the documented contract for
+    // every operator pin)
     prevCkpt.foreach(graft.core.Pins.pinCheckpoint)
     fine
   }

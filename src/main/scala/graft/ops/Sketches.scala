@@ -240,10 +240,13 @@ object Sketches {
     *
     * NULL inputs are dropped first (the built-in skips them); an
     * empty/all-null input yields the built-in's NULL row. Returns ONE
-    * row: (n, _p0, _p1, ...).
+    * row: (n, _p0, _p1, ...), where n is the NON-NULL count of `vCol`.
+    * Every percentile must lie in [0, 1], as the built-in requires.
     */
   def exactPercentiles(df: DataFrame, vCol: String,
                        percs: Seq[Double]): DataFrame = {
+    percs.foreach(p => require(p >= 0.0 && p <= 1.0,
+      s"exactPercentiles: percentile $p is outside [0, 1]"))
     val (rnDf, n) = graft.core.StableOrder.withRowNumber(
       df.filter(col(vCol).isNotNull).select(col(vCol).as("_v")),
       Seq(col("_v")))

@@ -63,7 +63,10 @@ object SketchQueries {
     // quantile sketch: exact percentiles of a deterministic 256-row
     // k-min hash sample vs the exact population quantiles — the
     // bounded-state path to "approximate percentiles over 100 TB"
-    // (the sample merges like KMV: union, keep k smallest hashes)
+    // (the sample merges like KMV: union, keep k smallest hashes).
+    // Columns: n is the NON-NULL count of l_extendedprice (the values
+    // the exact percentiles rank), then each percentile's estimate
+    // beside its exact value.
     "q_sketch_quantiles" -> ((s, dir) => {
       val kv = Tables.load(s, dir, "lineitem")
         .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("k"),

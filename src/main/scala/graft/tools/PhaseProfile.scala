@@ -43,7 +43,6 @@ object PhaseProfile {
     catch { case e: Throwable => System.err.println(s"[phase] setup: $e") }
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_PHASE_RUNS", "4").toInt
     args.drop(1).foreach { q =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
       graft.core.Pins.scoped {
         (0 until nRuns).foreach { i =>
           val j0 = jc.jobs.get(); val s0 = jc.stages.get()
@@ -67,9 +66,6 @@ object PhaseProfile {
             s"jobs=${jc.jobs.get() - j0} stages=${jc.stages.get() - s0}")
         }
       }
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = true))
     }
     spark.stop()
   }

@@ -55,7 +55,6 @@ object TimeQ {
     try graft.surv.ChurnView.dataset(spark, args(0))
     catch { case e: Throwable => System.err.println(s"[timeq] setup: $e") }
     args.drop(1).foreach { q =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
       var runIdx = 0
       def once(): Double = {
         // listener dispatch is ASYNC even in local mode — drain the bus
@@ -115,9 +114,6 @@ object TimeQ {
           val c0 = once()
           (c0, Seq.fill(nRuns - 1)(once()).min)
         }
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = true))
       println(f"TIMEQ $q cold=$c%.2f warm=$w%.2f")
     }
     spark.stop()

@@ -78,10 +78,14 @@ class PlanLintSpec extends AnyFunSuite {
     // same session prep as graft.Verify: the shared churn dataset's
     // pins predate the per-query cache scopes
     graft.surv.ChurnView.dataset(spark, dir)
+    val sc = spark.sparkContext
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
     var ran = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      graft.core.CacheScope(spark) {
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val plansBefore = org.apache.spark.sql.graft.CacheProbe.cachedPlans(spark)
+      graft.core.Pins.scoped {
         try {
           val df = fn(spark, dir)
           df.collect() // materialize: AQE decisions are final only now
@@ -102,10 +106,19 @@ class PlanLintSpec extends AnyFunSuite {
             failures += s"$name: failed to execute: ${e.getMessage}"
         }
       }
+      // every cache a query takes goes through Pins, so the bare scope
+      // releases all of it: nothing may survive as a persisted RDD or
+      // as a CacheManager entry
+      val rdds = (sc.getPersistentRDDs.keySet -- rddsBefore).size
+      val plans = org.apache.spark.sql.graft.CacheProbe.cachedPlans(spark) - plansBefore
+      if (rdds != 0 || plans != 0)
+        leaks += s"$name: $rdds persisted RDDs, $plans cached plans"
     }
     assert(ran == SparkEntry.queries.size,
       s"only $ran of ${SparkEntry.queries.size} queries executed")
     assert(failures.isEmpty,
       s"${failures.size} plan-lint failures:\n${failures.distinct.mkString("\n")}")
+    assert(leaks.isEmpty,
+      s"${leaks.size} queries left caches behind:\n${leaks.mkString("\n")}")
   }
 }

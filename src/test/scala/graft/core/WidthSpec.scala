@@ -33,4 +33,15 @@ class WidthSpec extends AnyFunSuite {
     // a corpus-scale count always binds at the cap
     assert(Width.explodeRows(spark, Long.MaxValue / 2, 75000L) === cap)
   }
+
+  test("SPARK_GRAFT_EXPLODE_WIDTH: a positive integer replaces the " +
+      "derived width without computing it; anything else names the knob") {
+    assert(Width.fixedOr(Some("6"))(fail("derived width computed")) === 6)
+    assert(Width.fixedOr(Some(" 3 "))(fail("derived width computed")) === 3)
+    assert(Width.fixedOr(None)(5) === 5)
+    for (bad <- Seq("0", "-2", "wide", "", "2.5")) {
+      val e = intercept[IllegalArgumentException](Width.fixedOr(Some(bad))(5))
+      assert(e.getMessage.contains("SPARK_GRAFT_EXPLODE_WIDTH"), e.getMessage)
+    }
+  }
 }

@@ -306,8 +306,8 @@ class OpsSpec extends AnyFunSuite {
     // rolling rotation: superseded inter-round checkpoints are released
     // as soon as their successor materializes; the scoped init pin AND
     // the two final-round input checkpoints (registered via
-    // Pins.pinCheckpoint) are swept at scope exit — bare Pins.scoped
-    // callers now match CacheScope semantics exactly: ZERO leaked RDDs
+    // Pins.pinCheckpoint) are released at scope exit — bare
+    // Pins.scoped callers leave ZERO leaked RDDs
     val leaked = (sc.getPersistentRDDs.keySet -- before).size
     assert(leaked == 0, s"expected 0 live RDDs after 2+6 rounds, got $leaked")
   }

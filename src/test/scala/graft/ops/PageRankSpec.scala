@@ -70,7 +70,7 @@ class PageRankSpec extends AnyFunSuite {
     // After rotation, only the returned ranks checkpoint and the
     // scoped edge-table pin survive the RUN; both are scope-registered
     // (Pins.pin / Pins.pinCheckpoint), so the SCOPE releases
-    // everything — bare Pins.scoped now matches CacheScope semantics.
+    // everything.
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val during = graft.core.Pins.scoped {

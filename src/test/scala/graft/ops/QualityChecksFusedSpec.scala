@@ -42,4 +42,12 @@ class QualityChecksFusedSpec extends AnyFunSuite {
     assert(byName === Map("unique_k" -> 1L, "accepted_status" -> 1L,
       "range_disc" -> 2L, "complete_k" -> 1L))
   }
+
+  test("fusing no checks fails when the check is built") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException] {
+      QualityChecks.fused(Seq(1L).toDF("k"), Nil)
+    }
+    assert(e.getMessage.contains("no checks to fuse"))
+  }
 }

@@ -59,4 +59,15 @@ class SketchQuantileSpec extends AnyFunSuite {
     // on a row, no interpolation
     check((1 to 101).map(i => Some(i.toDouble)), 3)
   }
+
+  test("a percentile outside [0, 1] is rejected, naming the value") {
+    import spark.implicits._
+    val df = Seq(1.0, 2.0, 3.0).toDF("v")
+    for (bad <- Seq(-0.1, 1.5, Double.NaN)) {
+      val e = intercept[IllegalArgumentException] {
+        Sketches.exactPercentiles(df, "v", Seq(0.5, bad))
+      }
+      assert(e.getMessage.contains(s"percentile $bad is outside [0, 1]"))
+    }
+  }
 }
