@@ -225,8 +225,10 @@ final class Hyperband(
     * evaluated config leaks persisted blocks for the session. release()
     * drops the fitted model's own pins (the Breslow baseline); the
     * surrounding Pins scope releases whatever else the config pinned.
-    * TrainCache entries are held by their own scope, not the config's:
-    * they outlive the config and are released when the search ends.
+    * TrainCache entries — each family's training prep and the test
+    * split's scoring facts, which every config's score reads — are held
+    * by their own scope, not the config's: they outlive the config and
+    * are released when the search ends.
     */
   private def evalParams(m: ModelFactory, ds: SurvDataset,
                          params: Map[String, Any], epochs: Int): Double = {
@@ -298,8 +300,9 @@ final class Hyperband(
   /** Runs the search and returns the winner re-fit with
     * `outputEpochs` (H5). The whole search runs under one
     * [[graft.model.TrainCache]] sharing scope: each model family's
-    * config-independent prep (tensorize + encode + persist) is built
-    * once and reused by every config and rung, then released.
+    * config-independent prep (tensorize + encode + persist) and the
+    * test split's scoring facts are built once and reused by every
+    * config and rung, then released.
     */
   def selectModel(ds: SurvDataset): FittedSurvModel = graft.model.TrainCache.sharing {
     if (async) runAsha(ds) else runSync(ds)

@@ -1,6 +1,6 @@
 package graft.eval
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** IPCW (integrated) Brier score over a time grid — the Spark design
@@ -17,64 +17,48 @@ import org.apache.spark.sql.functions._
   *   otherwise 0        (and 0 whenever the G weight is 0)
   * BS(τ) = Σ contrib / N.
   *
-  * Scale shape: the censoring KM reduces to |distinct test t| rows —
-  * at continuous-time scale that is ~n_test, far past broadcast
-  * range, so BOTH step lookups run through [[KaplanMeier.lookup]]'s
-  * distributed range-scan (no broadcast of the curve, no nested-loop
-  * join). G(τ) then attaches to the subject×grid long form by a
-  * 100-row broadcast hash join on τ, G(t_i⁻) by a keyed equi-join on
-  * the subject id, N by a scalar subquery; one final groupBy(τ).
+  * Scale shape: every test-only fact — the censoring KM, G(τ) on the
+  * grid, G(t_i⁻) per subject, N — comes from one [[ScoringSplit]];
+  * the KM lookups run through [[KaplanMeier.lookup]] (no broadcast of
+  * a continuous-time curve, no nested-loop join). The prediction
+  * matrix then needs one keyed equi-join to the subject table; G(τ)
+  * and the grid index attach as literal-array lookups on τ, and N
+  * divides in as a literal. One final groupBy(τ).
   */
 object BrierScore {
 
-  /** Per-τ Brier scores: (tau, bs).
+  /** Per-τ Brier scores: (tau_idx, tau, bs), computed here and handed
+    * back as a local frame (≤ |grid| rows).
     * `df`: (idCol, tCol, eCol); `surv`: long form (idCol, tau, s)
     * evaluated at exactly the grid times.
     */
   def grid(df: DataFrame, idCol: String, tCol: String, eCol: String,
-           surv: DataFrame, gridTimes: Array[Double]): DataFrame = {
-    val spark = df.sparkSession
-    // N as a 1-row broadcast branch of the same job — not a separate
-    // driver action (cast to double here = the exact n.toDouble the
-    // former scalar division used)
-    val nDf = df.agg(count(lit(1)).cast("double").as("_n"))
-    val cens = KaplanMeier.censoringCurve(df, tCol, eCol)
+           surv: DataFrame, gridTimes: Array[Double]): DataFrame = graft.core.Pins.scoped {
+    val split = ScoringSplit.build(df, idCol, tCol, eCol, gridTimes)
+    val bs = perTau(split, split.attach(surv, idCol))
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(bs.collect(): _*), bs.schema)
+  }
 
-    // duplicate grid values would each join every surv row at that tau
-    // and inflate bs by the multiplicity — a degenerate [t_min, t_max]
-    // span (all linspace points equal, or step < ulp) must fail loudly,
-    // not silently double-count
-    require(gridTimes.distinct.length == gridTimes.length,
-      s"grid contains duplicate time points (degenerate range? " +
-        s"${gridTimes.take(3).mkString(",")}...)")
-    import spark.implicits._
-    val g = gridTimes.zipWithIndex.map(_.swap).toSeq.toDF("tau_idx", "tau")
-
-    // G(τ) per grid point (100 rows, driver-free broadcast lookup)
-    val gAtTau = KaplanMeier.lookup(g, "tau", cens, strict = false, "g_tau")
-    // G(t_i⁻) per subject
-    val base = df.select(col(idCol).as("id"), col(tCol).cast("double").as("t"),
-      col(eCol).cast("int").as("e"))
-    val gAtTi = KaplanMeier.lookup(base, "t", cens, strict = true, "g_ti")
-
-    // surv is already the subject×grid long form, so no cross join is
-    // needed anywhere: G(τ) attaches by a broadcast HASH join on the
-    // grid time and G(t_i⁻) by a keyed equi-join on the subject id.
-    val joined = surv.select(col(idCol).as("id"), col("tau"), col("s"))
-      .join(broadcast(gAtTau), Seq("tau"))
-      .join(gAtTi, Seq("id"))
-
+  /** Per-τ Brier scores (tau_idx, tau, bs), lazy, over `x` — the
+    * split's [[ScoringSplit.attach]] join of a prediction matrix.
+    */
+  private[eval] def perTau(split: ScoringSplit, x: DataFrame): DataFrame = {
+    // τ's 1-based grid position (0 = not a grid time: dropped, as the
+    // former equi-join on the grid dropped it)
+    val pos = array_position(array(split.grid.map(lit(_)): _*), col("tau")).cast("int")
     val contrib =
       when(col("t") <= col("tau") && col("e") === 1 && col("g_ti") > 0.0,
         col("s") * col("s") / col("g_ti"))
       .when(col("t") > col("tau") && col("g_tau") > 0.0,
         (lit(1.0) - col("s")) * (lit(1.0) - col("s")) / col("g_tau"))
       .otherwise(0.0)
-
-    // N divides in as a scalar subquery (1-row, 1-col — no join)
-    joined.groupBy(col("tau_idx"), col("tau"))
+    x.withColumn("_pos", pos)
+      .filter(col("_pos") > 0)
+      .withColumn("tau_idx", col("_pos") - 1)
+      .withColumn("g_tau", element_at(array(split.gAtTau.map(lit(_)): _*), col("_pos")))
+      .groupBy(col("tau_idx"), col("tau"))
       .agg(sum(contrib).as("_c"))
-      .select(col("tau_idx"), col("tau"), (col("_c") / nDf.scalar()).as("bs"))
+      .select(col("tau_idx"), col("tau"), (col("_c") / lit(split.n.toDouble)).as("bs"))
   }
 
   /** Trapezoid-integrated Brier score normalized by grid span —

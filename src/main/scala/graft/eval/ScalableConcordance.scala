@@ -33,8 +33,10 @@ import org.apache.spark.sql.functions._
   * one lazy plan ([[evAfterKeyedDf]]); the one genuinely GLOBAL suffix
   * (harrell's comparable) uses the [[KaplanMeier.curveExpr]]-style
   * distributed range scan with driver carries ([[evAfterDf]]) over the
-  * small grouped distinct-time table. The final reduction of all four
-  * counts is still ONE job.
+  * small grouped distinct-time table. Each count branch ends in one
+  * partial per partition, and all four come back in ONE collect that
+  * the driver sums ([[collectScalars]]) — no final single-partition
+  * aggregation stage per branch.
   */
 object ScalableConcordance {
 
@@ -110,7 +112,8 @@ object ScalableConcordance {
     val crossDf = evTB
       .join(grid.select(col("t"), (col("b") + 1).as("b"), col("g")),
         Seq("t", "b"), "left")
-      .agg(coalesce(sum(col("ev") * coalesce(col("g"), lit(0L))), lit(0L)).as("v"))
+      .select((col("ev") * coalesce(col("g"), lit(0L))).as("v"))
+      .transform(partitionSums)
 
     // ---- within-bucket: exact local Fenwick sweep per bucket ----
     val withinDf = sb.select(col("t"), col("e"), col("r"), col("b"))
@@ -122,16 +125,14 @@ object ScalableConcordance {
           total += countWithin(rows.map(x => (x._1, x._2, x._3)))
         }
         Iterator.single(total)
-      }.toDF("v").agg(coalesce(sum(col("v")), lit(0L)).as("v"))
+      }.toDF("v")
 
     // ONE action for all four counts: the branches are independent, so
     // Spark schedules their stages concurrently instead of paying four
     // sequential job round-trips over the same cached base.
-    val Seq(comparable, ties, cross, within) =
-      collectCounts(Seq(comparableDf, tiesDf, crossDf, withinDf))
-
-    val concordant = cross + within + 0.5 * ties
-    Seq((comparable, concordant, concordant / comparable.toDouble))
+    val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
+      collectScalars(Seq(comparableDf, tiesDf, crossDf, withinDf))
+    Seq(concordance(comparable, ties, cross, within))
       .toDF("comparable", "concordant", "cindex")
   }
 
@@ -154,37 +155,40 @@ object ScalableConcordance {
     * a monotone map, so the counts are exact regardless of balance;
     * B and spark.sql.shuffle.partitions bound per-task memory of the
     * within-bucket sweep.
+    *
+    * τ(t_i) and the active τ set come from the split's
+    * [[ScoringSplit]] — the same value `FittedSurvModel.score` reads,
+    * which also takes the integrated Brier score from the same collect.
     */
   def antolini(df: DataFrame, idCol: String, tCol: String, eCol: String,
                surv: DataFrame, grid: Array[Double],
                numBuckets: Int = 16): DataFrame = graft.core.Pins.scoped {
+    val split = ScoringSplit.build(df, idCol, tCol, eCol, grid)
+    val x = ScoringSplit.materialized(split.attach(surv, idCol))
+    val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
+      collectScalars(antoliniCounts(split, x, numBuckets))
     val spark = df.sparkSession
     import spark.implicits._
+    Seq(concordance(comparable, ties, cross, within))
+      .toDF("comparable", "concordant", "cindex")
+  }
 
-    // Step lookup τ(t): THE shared Concordance.tauStep definition, so
-    // the two antolini implementations agree on which events are
-    // scoreable by construction.
-    val tauStep = Concordance.tauStep(grid, col("t"))
-    val base = df.select(col(idCol).as("k"), col(tCol).cast("double").as("t"),
-        col(eCol).cast("int").as("e"))
-      .withColumn("tau_i", tauStep)
-
-    val activeTau = base.filter(col("e") === 1 && col("tau_i").isNotNull)
-      .select(col("tau_i").as("tau")).distinct()
+  /** Antolini's comparable / ties / cross / within counts as four
+    * branches of per-partition partials ("v") for the caller's single
+    * [[collectScalars]]. `joined` is [[ScoringSplit.attach]]'s join,
+    * cached by the caller.
+    */
+  private[eval] def antoliniCounts(split: ScoringSplit, joined: DataFrame,
+                                   numBuckets: Int): Seq[DataFrame] = {
+    val spark = joined.sparkSession
+    import spark.implicits._
 
     // One Harrell slice per active τ: every subject once, as risk
     // r = −s(τ|x); the event flag is LOCAL to the subject's own slice.
-    val x = graft.core.Pins.pin(
-      surv.select(col(idCol).as("k"), col("tau"), col("s"))
-        .join(broadcast(activeTau), Seq("tau"), "left_semi")
-        .join(base, Seq("k"))
-        .select(col("tau"), col("t"), negate(col("s").cast("double")).as("r"),
-          when(col("e") === 1 && col("tau_i") === col("tau"), 1)
-            .otherwise(0).as("ei")))
-
-    // Materialize the slice table once; the single counting job below
-    // then reads cache instead of racing to recompute it per branch.
-    x.count()
+    val x = joined.filter(col("tau").isin(split.activeTau.toIndexedSeq: _*))
+      .select(col("tau"), col("t"), negate(col("s").cast("double")).as("r"),
+        when(col("e") === 1 && col("tau_i") === col("tau"), 1)
+          .otherwise(0).as("ei"))
 
     // Suffix counts per τ (and per (τ, r) for ties) via the keyed
     // streaming scan — hash-partitioned on the key, sorted within, so
@@ -235,7 +239,8 @@ object ScalableConcordance {
     val crossDf = evTB
       .join(cells.select(col("tau"), col("t"), (col("b") + 1).as("b"), col("g")),
         Seq("tau", "t", "b"), "left")
-      .agg(coalesce(sum(col("ev") * coalesce(col("g"), lit(0L))), lit(0L)).as("v"))
+      .select((col("ev") * coalesce(col("g"), lit(0L))).as("v"))
+      .transform(partitionSums)
 
     val withinDf = xb.select(col("tau"), col("b"), col("t"), col("ei"), col("r"))
       .repartition(col("tau"), col("b"))
@@ -246,16 +251,20 @@ object ScalableConcordance {
           total += countWithin(rows.map(p => (p._3, p._4, p._5)))
         }
         Iterator.single(total)
-      }.toDF("v").agg(coalesce(sum(col("v")), lit(0L)).as("v"))
+      }.toDF("v")
 
-    // ONE action for comparable/ties/cross/within (branches independent
-    // over the cached slice table → concurrently scheduled stages).
-    val Seq(comparable, ties, cross, within) =
-      collectCounts(Seq(comparableDf, tiesDf, crossDf, withinDf))
+    // branches independent over the cached join → concurrently
+    // scheduled stages of the caller's one collect
+    Seq(comparableDf, tiesDf, crossDf, withinDf)
+  }
 
+  /** (comparable, concordant, cindex) from the four counts; ties
+    * score 0.5.
+    */
+  private[eval] def concordance(comparable: Long, ties: Long, cross: Long,
+                                within: Long): (Long, Double, Double) = {
     val concordant = cross + within + 0.5 * ties
-    Seq((comparable, concordant, concordant / comparable.toDouble))
-      .toDF("comparable", "concordant", "cindex")
+    (comparable, concordant, concordant / comparable.toDouble)
   }
 
   /** KEYED form of [[evAfterDf]] as one LAZY plan: hash-partition the
@@ -307,12 +316,12 @@ object ScalableConcordance {
         }
         Iterator.single(acc)
       }(org.apache.spark.sql.Encoders.scalaLong)
-      .toDF("v").agg(coalesce(sum(col("v")), lit(0L)).as("v"))
+      .toDF("v")
   }
 
   /** Σ_cells ev · #{rows in same-key cells with strictly larger t},
-    * as a 1-row DataFrame("v") the caller unions into its single
-    * counting job.
+    * as one partial ("v") per partition, which the caller unions into
+    * its single counting collect.
     *
     * `cells` must be (keyCols..., t, m, ev) with one row per distinct
     * (keys, t) — m subjects and ev events at that cell. Used with
@@ -404,19 +413,42 @@ object ScalableConcordance {
         pref += r.getLong(k + 1)
       }
       Iterator.single(acc)
-    }.toDF("v").agg(coalesce(sum(col("v")), lit(0L)).as("v"))
+    }.toDF("v")
   }
 
-  /** Collect N independent single-scalar aggregates in ONE job: tag
-    * each branch, union, collect, read back in branch order.
+  /** One long ("v") per partition of `df`: its sum. The partials of a
+    * count branch are added up by [[collectScalars]], so the branch
+    * needs no final single-partition aggregation stage.
     */
-  private def collectCounts(branches: Seq[DataFrame]): Seq[Long] = {
+  private def partitionSums(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("v").cast("long")).as[Long]
+      .mapPartitions(it => Iterator.single(it.sum)).toDF("v")
+  }
+
+  /** Collect N independent scalars in ONE job: tag each branch,
+    * union, collect, read back in branch order. A long branch ("v")
+    * may yield one partial per partition — its scalar is their exact
+    * sum; a double branch yields exactly one row. Longs and doubles
+    * ride separate columns, so no count is widened to a double.
+    */
+  private[eval] def collectScalars(branches: Seq[DataFrame]): Seq[Any] = {
+    val isLong = branches.map(_.schema("v").dataType == org.apache.spark.sql.types.LongType)
     val tagged = branches.zipWithIndex.map { case (b, i) =>
-      b.select(lit(i).as("k"), col("v"))
+      b.select(lit(i).as("k"),
+        (if (isLong(i)) col("v") else lit(null).cast("long")).as("l"),
+        (if (isLong(i)) lit(null).cast("double") else col("v").cast("double")).as("d"))
     }
-    val rows = tagged.reduce(_.unionAll(_)).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    branches.indices.map(rows)
+    val rows = tagged.reduce(_.unionAll(_)).collect().groupBy(_.getInt(0))
+    branches.indices.map { i =>
+      val rs = rows.getOrElse(i, Array.empty[Row])
+      if (isLong(i)) rs.map(_.getLong(1)).sum
+      else {
+        require(rs.length == 1, s"scalar branch $i returned ${rs.length} rows")
+        rs.head.getDouble(2)
+      }
+    }
   }
 
   /** Strict pairs {(i,j): e_i=1, t_j > t_i, r_j < r_i} in one bucket:

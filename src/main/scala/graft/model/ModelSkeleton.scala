@@ -1,9 +1,8 @@
 package graft.model
 
-import graft.eval.BrierScore
+import graft.eval.ScoringSplit
 import graft.surv.SurvDataset
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Model contract — the Spark shape of the reference's
   * `ModelSkeleton` ABC (reference: src/elastic_surv/models/base.py:
@@ -34,28 +33,24 @@ trait FittedSurvModel {
     */
   def predictSurv(tensorized: DataFrame, grid: Array[Double]): DataFrame
 
-  /** Scores on the test split as one distributed pipeline —
-    * c_index (Antolini concordance_td) and brier_score (IPCW IBS over
-    * the 100-point grid), mirroring base.py:61-82. No collect until
-    * the two final scalars.
+  /** Scores on the test split — c_index (Antolini concordance_td) and
+    * brier_score (IPCW IBS over the 100-point grid), mirroring
+    * base.py:61-82.
+    *
+    * The model-independent facts of the test split (tensorized rows,
+    * grid, censoring KM weights, N, active τ) are one
+    * [[graft.eval.ScoringSplit]] taken through [[TrainCache]]: inside a
+    * sharing scope (a Hyperband search) every config reuses the one
+    * the first config built; outside one it is built and released per
+    * call. The prediction matrix then joins the split's subject table
+    * once, and both scores come back from one collect.
     */
   def score(ds: SurvDataset): Map[String, Double] = graft.core.Pins.scoped {
-    // concurrent Hyperband configs score against the SAME canonical
-    // tensorized-test plan: each scope holds one reference on the one
-    // cache, which goes when the last of them finishes
-    val test = graft.core.Pins.pin(
-      ds.tensorized(ds.test).withColumnRenamed("rn", "id"))
-    val grid = BrierScore.defaultGrid(test, "t")
-    val surv = graft.core.Pins.pin(predictSurv(test, grid))
-    // concordance_td via the counting aggregator (O(n·|grid|)), not
-    // the quadratic pair join — identical value (q_cindex_td vs
-    // q_cindex_td_sorted hash-match), but survives a 100× test set.
-    val c = graft.eval.ScalableConcordance
-      .antolini(test, "id", "t", "e", surv, grid)
-      .head().getAs[Double]("cindex")
-    val ibs = BrierScore
-      .integrated(BrierScore.grid(test, "id", "t", "e", surv, grid))
-      .head().getAs[Double]("ibs")
-    Map("c_index" -> c, "brier_score" -> ibs)
+    val (split, release) = TrainCache.acquire(TrainCache.key("score_split", ds))(
+      ScoringSplit.of(ds))
+    try {
+      val (c, ibs) = split.score(predictSurv(split.test, split.grid))
+      Map("c_index" -> c, "brier_score" -> ibs)
+    } finally release()
   }
 }

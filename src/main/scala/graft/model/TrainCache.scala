@@ -2,7 +2,7 @@ package graft.model
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** Sharing of config-independent training prep across model fits.
+/** Sharing of config-independent prep across model fits and scores.
   *
   * Every trainer's `fit` starts with the same hyperparameter-FREE
   * prefix — tensorize the train split, fit the scaler / duration cuts,
@@ -11,13 +11,19 @@ import java.util.concurrent.ConcurrentHashMap
   * configs paid 27 identical tensorize+standardize jobs for at most 3
   * distinct results (one per model family). At 100 TB the prep is a
   * full pass over the train split, so the rebuild count — not the
-  * training math — dominates rung cost.
+  * training math — dominates rung cost. Scoring has the same shape:
+  * every config is scored on the same test split, and the split's
+  * scoring facts ([[graft.eval.ScoringSplit]]: tensorized test rows,
+  * grid, censoring-KM weights, N, active τ) do not depend on the
+  * config, so [[FittedSurvModel.score]] takes them through [[acquire]]
+  * too (key `score_split`).
   *
   * [[sharing]] activates a process-wide memo for the duration of a
   * search ([[graft.automl.Hyperband.selectModel]] wraps itself in it);
-  * trainers route their prefix through [[acquire]]. With no sharing
-  * active, `acquire` degenerates to running the build — single fits
-  * behave exactly as before, releasing their own prep at fit end.
+  * trainers route their prefix, and `score` its test-split facts,
+  * through [[acquire]]. With no sharing active, `acquire` degenerates
+  * to running the build — single fits and scores release their own
+  * prep when they end.
   * With sharing active, the first config of a family builds and later
   * configs (any rung, any thread) reuse; the scope releases every
   * entry on exit.
