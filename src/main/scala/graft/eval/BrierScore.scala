@@ -27,16 +27,15 @@ import org.apache.spark.sql.functions._
   */
 object BrierScore {
 
-  /** Per-τ Brier scores: (tau_idx, tau, bs), computed here and handed
-    * back as a local frame (≤ |grid| rows).
+  /** Per-τ Brier scores: (tau_idx, tau, bs), lazy.
     * `df`: (idCol, tCol, eCol); `surv`: long form (idCol, tau, s)
-    * evaluated at exactly the grid times.
+    * evaluated at exactly the grid times. The split's subject table is
+    * pinned in the calling scope, so consume the result inside it.
     */
   def grid(df: DataFrame, idCol: String, tCol: String, eCol: String,
-           surv: DataFrame, gridTimes: Array[Double]): DataFrame = graft.core.Pins.scoped {
+           surv: DataFrame, gridTimes: Array[Double]): DataFrame = {
     val split = ScoringSplit.build(df, idCol, tCol, eCol, gridTimes)
-    val bs = perTau(split, split.attach(surv, idCol))
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(bs.collect(): _*), bs.schema)
+    perTau(split, split.attach(surv, idCol))
   }
 
   /** Per-τ Brier scores (tau_idx, tau, bs), lazy, over `x` — the

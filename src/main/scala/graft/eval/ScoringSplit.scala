@@ -69,7 +69,7 @@ object ScoringSplit {
   }
 
   /** Builds the facts of the split `df` (idCol, tCol, eCol) over
-    * `grid`. Its pins go to the calling scope.
+    * `grid`. The subject table's pin goes to the calling scope.
     */
   def build(df: DataFrame, idCol: String, tCol: String, eCol: String,
             grid: Array[Double]): ScoringSplit = {
@@ -82,26 +82,32 @@ object ScoringSplit {
         s"${grid.take(3).mkString(",")}...)")
     val spark = df.sparkSession
     import spark.implicits._
-    val cens = KaplanMeier.censoringCurve(df, tCol, eCol)
-
-    // G(τ) per grid point, back in grid order (the lookup may reorder)
-    val gByTau = KaplanMeier.lookup(grid.toSeq.toDF("tau"), "tau", cens,
-        strict = false, "g")
-      .as[(Double, Double)].collect().toMap
-    val gAtTau = grid.map(gByTau)
 
     // τ(t_i) is THE shared Concordance.tauStep, so the two antolini
     // implementations agree on which events are scoreable
     val base = df.select(col(idCol).as("id"), col(tCol).cast("double").as("t"),
         col(eCol).cast("int").as("e"))
       .withColumn("tau_i", Concordance.tauStep(grid, col("t")))
-    val subjects = Pins.pin(
-      KaplanMeier.lookup(base, "t", cens, strict = true, "g_ti"))
+
+    // The censoring KM's and the lookups' own pins (the range-scan RDDs
+    // of a large curve) go to a nested scope: after the build only the
+    // pinned subject table is read, so they are dropped as soon as the
+    // facts job below has filled it.
+    val ((gAtTau, gAtTi), releaseKm) = Pins.held {
+      val cens = KaplanMeier.censoringCurve(df, tCol, eCol)
+      // G(τ) per grid point, back in grid order (the lookup may reorder)
+      val gByTau = KaplanMeier.lookup(grid.toSeq.toDF("tau"), "tau", cens,
+          strict = false, "g")
+        .as[(Double, Double)].collect().toMap
+      (grid.map(gByTau), KaplanMeier.lookup(base, "t", cens, strict = true, "g_ti"))
+    }
+    val subjects = Pins.pin(gAtTi)
 
     // one job: materializes the subject table, counts it, and collects
     // the active τ set (collect_set skips the non-event nulls)
-    val facts = subjects.agg(count(lit(1)),
+    val facts = try subjects.agg(count(lit(1)),
       collect_set(when(col("e") === 1, col("tau_i")))).head()
+    finally releaseKm()
     ScoringSplit(df, grid, gAtTau, subjects, facts.getLong(0),
       facts.getSeq[Double](1).sorted.toArray)
   }

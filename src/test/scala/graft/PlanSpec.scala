@@ -58,10 +58,16 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("Brier/IBS censoring lookup is not a broadcast nested loop") {
-    val q = SparkEntry.queries("q_ibs")(spark, dir)
-    val p = plan(q)
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"censoring lookup regressed to BNL in:\n$p")
+    // the query pins its subject table in this scope; the cached
+    // relation's build plan (censoring KM + lookups) prints with it
+    graft.core.Pins.scoped {
+      val q = SparkEntry.queries("q_ibs")(spark, dir)
+      val p = plan(q)
+      assert(p.contains("InMemoryRelation") && p.contains("Join"),
+        s"no subject join over the cached subject table in:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin"),
+        s"censoring lookup regressed to BNL in:\n$p")
+    }
   }
 
   test("deterministic hash sample stays a scan-stage predicate") {

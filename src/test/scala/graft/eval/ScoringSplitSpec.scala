@@ -147,6 +147,29 @@ class ScoringSplitSpec extends AnyFunSuite {
     assert(left == ((Set.empty[Int], 0)), s"left behind (persisted RDDs, cached plans): $left")
   }
 
+  test("a split over a large censoring curve keeps only its subject table cached") {
+    // more distinct censoring times than KaplanMeier.SmallCurveRows, so
+    // the KM curve and both lookups take the range-scan path, which
+    // pins RDDs of its own
+    val n = KaplanMeier.SmallCurveRows + 10000
+    val df = spark.range(n).select(col("id"), (col("id") + 0.5).as("t"),
+      when(col("id") % 10 === 0, 1).otherwise(0).as("e"))
+    val grid = graft.surv.DurationCuts.linspace(0.5, n - 0.5, 100)
+    var kept = (Set.empty[Int], 0)
+    val left = leftBy {
+      var release = () => ()
+      kept = leftBy {
+        val (split, r) = graft.core.Pins.held(ScoringSplit.build(df, "id", "t", "e", grid))
+        release = r
+        assert(split.n == n)
+      }
+      release()
+    }
+    assert(kept._1.size == 1 && kept._2 == 1,
+      s"the build keeps (persisted RDDs, cached plans) $kept, not just the subject table")
+    assert(left == ((Set.empty[Int], 0)), s"left behind (persisted RDDs, cached plans): $left")
+  }
+
   test("a lone score outside any sharing scope leaves nothing cached") {
     val ds = gbsg2
     val left = leftBy {
