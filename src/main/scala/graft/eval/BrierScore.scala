@@ -30,7 +30,7 @@ object BrierScore {
   /** Per-τ Brier scores: (tau_idx, tau, bs), lazy.
     * `df`: (idCol, tCol, eCol); `surv`: long form (idCol, tau, s)
     * evaluated at exactly the grid times. The split's subject table is
-    * pinned in the calling scope, so consume the result inside it.
+    * pinned in the calling scope.
     */
   def grid(df: DataFrame, idCol: String, tCol: String, eCol: String,
            surv: DataFrame, gridTimes: Array[Double]): DataFrame = {

@@ -101,13 +101,12 @@ object ScoringSplit {
         .as[(Double, Double)].collect().toMap
       (grid.map(gByTau), KaplanMeier.lookup(base, "t", cens, strict = true, "g_ti"))
     }
-    val subjects = Pins.pin(gAtTi)
-
     // one job: materializes the subject table, counts it, and collects
     // the active τ set (collect_set skips the non-event nulls)
-    val facts = try subjects.agg(count(lit(1)),
-      collect_set(when(col("e") === 1, col("tau_i")))).head()
-    finally releaseKm()
+    val (subjects, facts) = try {
+      val s = Pins.pin(gAtTi)
+      (s, s.agg(count(lit(1)), collect_set(when(col("e") === 1, col("tau_i")))).head())
+    } finally releaseKm()
     ScoringSplit(df, grid, gAtTau, subjects, facts.getLong(0),
       facts.getSeq[Double](1).sorted.toArray)
   }
