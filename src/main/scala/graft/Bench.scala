@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** The quadratic-BY-DESIGN parity baselines: each reproduces the
     * reference's all-pairs semantics verbatim and exists so its scale
@@ -7,7 +6,7 @@ object Bench {
     * q_dedup_embed_lsh) can be measured against it on the same board.
     * At sf1 the first three cost 110 of 300 s while measuring the DATA
     * SHAPE, not the engine — so scale rehearsals (sf1+) may skip them
-    * via `--parity-baselines=skip` or `SPARK_GRAFT_SKIP_PARITY=1`.
+    * via `--parity-baselines=skip`.
     * The default board (and every correctness gate) runs them.
     *
     * Round-13 additions, each measured super-linear on the sf10 board
@@ -40,43 +39,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val skipParity = args.contains("--parity-baselines=skip") ||
-      sys.env.get("SPARK_GRAFT_SKIP_PARITY").exists(v =>
-        v == "1" || v.equalsIgnoreCase("true"))
+    val skipParity = args.contains("--parity-baselines=skip")
     if (skipParity)
       System.err.println("[bench] skipping parity baselines: " +
         ParityBaselines.toSeq.sorted.mkString(", "))
-    // width ∝ data for scale boards (see TimeQ): default stays the
-    // core count, which is the right size at the driver's sf0.1
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // r19: advisory-size AQE coalescing (both knobs env-overridable).
-      // parallelismFirst=false is Spark's own production recommendation
-      // ("respect the configured target size"): reducer count derives
-      // from shuffle BYTES (advisory 64 MB default), so a KB-sized
-      // aggregate no longer fans out to `cpus` reducers paying ~60 ms
-      // fixed cpu each (measured: q_corpus_training_set 22→0.4
-      // execCpuS), while a 100-TB shuffle still fills every core —
-      // width ∝ data at every scale, the guide-§2.2 prescription. The
-      // cached-plan knob extends the same sizing to operator pins
-      // (InMemoryRelation otherwise freezes session-width partitions:
-      // q_dedup_ngram_jaccard 2.3→0.0 execCpuS, 66→4 tasks); explicit
-      // repartition(N)/repartitionByRange(N) calls (StableOrder, the
-      // loop pins) are REPARTITION_BY_NUM origins AQE never coalesces,
-      // so every spec-pinned partitioning contract is untouched
-      // (OPTIMIZATION_r19.md has the A/B boards).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder("graft-bench").getOrCreate()
     // Task-metrics listener, always on (one atomic-add per task end):
     // every reported warm number carries its execCpu/spill/tasks
     // decomposition so a between-rounds mover can be classified from

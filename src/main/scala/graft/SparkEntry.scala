@@ -46,6 +46,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     providers.map(_._1).reduce(_ ++ _)
 
+  /** Fails, naming them, when any of `names` is not a declared query —
+    * mains call it before they start Spark.
+    */
+  def requireKnown(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(queries.contains).distinct.sorted
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check.
     */

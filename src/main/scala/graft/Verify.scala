@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,29 +7,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these queries (local iteration)
     val only = args.drop(2).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) // loud, because a typo here looks like success
-      System.err.println(
-        s"[verify] WARNING: unknown query name(s) ${unknown.toSeq.sorted
-          .mkString(", ")} — nothing will run for them")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // advisory-size AQE coalescing — the Bench session's r19 conf
-      // (see the rationale there); the gate runs the same engine conf
-      // the bench measures
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores timestamp[ns]; Spark reads it as LongType
-      // nanos under this flag (graft.core.Tables converts back).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.requireKnown(only.toSeq)
+    val spark = Session.builder("graft-verify").getOrCreate()
     new java.io.File(outDir).mkdirs()
     // Materialize the shared churn dataset once (its cache pins predate
     // the per-query scopes below, so the scopes leave them alone):

@@ -31,7 +31,7 @@ object Width {
     * statistic AQE uses) are exactly the wrong signal.
     */
   def explode(spark: SparkSession): Int =
-    fixedOr(sys.env.get(Knob)) {
+    fixedOr(Knob, sys.env.get(Knob)) {
       val sessionParts =
         spark.conf.get("spark.sql.shuffle.partitions").toLong
       math.max(1L, math.min(sessionParts,
@@ -52,23 +52,23 @@ object Width {
     */
   def explodeRows(spark: SparkSession, rows: => Long,
                   rowsPerTask: Long): Int =
-    fixedOr(sys.env.get(Knob)) {
+    fixedOr(Knob, sys.env.get(Knob)) {
       math.max(1L, math.min(explode(spark).toLong,
         rows / rowsPerTask + 1L)).toInt
     }
 
   private val Knob = "SPARK_GRAFT_EXPLODE_WIDTH"
 
-  /** The `SPARK_GRAFT_EXPLODE_WIDTH` override (`raw`), parsed and
-    * validated here for both widths: when set it must be a positive
-    * integer and replaces the derived width, which is then never
-    * computed (so `explodeRows` skips its row count).
+  /** An integer env knob `knob` whose value is `raw`: when set it must
+    * be a positive integer and replaces the derived value, which is
+    * then never computed (so `explodeRows` skips its row count).
     */
-  private[core] def fixedOr(raw: Option[String])(derived: => Int): Int =
+  private[graft] def fixedOr(knob: String, raw: Option[String])(
+      derived: => Int): Int =
     raw match {
       case None => derived
       case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
-          s"$Knob must be a positive integer, got '$v'"))
+          s"$knob must be a positive integer, got '$v'"))
     }
 }

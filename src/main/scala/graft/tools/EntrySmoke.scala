@@ -1,20 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Reproduces the driver's smoke check: SparkEntry.entry(spark) must
   * return rows > 0 on sf0.001.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder("graft-entry-smoke").getOrCreate()
     val df = graft.SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(5, truncate = false)

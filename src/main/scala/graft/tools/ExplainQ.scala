@@ -1,19 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object ExplainQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // mirrors the Bench session's r19 AQE conf (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.SparkEntry.requireKnown(args.toSeq.drop(1))
+    val spark = graft.Session.builder("graft-explain").getOrCreate()
     // formatted explain of every named query, in order — the plan-
     // evidence format the optimization rounds commit under plans/
     args.drop(1).foreach { q =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: tiles an existing sf directory
@@ -81,14 +81,7 @@ object GenScale {
     require(!new java.io.File(dst).getCanonicalPath
       .startsWith("/root/testdata"),
       "GenScale: /root/testdata is read-only — write elsewhere")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder("graft-genscale").getOrCreate()
     new java.io.File(dst).mkdirs()
 
     def read(name: String): DataFrame =

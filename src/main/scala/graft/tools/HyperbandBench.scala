@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end Hyperband wall-time record — the reference's tutorial_3
   * composite workflow (reference src/elastic_surv/optimizer.py:123-180)
   * at a real scale factor, the one entry point with no scale number on
@@ -26,16 +24,10 @@ object HyperbandBench {
     val par = if (args.length > 1) args(1).toInt else 4
     val maxIter = if (args.length > 2) args(2).toInt else 81
     val async = args.length > 3 && args(3) == "async"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.Session.builder("graft-hyperband")
       // FAIR interleaves the concurrent configs' jobs (Hyperband doc)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val ds =
       if (sfDir.startsWith("gbsg2")) {
         val n = sfDir.split(':') match {

@@ -1,6 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-
 /** Isolate the per-job driver-latency floor (r20, verdict item 3):
   * times raw RDD jobs, a no-shuffle SQL query, and a one-exchange SQL
   * aggregate, each repeated, with AQE on vs off — separating scheduler
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object JobLatency {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder("graft-job-latency").getOrCreate()
     def time(tag: String, n: Int)(f: => Unit): Unit = {
       val ts = (0 until n).map { _ =>
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6

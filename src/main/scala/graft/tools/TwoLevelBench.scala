@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Route A/B scale probe for the two-level assignment's candidate
   * join (VERDICT r15 item 3): run `Similarity.assignCellsTwoLevel` on
   * the SAME corpus twice — once with the candidate payload FORCED to
@@ -17,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * GenScale-tiled embeddings table of 2M vectors at targetPerCell 8.
   *
   * Usage: TwoLevelBench <sfDir> <targetPerCell>
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SHUFFLE.
+  * Env: the `graft.Session` knobs.
   * Prints one JSON line per route:
   *   {"route":…,"join":…,"cells":…,"payloadMB":…,"cold":…,"warm":…,
   *    "execCpuS":…,"spillMB":…,"tasks":…}
@@ -26,15 +24,7 @@ object TwoLevelBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val targetPerCell = args(1).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder("graft-two-level").getOrCreate()
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
 

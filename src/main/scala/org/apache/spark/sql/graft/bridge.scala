@@ -112,7 +112,7 @@ object bridge {
     *
     * Bounded wait: the no-arg `waitUntilEmpty()` throws
     * TimeoutException after a 10 s default when the bus is backed up —
-    * uncaught, that would abort a whole timing run (TimeQ) or mark a
+    * uncaught, that would abort a whole timing run (Profile) or mark a
     * successfully-executed query FAILED (Bench) over a measurement
     * side-channel hiccup. A generous 120 s bound plus a logged
     * fall-back to an undrained snap keeps the run alive; the snap is

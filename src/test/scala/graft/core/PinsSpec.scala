@@ -104,20 +104,8 @@ class PinsSpec extends AnyFunSuite {
   }
 
   test("nothing in src/main persists or unpersists outside Pins") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    val pins = new java.io.File(root, "graft/core/Pins.scala").getCanonicalFile
-    val calls = Seq(".persist(", ".cache()", ".unpersist(")
-    val found = for {
-      f <- files(root) if f.getCanonicalFile != pins
-      (line, n) <- scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
-        _.getLines().toVector).zipWithIndex
-      c <- calls if line.contains(c)
-    } yield s"${f.getPath}:${n + 1}: $c"
+    val found = graft.SourceScan.find(
+      Seq(".persist(", ".cache()", ".unpersist("), except = "graft/core/Pins.scala")
     assert(found.isEmpty, s"cache calls that bypass Pins:\n${found.mkString("\n")}")
   }
 

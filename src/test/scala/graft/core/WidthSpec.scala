@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WidthSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
+  private val Knob = "SPARK_GRAFT_EXPLODE_WIDTH"
 
   private def cap: Int = {
     val sessionParts =
@@ -36,11 +37,11 @@ class WidthSpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_EXPLODE_WIDTH: a positive integer replaces the " +
       "derived width without computing it; anything else names the knob") {
-    assert(Width.fixedOr(Some("6"))(fail("derived width computed")) === 6)
-    assert(Width.fixedOr(Some(" 3 "))(fail("derived width computed")) === 3)
-    assert(Width.fixedOr(None)(5) === 5)
+    assert(Width.fixedOr(Knob, Some("6"))(fail("derived width computed")) === 6)
+    assert(Width.fixedOr(Knob, Some(" 3 "))(fail("derived width computed")) === 3)
+    assert(Width.fixedOr(Knob, None)(5) === 5)
     for (bad <- Seq("0", "-2", "wide", "", "2.5")) {
-      val e = intercept[IllegalArgumentException](Width.fixedOr(Some(bad))(5))
+      val e = intercept[IllegalArgumentException](Width.fixedOr(Knob, Some(bad))(5))
       assert(e.getMessage.contains("SPARK_GRAFT_EXPLODE_WIDTH"), e.getMessage)
     }
   }

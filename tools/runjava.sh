@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + the
 # image's Spark jars — sbt-free, so long measurement runs don't hold
-# the sbt lock. Usage: MEM=64g tools/runjava.sh graft.tools.TimeQ <args...>
+# the sbt lock. Usage: MEM=64g tools/runjava.sh graft.tools.Profile <args...>
 set -e
 MEM="${MEM:-8g}"
 ADDOPENS=""
@@ -16,5 +16,4 @@ done
 # works from any checkout path
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 exec java $ADDOPENS -Xmx"$MEM" $EXTRA_OPTS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
