@@ -54,11 +54,11 @@ object Session {
     Width.fixedOr("SPARK_GRAFT_CPUS", raw)(
       Runtime.getRuntime.availableProcessors)
 
-  /** Shuffle width: the core count, which is the right size at the
-    * driver's sf0.1, unless `SPARK_GRAFT_SHUFFLE` decouples it for
-    * scale probes — the sf100 run measured q5's 600M-row join
-    * partitions spilling 30 GB at width 32; the fix at any real scale
-    * is width ∝ data (what a cluster's AQE/initialPartitionNum does).
+  /** Shuffle width: the core count, which is the right size at sf0.1,
+    * unless `SPARK_GRAFT_SHUFFLE` decouples it for scale probes — the
+    * sf100 run measured q5's 600M-row join partitions spilling 30 GB at
+    * width 32; the fix at any real scale is width ∝ data (what a
+    * cluster's AQE/initialPartitionNum does).
     */
   private[graft] def shuffle(raw: Option[String], cores: Int): Int =
     Width.fixedOr("SPARK_GRAFT_SHUFFLE", raw)(cores)
