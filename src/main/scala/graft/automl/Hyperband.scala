@@ -121,12 +121,14 @@ object ModelFactory {
   * model names survive into `seeds` after the search
   * (optimizer.py:172-174).
   *
-  * Each config evaluation is a full Spark train+score; configs within
-  * a rung are embarrassingly parallel and evaluate concurrently
-  * (`parallelism` threads, one FAIR scheduler pool tag each — a
-  * session built with spark.scheduler.mode=FAIR interleaves their
-  * jobs; FIFO still overlaps stages). Selection is bit-identical to
-  * the sequential run: scores fold in config order.
+  * Each config of a rung is a full Spark fit; the fits are
+  * embarrassingly parallel and run concurrently (`parallelism`
+  * threads, one FAIR scheduler pool tag each — a session built with
+  * spark.scheduler.mode=FAIR interleaves their jobs; FIFO still
+  * overlaps stages). The sync search then scores the whole rung in ONE
+  * scoring pass ([[graft.model.FittedSurvModel.scoreAll]]): one join
+  * and one collect, whatever the rung size. Selection is bit-identical
+  * to the sequential run: scores fold in config order.
   */
 object Hyperband {
 
@@ -158,10 +160,11 @@ final class Hyperband(
     eta: Int = 3, // optimizer.py:31
     outputEpochs: Int = 200, // optimizer.py:33
     seedRng: Long = 42L,
-    // Concurrent config evaluations per rung (SURVEY §3.3). Results
-    // are identical to sequential by construction: config sampling and
-    // the best-tracking fold stay on the caller thread in config
-    // order; only the pure train+score work fans out. 1 = sequential.
+    // Concurrent config fits per rung (SURVEY §3.3), or evaluations
+    // in flight for async. Results are identical to sequential by
+    // construction: config sampling, scoring and the best-tracking fold
+    // stay on the caller thread in config order; only the pure fit
+    // work fans out. 1 = sequential.
     parallelism: Int = 4,
     // ASHA-style asynchronous promotion (Li et al., "A System for
     // Massively Parallel Hyperparameter Tuning", arXiv:1810.05934 —
@@ -216,28 +219,32 @@ final class Hyperband(
     out.toSeq
   }
 
-  /** One config's train+score — PURE (no search-state mutation), so
-    * rung configs can evaluate concurrently and the best-tracking fold
-    * stays a deterministic sequential pass ([[recordBest]]).
+  /** One config's fit + lone score, as the async search runs it —
+    * PURE (no search-state mutation), so evaluations can run
+    * concurrently and the best-tracking fold stays a sequential pass
+    * ([[recordBest]]). The sync search fits a whole rung and scores it
+    * in one pass instead ([[evalRung]]).
     *
-    * Rung evaluations discard the fitted artifact (survivors re-fit at
-    * the next rung's epoch budget): release its pinned caches or every
+    * Evaluations discard the fitted artifact (survivors re-fit at the
+    * next rung's epoch budget): release its pinned caches or every
     * evaluated config leaks persisted blocks for the session. release()
     * drops the fitted model's own pins (the Breslow baseline); the
     * surrounding Pins scope releases whatever else the config pinned.
     * TrainCache entries — each family's training prep and the test
-    * split's scoring facts, which every config's score reads — are held
-    * by their own scope, not the config's: they outlive the config and
-    * are released when the search ends.
+    * split's scoring facts, which every score reads — are held by their
+    * own scope, not the config's: they outlive the config and are
+    * released when the search ends.
     */
   private def evalParams(m: ModelFactory, ds: SurvDataset,
-                         params: Map[String, Any], epochs: Int): Double = {
-    val scores = graft.core.Pins.scoped {
+                         params: Map[String, Any], epochs: Int): Double =
+    objective(graft.core.Pins.scoped {
       val fitted = m.build(params, epochs).fit(ds)
       try fitted.score(ds) finally fitted.release()
-    }
+    })
+
+  // score = c_index − brier (optimizer.py:110)
+  private def objective(scores: Map[String, Double]): Double =
     scores("c_index") - scores("brier_score")
-  }
 
   private def recordBest(m: ModelFactory, params: Map[String, Any],
                          score: Double): Unit = {
@@ -251,50 +258,84 @@ final class Hyperband(
     }
   }
 
-  /** Evaluate a rung's configs — concurrently when `parallelism` > 1
-    * (each on its own thread inside its own Pins scope, tagged with a
-    * FAIR scheduler pool so a FAIR-mode session interleaves their
-    * jobs). Scores come back in CONFIG ORDER regardless of completion
+  /** Evaluates the rung `i` of bracket `s`: fits its configs —
+    * concurrently when `parallelism` > 1, each on its own thread inside
+    * its own Pins.held scope, tagged with a FAIR scheduler pool so a
+    * FAIR-mode session interleaves their jobs — then scores every
+    * fitted model in ONE pass ([[graft.model.FittedSurvModel.scoreAll]])
+    * on the caller thread, and only then releases each model and its
+    * scope. Scores come back in CONFIG ORDER regardless of completion
     * order, so the best-tracking fold (and quirk H4) is bit-identical
-    * to the sequential run.
+    * to the sequential run; each evaluation is appended to [[trace]].
+    *
+    * A failed fit fails the SEARCH with its own exception: the rung's
+    * queued and running siblings are cancelled, and every sibling that
+    * did fit is released before the exception leaves.
     */
-  private def evalRung(ds: SurvDataset,
+  private def evalRung(ds: SurvDataset, s: Int, i: Int,
                        configs: Seq[(ModelFactory, Map[String, Any])],
                        epochs: Int): Seq[Double] = {
+    // slot idx: the fitted model and the release of the scope it was
+    // fitted in; set by whichever thread fitted it
+    val fits = new java.util.concurrent.atomic.AtomicReferenceArray[
+      (FittedSurvModel, () => Unit)](configs.size)
+    def fit(idx: Int): Unit = {
+      val (m, params) = configs(idx)
+      fits.set(idx, graft.core.Pins.held(m.build(params, epochs).fit(ds)))
+    }
     val scores =
-      if (parallelism <= 1 || configs.size <= 1)
-        configs.map { case (m, params) => evalParams(m, ds, params, epochs) }
-      else {
-        val sc = ds.df.sparkSession.sparkContext
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(parallelism, configs.size))
-        try {
-          val futures = configs.zipWithIndex.map { case ((m, params), idx) =>
-            pool.submit(new java.util.concurrent.Callable[Double] {
-              def call(): Double = {
-                sc.setLocalProperty("spark.scheduler.pool", s"hyperband-$idx")
-                try evalParams(m, ds, params, epochs)
-                finally sc.setLocalProperty("spark.scheduler.pool", null)
-              }
-            })
-          }
-          try futures.map(_.get())
-          catch {
-            case e: Throwable =>
-              // a failed config fails the SEARCH — cancel the rung's
-              // queued/running siblings instead of letting them train
-              // to completion on non-daemon threads (hours of orphan
-              // cluster work after the search already threw, against
-              // prep caches the sharing scope is about to release)
-              futures.foreach(_.cancel(true))
-              throw e
-          }
-        } finally { pool.shutdownNow(); () }
+      try {
+        if (parallelism <= 1 || configs.size <= 1) configs.indices.foreach(fit)
+        else fitConcurrently(ds, configs.size)(fit)
+        graft.model.FittedSurvModel.scoreAll(ds, configs.indices.map(fits.get(_)._1))
+          .map(objective)
+      } finally configs.indices.map(fits.get).filter(_ != null).foreach {
+        case (fitted, releaseScope) => try fitted.release() finally releaseScope()
       }
     configs.lazyZip(scores).foreach { case ((m, params), score) =>
       recordBest(m, params, score)
+      trace += ((s, i, epochs, keyOf(m.name, params), score))
     }
     scores
+  }
+
+  /** Runs `fit(0 until n)` on `parallelism` threads. The first failure
+    * cancels the rest and is rethrown as itself (not wrapped); the call
+    * returns only once no fit is running, so the caller's release of
+    * the fitted slots can never miss one that finishes late.
+    */
+  private def fitConcurrently(ds: SurvDataset, n: Int)(fit: Int => Unit): Unit = {
+    val sc = ds.df.sparkSession.sparkContext
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(parallelism, n))
+    try {
+      val futures = (0 until n).map { idx =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            sc.setLocalProperty("spark.scheduler.pool", s"hyperband-$idx")
+            try fit(idx)
+            finally sc.setLocalProperty("spark.scheduler.pool", null)
+          }
+        })
+      }
+      try futures.foreach(_.get())
+      catch {
+        case e: Throwable =>
+          // a failed config fails the SEARCH — cancel the rung's
+          // queued/running siblings instead of letting them train
+          // to completion on non-daemon threads (hours of orphan
+          // cluster work after the search already threw, against
+          // prep caches the sharing scope is about to release)
+          futures.foreach(_.cancel(true))
+          throw (e match {
+            case x: java.util.concurrent.ExecutionException if x.getCause != null => x.getCause
+            case other => other
+          })
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      ()
+    }
   }
 
   /** Runs the search and returns the winner re-fit with
@@ -318,6 +359,7 @@ final class Hyperband(
   }
 
   private def runSync(ds: SurvDataset): Unit = {
+    trace.clear() // per-run trace: a reused instance must not mix runs
     for (s <- sMax to 0 by -1) {
       val n = math.ceil(bBudget.toDouble / maxIter / (s + 1) * math.pow(eta, s)).toInt
       val r = maxIter * math.pow(eta, -s)
@@ -327,7 +369,7 @@ final class Hyperband(
       while (i <= s && configs.nonEmpty) {
         val nConfigs = math.ceil(n * math.pow(eta, -i)).toInt
         val epochs = (r * math.pow(eta, i)).toInt
-        val scored = evalRung(ds, configs, epochs).zip(configs)
+        val scored = evalRung(ds, s, i, configs, epochs).zip(configs)
         val saved = math.ceil(nConfigs.toDouble / eta).toInt
         configs = scored.sortBy(_._1).takeRight(saved).map(_._2)
         i += 1
@@ -335,12 +377,14 @@ final class Hyperband(
     }
   }
 
-  /** ASHA completion trace: (bracket s, rung i, epochs, config key,
-    * score) in completion order — the spec's window into the async
-    * invariants (rung ladders, promotion fractions, budgets).
+  /** The last search's evaluations: (bracket s, rung i, epochs, config
+    * key, score) — in config order, rung by rung, for the sync search;
+    * in completion order for ASHA. The spec's window into the rung
+    * ladders, promotion fractions and budgets.
     */
-  private[automl] val ashaTrace =
+  private[automl] val trace =
     mutable.Buffer.empty[(Int, Int, Int, String, Double)]
+  private[automl] def ashaTrace: mutable.Buffer[(Int, Int, Int, String, Double)] = trace
 
   /** The asynchronous search: same brackets and budgets as [[runSync]],
     * no rung barriers. All shared search state (rung ledgers, promotion
@@ -348,7 +392,7 @@ final class Hyperband(
     * mutates only under ONE monitor; evaluation runs outside it.
     */
   private def runAsha(ds: SurvDataset): Unit = {
-    ashaTrace.clear() // per-run trace: a reused instance must not mix runs
+    trace.clear() // per-run trace: a reused instance must not mix runs
     val k = seeds.size
     final case class Cfg(m: ModelFactory, params: Map[String, Any]) {
       val key: String = keyOf(m.name, params)
@@ -375,16 +419,17 @@ final class Hyperband(
     var inflight = 0
     var failure: Option[Throwable] = None
     // set once, right after the workers are submitted; lets a failing
-    // worker cancel its siblings (the evalRung orphan-work rule)
+    // worker cancel its siblings (fitConcurrently's orphan-work rule)
     val futuresRef = new java.util.concurrent.atomic.AtomicReference[
       Seq[java.util.concurrent.Future[Unit]]](Nil)
 
     // A failed acquisition or evaluation fails the SEARCH: record the
     // first failure, wake peers blocked in lock.wait(), and interrupt
-    // in-flight sibling trainings — the same protocol evalRung applies
-    // with futures.foreach(_.cancel(true)), so the async path never
-    // burns hours of orphan cluster work after the search has already
-    // failed. Self-cancel is harmless: the caller returns right after.
+    // in-flight sibling trainings — the same protocol fitConcurrently
+    // applies with futures.foreach(_.cancel(true)), so the async path
+    // never burns hours of orphan cluster work after the search has
+    // already failed. Self-cancel is harmless: the caller returns right
+    // after.
     def failAndStop(e: Throwable, releaseInflight: Boolean): Unit = {
       lock.synchronized {
         if (failure.isEmpty) failure = Some(e)
@@ -478,7 +523,7 @@ final class Hyperband(
           lock.synchronized {
             b.completed(i) += ((cfg, score))
             recordBest(cfg.m, cfg.params, score)
-            ashaTrace += ((b.s, i, epochs, cfg.key, score))
+            trace += ((b.s, i, epochs, cfg.key, score))
             inflight -= 1
             lock.notifyAll()
           }

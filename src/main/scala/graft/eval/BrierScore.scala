@@ -30,16 +30,18 @@ object BrierScore {
   /** Per-τ Brier scores: (tau_idx, tau, bs), lazy.
     * `df`: (idCol, tCol, eCol); `surv`: long form (idCol, tau, s)
     * evaluated at exactly the grid times. The split's subject table is
-    * pinned in the calling scope.
+    * pinned in the calling scope. The one-config case of the scoring
+    * path: `surv` is scored as cfg 0.
     */
   def grid(df: DataFrame, idCol: String, tCol: String, eCol: String,
            surv: DataFrame, gridTimes: Array[Double]): DataFrame = {
     val split = ScoringSplit.build(df, idCol, tCol, eCol, gridTimes)
-    perTau(split, split.attach(surv, idCol))
+    perTau(split, split.attach(surv, idCol)).drop(ScoringSplit.Cfg)
   }
 
-  /** Per-τ Brier scores (tau_idx, tau, bs), lazy, over `x` — the
-    * split's [[ScoringSplit.attach]] join of a prediction matrix.
+  /** Per-τ Brier scores (cfg, tau_idx, tau, bs), lazy, over `x` — the
+    * split's [[ScoringSplit.attach]] join of a batch of prediction
+    * matrices, one config each.
     */
   private[eval] def perTau(split: ScoringSplit, x: DataFrame): DataFrame = {
     // τ's 1-based grid position (0 = not a grid time: dropped, as the
@@ -55,24 +57,30 @@ object BrierScore {
       .filter(col("_pos") > 0)
       .withColumn("tau_idx", col("_pos") - 1)
       .withColumn("g_tau", element_at(array(split.gAtTau.map(lit(_)): _*), col("_pos")))
-      .groupBy(col("tau_idx"), col("tau"))
+      .groupBy(col(ScoringSplit.Cfg), col("tau_idx"), col("tau"))
       .agg(sum(contrib).as("_c"))
-      .select(col("tau_idx"), col("tau"), (col("_c") / lit(split.n.toDouble)).as("bs"))
+      .select(col(ScoringSplit.Cfg), col("tau_idx"), col("tau"),
+        (col("_c") / lit(split.n.toDouble)).as("bs"))
   }
 
-  /** Trapezoid-integrated Brier score normalized by grid span —
-    * single-row (ibs).
+  /** Trapezoid-integrated Brier score normalized by grid span — one
+    * row (cfg, ibs) per config of `gridBs` (cfg, tau_idx, tau, bs); a
+    * frame without a cfg column, such as [[grid]]'s, is one config,
+    * cfg 0.
     */
   def integrated(gridBs: DataFrame): DataFrame = {
+    val cfg = ScoringSplit.Cfg
+    val bs = if (gridBs.columns.contains(cfg)) gridBs else gridBs.withColumn(cfg, lit(0))
     // prev-row lookup as a shifted SELF-JOIN on the dense tau_idx —
     // window-free: a constant-key window still plans as a
     // single-partition WindowExec (Spark 4.1 eliminates even a
     // non-foldable constant partition key from the spec), whereas the
     // equi-join on a <= 100-row frame broadcasts. tau_idx is dense
     // (0..k-1 by construction), so idx-1 IS the previous grid point.
-    val prev = gridBs.select((col("tau_idx") + 1).as("tau_idx"),
+    val prev = bs.select(col(cfg), (col("tau_idx") + 1).as("tau_idx"),
       col("bs").as("prev_bs"), col("tau").as("prev_tau"))
-    gridBs.join(broadcast(prev), Seq("tau_idx"))
+    bs.join(broadcast(prev), Seq(cfg, "tau_idx"))
+      .groupBy(col(cfg))
       .agg((sum((col("bs") + col("prev_bs")) / 2.0 * (col("tau") - col("prev_tau")))
         / (max(col("tau")) - min(col("prev_tau")))).as("ibs"))
   }

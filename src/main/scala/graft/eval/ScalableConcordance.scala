@@ -1,6 +1,7 @@
 package graft.eval
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.eval.ScoringSplit.Cfg
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,9 +85,9 @@ object ScalableConcordance {
     // memory as ONE lazy branch of the final job (no window buffering,
     // no extra jobs, no carries).
     val tiesDf = evAfterKeyedDf(
-      s.groupBy(col("r"), col("t"))
+      s.groupBy(lit(0).as(Cfg), col("r"), col("t"))
         .agg(count(lit(1)).as("m"), sum(col("e")).as("ev")),
-      Seq("r"))
+      Seq(Cfg, "r"))
 
     // ---- cross-bucket at EVENT points only (no dense t × bucket
     // grid — see the antolini() comment for the union/prefix trick) ----
@@ -112,7 +113,7 @@ object ScalableConcordance {
     val crossDf = evTB
       .join(grid.select(col("t"), (col("b") + 1).as("b"), col("g")),
         Seq("t", "b"), "left")
-      .select((col("ev") * coalesce(col("g"), lit(0L))).as("v"))
+      .select(lit(0).as(Cfg), (col("ev") * coalesce(col("g"), lit(0L))).as("v"))
       .transform(partitionSums)
 
     // ---- within-bucket: exact local Fenwick sweep per bucket ----
@@ -124,14 +125,15 @@ object ScalableConcordance {
         it.toSeq.groupBy(_._4).valuesIterator.foreach { rows =>
           total += countWithin(rows.map(x => (x._1, x._2, x._3)))
         }
-        Iterator.single(total)
-      }.toDF("v")
+        Iterator.single((0, total))
+      }.toDF(Cfg, "v")
 
     // ONE action for all four counts: the branches are independent, so
     // Spark schedules their stages concurrently instead of paying four
-    // sequential job round-trips over the same cached base.
+    // sequential job round-trips over the same cached base. One risk
+    // column is one scored config: cfg 0.
     val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
-      collectScalars(Seq(comparableDf, tiesDf, crossDf, withinDf))
+      collectScalars(Seq(comparableDf, tiesDf, crossDf, withinDf), configs = 1).head
     Seq(concordance(comparable, ties, cross, within))
       .toDF("comparable", "concordant", "cindex")
   }
@@ -157,8 +159,10 @@ object ScalableConcordance {
     * within-bucket sweep.
     *
     * τ(t_i) and the active τ set come from the split's
-    * [[ScoringSplit]] — the same value `FittedSurvModel.score` reads,
+    * [[ScoringSplit]] — the same value `FittedSurvModel.scoreAll` reads,
     * which also takes the integrated Brier score from the same collect.
+    * This is the scoring path's one-config case: `surv` carries no
+    * config column, so [[ScoringSplit.attach]] tags it cfg 0.
     */
   def antolini(df: DataFrame, idCol: String, tCol: String, eCol: String,
                surv: DataFrame, grid: Array[Double],
@@ -166,7 +170,7 @@ object ScalableConcordance {
     val split = ScoringSplit.build(df, idCol, tCol, eCol, grid)
     val x = ScoringSplit.materialized(split.attach(surv, idCol))
     val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
-      collectScalars(antoliniCounts(split, x, numBuckets))
+      collectScalars(antoliniCounts(split, x, numBuckets), configs = 1).head
     val spark = df.sparkSession
     import spark.implicits._
     Seq(concordance(comparable, ties, cross, within))
@@ -174,9 +178,11 @@ object ScalableConcordance {
   }
 
   /** Antolini's comparable / ties / cross / within counts as four
-    * branches of per-partition partials ("v") for the caller's single
-    * [[collectScalars]]. `joined` is [[ScoringSplit.attach]]'s join,
-    * cached by the caller.
+    * branches of per-partition, per-config partials (cfg, v) for the
+    * caller's single [[collectScalars]]. `joined` is
+    * [[ScoringSplit.attach]]'s join, cached by the caller; its `cfg`
+    * column leads every grouping key, window partition and shuffle
+    * key, so the configs of a batch never meet in one count.
     */
   private[eval] def antoliniCounts(split: ScoringSplit, joined: DataFrame,
                                    numBuckets: Int): Seq[DataFrame] = {
@@ -186,7 +192,7 @@ object ScalableConcordance {
     // One Harrell slice per active τ: every subject once, as risk
     // r = −s(τ|x); the event flag is LOCAL to the subject's own slice.
     val x = joined.filter(col("tau").isin(split.activeTau.toIndexedSeq: _*))
-      .select(col("tau"), col("t"), negate(col("s").cast("double")).as("r"),
+      .select(col(Cfg), col("tau"), col("t"), negate(col("s").cast("double")).as("r"),
         when(col("e") === 1 && col("tau_i") === col("tau"), 1)
           .otherwise(0).as("ei"))
 
@@ -197,14 +203,14 @@ object ScalableConcordance {
     // per-τ window), memory O(1) per task (the window buffered whole
     // τ slices).
     val comparableDf = evAfterKeyedDf(
-      x.groupBy(col("tau"), col("t"))
+      x.groupBy(col(Cfg), col("tau"), col("t"))
         .agg(count(lit(1)).as("m"), sum(col("ei")).as("ev")),
-      Seq("tau"))
+      Seq(Cfg, "tau"))
 
     val tiesDf = evAfterKeyedDf(
-      x.groupBy(col("tau"), col("r"), col("t"))
+      x.groupBy(col(Cfg), col("tau"), col("r"), col("t"))
         .agg(count(lit(1)).as("m"), sum(col("ei")).as("ev")),
-      Seq("tau", "r"))
+      Seq(Cfg, "tau", "r"))
 
     // b monotone in r: r = −s ∈ [−1, 0] → equal-width cells, clamped.
     val b = greatest(lit(0), least(lit(numBuckets - 1),
@@ -217,13 +223,18 @@ object ScalableConcordance {
     // row per (event (τ,t)) × bucket, running-prefix-sum m ordered by
     // (t, data-before-query), and read f = tot − prefix at the query
     // rows. One window pass over O(|x|) rows instead of the dense grid.
-    val perBT = xb.groupBy(col("tau"), col("b"), col("t")).agg(count(lit(1)).as("m"))
-    val evT = xb.filter(col("ei") === 1).select(col("tau"), col("t")).distinct()
-    val allB = spark.range(0, numBuckets.toLong).select(col("id").cast("int").as("b"))
-    val u = perBT.select(col("tau"), col("b"), col("t"), col("m"), lit(0).as("q"))
-      .unionAll(evT.crossJoin(allB)
-        .select(col("tau"), col("b"), col("t"), lit(0L).as("m"), lit(1).as("q")))
-    val wBT = Window.partitionBy(col("tau"), col("b"))
+    // The B query rows per event point come from a scan-fused explode:
+    // a cross join with a bucket range would be a nested-loop join whose
+    // size estimate (the product of both sides) grows with the batch
+    // and plans the joins above it as shuffles that AQE only demotes
+    // to broadcasts after running them.
+    val perBT = xb.groupBy(col(Cfg), col("tau"), col("b"), col("t")).agg(count(lit(1)).as("m"))
+    val evT = xb.filter(col("ei") === 1).select(col(Cfg), col("tau"), col("t")).distinct()
+    val u = perBT.select(col(Cfg), col("tau"), col("b"), col("t"), col("m"), lit(0).as("q"))
+      .unionAll(evT.select(col(Cfg), col("tau"),
+        explode(sequence(lit(0), lit(numBuckets - 1))).as("b"), col("t"),
+        lit(0L).as("m"), lit(1).as("q")))
+    val wBT = Window.partitionBy(col(Cfg), col("tau"), col("b"))
     val cells = u
       .withColumn("pref", // Σ m with t' <= t (data rows sort before queries)
         sum(col("m")).over(wBT.orderBy(col("t"), col("q"))
@@ -232,26 +243,24 @@ object ScalableConcordance {
       .filter(col("q") === 1)
       .withColumn("f", col("tot") - col("pref")) // # in (τ,b) with t_j > t
       .withColumn("g", // Σ_{b' <= b} f(τ, b', t)
-        sum(col("f")).over(Window.partitionBy(col("tau"), col("t")).orderBy(col("b"))
+        sum(col("f")).over(Window.partitionBy(col(Cfg), col("tau"), col("t")).orderBy(col("b"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val evTB = xb.filter(col("ei") === 1)
-      .groupBy(col("tau"), col("t"), col("b")).agg(count(lit(1)).as("ev"))
+      .groupBy(col(Cfg), col("tau"), col("t"), col("b")).agg(count(lit(1)).as("ev"))
     val crossDf = evTB
-      .join(cells.select(col("tau"), col("t"), (col("b") + 1).as("b"), col("g")),
-        Seq("tau", "t", "b"), "left")
-      .select((col("ev") * coalesce(col("g"), lit(0L))).as("v"))
+      .join(cells.select(col(Cfg), col("tau"), col("t"), (col("b") + 1).as("b"), col("g")),
+        Seq(Cfg, "tau", "t", "b"), "left")
+      .select(col(Cfg), (col("ev") * coalesce(col("g"), lit(0L))).as("v"))
       .transform(partitionSums)
 
-    val withinDf = xb.select(col("tau"), col("b"), col("t"), col("ei"), col("r"))
-      .repartition(col("tau"), col("b"))
-      .as[(Double, Int, Double, Int, Double)]
+    val withinDf = xb.select(col(Cfg), col("tau"), col("b"), col("t"), col("ei"), col("r"))
+      .repartition(col(Cfg), col("tau"), col("b"))
+      .as[(Int, Double, Int, Double, Int, Double)]
       .mapPartitions { it =>
-        var total = 0L
-        it.toSeq.groupBy(p => (p._1, p._2)).valuesIterator.foreach { rows =>
-          total += countWithin(rows.map(p => (p._3, p._4, p._5)))
-        }
-        Iterator.single(total)
-      }.toDF("v")
+        sumByCfg(it.toSeq.groupBy(p => (p._1, p._2, p._3)).iterator.map { case (k, rows) =>
+          (k._1, countWithin(rows.map(p => (p._4, p._5, p._6))))
+        })
+      }.toDF(Cfg, "v")
 
     // branches independent over the cached join → concurrently
     // scheduled stages of the caller's one collect
@@ -267,15 +276,6 @@ object ScalableConcordance {
     (comparable, concordant, concordant / comparable.toDouble)
   }
 
-  /** KEYED form of [[evAfterDf]] as one LAZY plan: hash-partition the
-    * cells by the key columns and sort within by (keys asc, t desc) —
-    * a key's whole run is then contained in a single partition, so
-    * Σ ev · #(same key, larger t) streams per partition with O(1)
-    * state and no cross-partition carries, no window buffering, and
-    * no prep jobs. Parallelism is #distinct keys (τ / risk granular);
-    * the KEYLESS global suffix is the one case that needs the sampled
-    * range scan instead.
-    */
   /** Key-run equality with java.lang boxed semantics (NaN == NaN):
     * Spark's groupBy collapses every NaN of a key column into ONE
     * group, so the run detectors must not re-fragment that group —
@@ -295,7 +295,18 @@ object ScalableConcordance {
         }
       }
 
+  /** KEYED form of [[evAfterDf]] as one LAZY plan: hash-partition the
+    * cells by the key columns and sort within by (keys asc, t desc) —
+    * a key's whole run is then contained in a single partition, so
+    * Σ ev · #(same key, larger t) streams per partition with O(1)
+    * state and no cross-partition carries, no window buffering, and
+    * no prep jobs. Parallelism is #distinct keys (τ / risk granular);
+    * the KEYLESS global suffix is the one case that needs the sampled
+    * range scan instead. The keys lead with the config column `cfg`,
+    * and each partition yields one partial (cfg, v) per config in it.
+    */
   private def evAfterKeyedDf(cells: DataFrame, keyCols: Seq[String]): DataFrame = {
+    require(keyCols.headOption.contains(Cfg), s"keyed suffix keys must lead with $Cfg: $keyCols")
     val k = keyCols.length
     // width: session-default map side, AQE advisory-size coalescing
     val sortExprs = keyCols.map(col(_).asc) :+ col("t").desc
@@ -305,23 +316,23 @@ object ScalableConcordance {
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions(sortExprs: _*)
       .mapPartitions { it =>
-        var acc = 0L
         var curKey: Seq[Any] = null
         var pref = 0L
-        it.foreach { r =>
+        sumByCfg(it.map { r =>
           val key = Seq.tabulate(k)(r.get)
           if (!sameKey(key, curKey)) { curKey = key; pref = 0L }
-          acc += r.getLong(k + 2) * pref
+          val v = r.getLong(k + 2) * pref
           pref += r.getLong(k + 1)
-        }
-        Iterator.single(acc)
-      }(org.apache.spark.sql.Encoders.scalaLong)
-      .toDF("v")
+          (r.getInt(0), v)
+        })
+      }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
+      .toDF(Cfg, "v")
   }
 
   /** Σ_cells ev · #{rows in same-key cells with strictly larger t},
-    * as one partial ("v") per partition, which the caller unions into
-    * its single counting collect.
+    * as one partial (cfg 0, v) per partition, which the caller unions
+    * into its single counting collect. Its one caller, [[harrell]],
+    * scores a single risk column.
     *
     * `cells` must be (keyCols..., t, m, ev) with one row per distinct
     * (keys, t) — m subjects and ev events at that cell. Used with
@@ -412,41 +423,56 @@ object ScalableConcordance {
         acc += r.getLong(k + 2) * pref
         pref += r.getLong(k + 1)
       }
-      Iterator.single(acc)
-    }.toDF("v")
+      Iterator.single((0, acc))
+    }.toDF(Cfg, "v")
   }
 
-  /** One long ("v") per partition of `df`: its sum. The partials of a
-    * count branch are added up by [[collectScalars]], so the branch
-    * needs no final single-partition aggregation stage.
+  /** One long (cfg, v) per partition and config of `df` (cfg, v): its
+    * sum. The partials of a count branch are added up by
+    * [[collectScalars]], so the branch needs no final single-partition
+    * aggregation stage.
     */
   private def partitionSums(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("v").cast("long")).as[Long]
-      .mapPartitions(it => Iterator.single(it.sum)).toDF("v")
+    df.select(col(Cfg), col("v").cast("long")).as[(Int, Long)]
+      .mapPartitions(sumByCfg).toDF(Cfg, "v")
   }
 
-  /** Collect N independent scalars in ONE job: tag each branch,
-    * union, collect, read back in branch order. A long branch ("v")
-    * may yield one partial per partition — its scalar is their exact
-    * sum; a double branch yields exactly one row. Longs and doubles
-    * ride separate columns, so no count is widened to a double.
+  /** The (cfg, v) pairs of one partition summed per config: one
+    * partial per config present, none for an empty partition.
     */
-  private[eval] def collectScalars(branches: Seq[DataFrame]): Seq[Any] = {
+  private def sumByCfg(it: Iterator[(Int, Long)]): Iterator[(Int, Long)] = {
+    val acc = scala.collection.mutable.HashMap.empty[Int, Long]
+    it.foreach { case (c, v) => acc(c) = acc.getOrElse(c, 0L) + v }
+    acc.iterator
+  }
+
+  /** Collect N independent scalars for each of `configs` configs in ONE
+    * job: tag each branch, union, collect, read back per config in
+    * branch order. Every branch is (cfg, v), cfg in [0, configs). A
+    * long branch may yield one partial per partition and config — its
+    * scalar is their exact sum (0 when none); a double branch yields
+    * exactly one row per config. Longs and doubles ride separate
+    * columns, so no count is widened to a double.
+    */
+  private[eval] def collectScalars(branches: Seq[DataFrame],
+                                   configs: Int): IndexedSeq[Seq[Any]] = {
     val isLong = branches.map(_.schema("v").dataType == org.apache.spark.sql.types.LongType)
     val tagged = branches.zipWithIndex.map { case (b, i) =>
-      b.select(lit(i).as("k"),
+      b.select(lit(i).as("k"), col(Cfg),
         (if (isLong(i)) col("v") else lit(null).cast("long")).as("l"),
         (if (isLong(i)) lit(null).cast("double") else col("v").cast("double")).as("d"))
     }
-    val rows = tagged.reduce(_.unionAll(_)).collect().groupBy(_.getInt(0))
-    branches.indices.map { i =>
-      val rs = rows.getOrElse(i, Array.empty[Row])
-      if (isLong(i)) rs.map(_.getLong(1)).sum
-      else {
-        require(rs.length == 1, s"scalar branch $i returned ${rs.length} rows")
-        rs.head.getDouble(2)
+    val rows = tagged.reduce(_.unionAll(_)).collect().groupBy(r => (r.getInt(0), r.getInt(1)))
+    (0 until configs).map { c =>
+      branches.indices.map { i =>
+        val rs = rows.getOrElse((i, c), Array.empty[Row])
+        if (isLong(i)) rs.map(_.getLong(2)).sum
+        else {
+          require(rs.length == 1, s"scalar branch $i returned ${rs.length} rows for cfg $c")
+          rs.head.getDouble(3)
+        }
       }
     }
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * ([[ScalableConcordance.antolini]]) and the IPCW Brier score
   * ([[BrierScore.grid]]) read them; a Hyperband search scores every
   * config against the same split, so it builds them once
-  * ([[graft.model.FittedSurvModel.score]] shares this value through
+  * ([[graft.model.FittedSurvModel.scoreAll]] shares this value through
   * [[graft.model.TrainCache]]).
   *
   *  - `test`: the test rows the models predict on (pinned by [[of]]);
@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   *    slices), sorted.
   *
   * Both arrays are bounded by the grid; the subject table stays
-  * distributed. Scoring a prediction matrix is then one join
-  * ([[attach]]) plus one collect ([[score]]).
+  * distributed. Scoring a batch of prediction matrices — one per
+  * config, a whole Hyperband rung — is then one join ([[attach]]) and
+  * one collect ([[score]]), whatever the batch size: every count and
+  * Brier sum is keyed by the matrix's config index `cfg`.
   */
 final case class ScoringSplit(
     test: DataFrame,
@@ -33,28 +35,41 @@ final case class ScoringSplit(
     n: Long,
     activeTau: Array[Double]) {
 
-  /** The prediction matrix `surv` (idCol, tau, s) joined to the subject
-    * facts: (id, tau, s, t, e, tau_i, g_ti), lazy.
+  /** The prediction matrices `surv` (cfg, idCol, tau, s) joined to the
+    * subject facts: (cfg, id, tau, s, t, e, tau_i, g_ti), lazy. A
+    * matrix without a cfg column is one config, cfg 0.
     */
-  def attach(surv: DataFrame, idCol: String): DataFrame =
-    surv.select(col(idCol).as("id"), col("tau"), col("s"))
+  def attach(surv: DataFrame, idCol: String): DataFrame = {
+    val cfg = if (surv.columns.contains(ScoringSplit.Cfg)) col(ScoringSplit.Cfg) else lit(0)
+    surv.select(cfg.as(ScoringSplit.Cfg), col(idCol).as("id"), col("tau"), col("s"))
       .join(subjects, Seq("id"))
+  }
 
-  /** (c_index, brier_score) of the prediction matrix `surv` (id, tau,
-    * s) over [[grid]]: Antolini's four counts and the integrated Brier
-    * score, read back from ONE collect.
+  /** (c_index, brier_score) of each prediction matrix in `survs` (id,
+    * tau, s) over [[grid]], in order: the matrices are tagged with
+    * their index, unioned and joined to the subject table once, and
+    * every config's Antolini counts and integrated Brier score come
+    * back from ONE collect.
     */
-  def score(surv: DataFrame): (Double, Double) = Pins.scoped {
-    val x = ScoringSplit.materialized(attach(surv, "id"))
-    val ibs = BrierScore.integrated(BrierScore.perTau(this, x)).select(col("ibs").as("v"))
-    val Seq(comparable: Long, ties: Long, cross: Long, within: Long, brier: Double) =
-      ScalableConcordance.collectScalars(
-        ScalableConcordance.antoliniCounts(this, x, numBuckets = 16) :+ ibs)
-    (ScalableConcordance.concordance(comparable, ties, cross, within)._3, brier)
+  def score(survs: Seq[DataFrame]): Seq[(Double, Double)] = Pins.scoped {
+    val tagged = survs.zipWithIndex.map { case (s, i) =>
+      s.select(lit(i).as(ScoringSplit.Cfg), col("id"), col("tau"), col("s"))
+    }
+    val x = ScoringSplit.materialized(attach(tagged.reduce(_.unionAll(_)), "id"))
+    val ibs = BrierScore.integrated(BrierScore.perTau(this, x))
+      .select(col(ScoringSplit.Cfg), col("ibs").as("v"))
+    ScalableConcordance.collectScalars(
+        ScalableConcordance.antoliniCounts(this, x, numBuckets = 16) :+ ibs, survs.size)
+      .map { case Seq(comparable: Long, ties: Long, cross: Long, within: Long, brier: Double) =>
+        (ScalableConcordance.concordance(comparable, ties, cross, within)._3, brier)
+      }
   }
 }
 
 object ScoringSplit {
+
+  /** The column that tells the configs of a scored batch apart. */
+  private[eval] val Cfg = "cfg"
 
   /** The scoring facts of a dataset's test split, over the reference's
     * default 100-point grid. Fails, naming the split, when the test
@@ -113,11 +128,14 @@ object ScoringSplit {
 
   /** Pins `x` and fills its cache with one job, so the branches of the
     * single collect that follows read the cache instead of each
-    * recomputing it.
+    * recomputing it. The rows are counted per partition on the cached
+    * scan itself: a `Dataset.count` adds an aggregation exchange (one
+    * more job) as soon as `x` has more than one partition, as a batch
+    * of several configs does.
     */
   private[eval] def materialized(x: DataFrame): DataFrame = {
     val p = Pins.pin(x)
-    p.count()
+    p.queryExecution.toRdd.count()
     p
   }
 }

@@ -29,28 +29,60 @@ trait FittedSurvModel {
   /** Long-form survival matrix (id, tau_idx, tau, s) for rows in
     * tensorized form (id, x). The reference's predict returns the
     * same matrix with time horizons as the index
-    * (model_cox_ph.py:106-110).
+    * (model_cox_ph.py:106-110). Every score derives from this matrix
+    * ([[FittedSurvModel.scoreAll]]); a fitted artifact that cannot
+    * predict (a test stub) throws `UnsupportedOperationException` here
+    * and must override [[score]].
     */
   def predictSurv(tensorized: DataFrame, grid: Array[Double]): DataFrame
 
   /** Scores on the test split — c_index (Antolini concordance_td) and
     * brier_score (IPCW IBS over the 100-point grid), mirroring
-    * base.py:61-82.
+    * base.py:61-82: [[FittedSurvModel.scoreAll]] over this model alone,
+    * so a lone score and a rung's batched score are one implementation.
+    * A model whose [[predictSurv]] throws `UnsupportedOperationException`
+    * must override this: `scoreAll` scores such a model by calling it.
+    */
+  def score(ds: SurvDataset): Map[String, Double] =
+    FittedSurvModel.scoreAll(ds, Seq(this)).head
+}
+
+object FittedSurvModel {
+
+  /** Scores `models` on the test split of `ds`, in order, in ONE
+    * scoring pass: each model's prediction matrix
+    * (`predictSurv(split.test, split.grid)`) is tagged with its index,
+    * the union joins the split's subject table once, and one collect
+    * returns every model's four Antolini counts and integrated Brier
+    * score. The jobs of the pass do not grow with the number of models.
     *
     * The model-independent facts of the test split (tensorized rows,
     * grid, censoring KM weights, N, active τ) are one
     * [[graft.eval.ScoringSplit]] taken through [[TrainCache]]: inside a
-    * sharing scope (a Hyperband search) every config reuses the one
-    * the first config built; outside one it is built and released per
-    * call. The prediction matrix then joins the split's subject table
-    * once, and both scores come back from one collect.
+    * sharing scope (a Hyperband search) every rung reuses the one the
+    * first score built; outside one it is built and released per call.
+    *
+    * A model whose `predictSurv` throws `UnsupportedOperationException`
+    * is scored by its own [[FittedSurvModel.score]] instead.
     */
-  def score(ds: SurvDataset): Map[String, Double] = graft.core.Pins.scoped {
-    val (split, release) = TrainCache.acquire(TrainCache.key("score_split", ds))(
-      ScoringSplit.of(ds))
-    try {
-      val (c, ibs) = split.score(predictSurv(split.test, split.grid))
-      Map("c_index" -> c, "brier_score" -> ibs)
-    } finally release()
-  }
+  def scoreAll(ds: SurvDataset, models: Seq[FittedSurvModel]): Seq[Map[String, Double]] =
+    graft.core.Pins.scoped {
+      val (split, release) = TrainCache.acquire(TrainCache.key("score_split", ds))(
+        ScoringSplit.of(ds))
+      try {
+        val survs = models.map { m =>
+          try Some(m.predictSurv(split.test, split.grid))
+          catch { case _: UnsupportedOperationException => None }
+        }
+        val batch = survs.flatten
+        val scores = (if (batch.isEmpty) Nil else split.score(batch)).iterator
+        models.lazyZip(survs).map { (m, surv) =>
+          if (surv.isEmpty) m.score(ds)
+          else {
+            val (c, ibs) = scores.next()
+            Map("c_index" -> c, "brier_score" -> ibs)
+          }
+        }
+      } finally release()
+    }
 }

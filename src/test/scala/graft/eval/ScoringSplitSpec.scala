@@ -3,17 +3,19 @@ package graft.eval
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
-import graft.model.{CoxPH, DeepHit, LogisticHazard, TrainCache}
+import graft.model.{CoxPH, DeepHit, FittedSurvModel, LogisticHazard, TrainCache}
 import graft.surv.{ChurnView, Gbsg2Fixture, SurvDataset}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CacheProbe, bridge}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `FittedSurvModel.score` through the shared test-split facts
-  * ([[ScoringSplit]]): the same c_index as the pair-join reference, the
-  * same Brier score as a driver-side IPCW reference, the split built
-  * once per sharing scope, and nothing left cached afterwards.
+/** `FittedSurvModel.score` and `scoreAll` through the shared
+  * test-split facts ([[ScoringSplit]]): the same c_index as the
+  * pair-join reference, the same Brier score as a driver-side IPCW
+  * reference, a batch of models scored as each alone in no more jobs
+  * than one, the split built once per sharing scope, and nothing left
+  * cached afterwards.
   */
 class ScoringSplitSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -86,6 +88,40 @@ class ScoringSplitSpec extends AnyFunSuite {
         } finally f.release()
       }
     }
+  }
+
+  for ((dataName, data) <- Seq[(String, () => SurvDataset)](
+      "Gbsg2 fixture" -> (() => gbsg2), "churn sf0.001" -> (() => churn))) {
+    test(s"scoreAll over three families equals each model's lone score: $dataName") {
+      val ds = data()
+      val fitted = models.map(_.fit(ds))
+      try {
+        val alone = fitted.map(_.score(ds))
+        val batch = FittedSurvModel.scoreAll(ds, fitted)
+        assert(batch.size == fitted.size)
+        models.lazyZip(alone).lazyZip(batch).foreach { (m, a, b) =>
+          assert(b("c_index") == a("c_index"),
+            s"${m.name}: batched c_index ${b("c_index")} vs alone ${a("c_index")}")
+          assert(math.abs(b("brier_score") - a("brier_score")) < 1e-12,
+            s"${m.name}: batched brier_score ${b("brier_score")} vs alone ${a("brier_score")}")
+        }
+      } finally fitted.foreach(_.release())
+    }
+  }
+
+  test("scoring three models launches no more jobs than scoring one") {
+    val ds = churn
+    val fitted = models.map(_.fit(ds))
+    try TrainCache.sharing {
+      FittedSurvModel.scoreAll(ds, fitted.take(1)) // builds the shared split
+      val alone = fitted.zipWithIndex.map { case (f, i) =>
+        jobsOf(s"alone$i")(FittedSurvModel.scoreAll(ds, Seq(f)))._2
+      }
+      val all = jobsOf("all")(FittedSurvModel.scoreAll(ds, fitted))._2
+      // the CoxPH prediction runs jobs of its own (its baseline on the
+      // grid), in a batch as alone; the scoring pass adds none per model
+      assert(all <= alone.max, s"three models: $all jobs; one at a time: $alone")
+    } finally fitted.foreach(_.release())
   }
 
   test("an empty test split fails naming trainRatio and n") {
