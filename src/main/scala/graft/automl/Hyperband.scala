@@ -125,10 +125,12 @@ object ModelFactory {
   * embarrassingly parallel and run concurrently (`parallelism`
   * threads, one FAIR scheduler pool tag each — a session built with
   * spark.scheduler.mode=FAIR interleaves their jobs; FIFO still
-  * overlaps stages). The sync search then scores the whole rung in ONE
-  * scoring pass ([[graft.model.FittedSurvModel.scoreAll]]): one join
-  * and one collect, whatever the rung size. Selection is bit-identical
-  * to the sequential run: scores fold in config order.
+  * overlaps stages). The sync search takes a rung `parallelism`
+  * configs at a time: it fits them concurrently, then scores them in
+  * ONE scoring pass ([[graft.model.FittedSurvModel.scoreAll]]: one
+  * join and one collect) and releases them, so at most `parallelism`
+  * fitted models are held at once. Selection is bit-identical to the
+  * sequential run: scores fold in config order.
   */
 object Hyperband {
 
@@ -160,8 +162,9 @@ final class Hyperband(
     eta: Int = 3, // optimizer.py:31
     outputEpochs: Int = 200, // optimizer.py:33
     seedRng: Long = 42L,
-    // Concurrent config fits per rung (SURVEY §3.3), or evaluations
-    // in flight for async. Results are identical to sequential by
+    // Concurrent config fits per rung (SURVEY §3.3) — and, for sync,
+    // the configs scored per pass and fitted models held at once — or
+    // evaluations in flight for async. Results are identical to sequential by
     // construction: config sampling, scoring and the best-tracking fold
     // stay on the caller thread in config order; only the pure fit
     // work fans out. 1 = sequential.
@@ -222,8 +225,8 @@ final class Hyperband(
   /** One config's fit + lone score, as the async search runs it —
     * PURE (no search-state mutation), so evaluations can run
     * concurrently and the best-tracking fold stays a sequential pass
-    * ([[recordBest]]). The sync search fits a whole rung and scores it
-    * in one pass instead ([[evalRung]]).
+    * ([[recordBest]]). The sync search fits and scores a rung
+    * `parallelism` configs at a time instead ([[evalRung]]).
     *
     * Evaluations discard the fitted artifact (survivors re-fit at the
     * next rung's epoch budget): release its pinned caches or every
@@ -258,23 +261,39 @@ final class Hyperband(
     }
   }
 
-  /** Evaluates the rung `i` of bracket `s`: fits its configs —
-    * concurrently when `parallelism` > 1, each on its own thread inside
-    * its own Pins.held scope, tagged with a FAIR scheduler pool so a
-    * FAIR-mode session interleaves their jobs — then scores every
-    * fitted model in ONE pass ([[graft.model.FittedSurvModel.scoreAll]])
-    * on the caller thread, and only then releases each model and its
-    * scope. Scores come back in CONFIG ORDER regardless of completion
-    * order, so the best-tracking fold (and quirk H4) is bit-identical
-    * to the sequential run; each evaluation is appended to [[trace]].
-    *
-    * A failed fit fails the SEARCH with its own exception: the rung's
-    * queued and running siblings are cancelled, and every sibling that
-    * did fit is released before the exception leaves.
+  /** Evaluates the rung `i` of bracket `s`, `parallelism` configs at a
+    * time ([[fitAndScore]]). Scores come back in CONFIG ORDER regardless
+    * of completion order, so the best-tracking fold (and quirk H4) is
+    * bit-identical to the sequential run; each evaluation is appended
+    * to [[ashaTrace]].
     */
   private def evalRung(ds: SurvDataset, s: Int, i: Int,
                        configs: Seq[(ModelFactory, Map[String, Any])],
                        epochs: Int): Seq[Double] = {
+    val scores = configs.grouped(math.max(parallelism, 1))
+      .flatMap(fitAndScore(ds, _, epochs)).toSeq
+    configs.lazyZip(scores).foreach { case ((m, params), score) =>
+      recordBest(m, params, score)
+      ashaTrace += ((s, i, epochs, keyOf(m.name, params), score))
+    }
+    scores
+  }
+
+  /** Fits `configs` — concurrently when there are several, each on
+    * its own thread inside its own Pins.held scope, tagged with a FAIR
+    * scheduler pool so a FAIR-mode session interleaves their jobs —
+    * then scores every fitted model in ONE pass
+    * ([[graft.model.FittedSurvModel.scoreAll]]) on the caller thread,
+    * and only then releases each model and its scope. The caller passes
+    * at most `parallelism` configs, which bounds the fitted models held
+    * at once and the size of the pass's cached join.
+    *
+    * A failed fit fails the SEARCH with its own exception: the queued
+    * and running siblings are cancelled, and every sibling that did fit
+    * is released before the exception leaves.
+    */
+  private def fitAndScore(ds: SurvDataset, configs: Seq[(ModelFactory, Map[String, Any])],
+                          epochs: Int): Seq[Double] = {
     // slot idx: the fitted model and the release of the scope it was
     // fitted in; set by whichever thread fitted it
     val fits = new java.util.concurrent.atomic.AtomicReferenceArray[
@@ -283,26 +302,49 @@ final class Hyperband(
       val (m, params) = configs(idx)
       fits.set(idx, graft.core.Pins.held(m.build(params, epochs).fit(ds)))
     }
+    def held = configs.indices.map(fits.get).filter(_ != null)
     val scores =
       try {
-        if (parallelism <= 1 || configs.size <= 1) configs.indices.foreach(fit)
+        if (configs.size <= 1) configs.indices.foreach(fit)
         else fitConcurrently(ds, configs.size)(fit)
         graft.model.FittedSurvModel.scoreAll(ds, configs.indices.map(fits.get(_)._1))
           .map(objective)
-      } finally configs.indices.map(fits.get).filter(_ != null).foreach {
-        case (fitted, releaseScope) => try fitted.release() finally releaseScope()
+      } catch {
+        case e: Throwable =>
+          releaseAll(held).foreach(e.addSuppressed)
+          throw e
       }
-    configs.lazyZip(scores).foreach { case ((m, params), score) =>
-      recordBest(m, params, score)
-      trace += ((s, i, epochs, keyOf(m.name, params), score))
-    }
+    releaseAll(held).foreach(e => throw e)
     scores
   }
 
-  /** Runs `fit(0 until n)` on `parallelism` threads. The first failure
-    * cancels the rest and is rethrown as itself (not wrapped); the call
-    * returns only once no fit is running, so the caller's release of
-    * the fitted slots can never miss one that finishes late.
+  /** Releases every fitted model and then its scope, each in its own
+    * try, so one failed release cannot leave the rest pinned. Returns
+    * the first failure, with the others added to it as suppressed.
+    */
+  private def releaseAll(fitted: Seq[(FittedSurvModel, () => Unit)]): Option[Throwable] = {
+    var first: Option[Throwable] = None
+    def attempt(release: => Unit): Unit =
+      try release
+      catch {
+        case e: Throwable => first match {
+          case Some(f) => f.addSuppressed(e)
+          case None => first = Some(e)
+        }
+      }
+    fitted.foreach { case (model, releaseScope) =>
+      attempt(model.release())
+      attempt(releaseScope())
+    }
+    first
+  }
+
+  /** Runs `fit(0 until n)` on `min(parallelism, n)` threads. The first
+    * failure cancels the rest and is rethrown as itself (not wrapped);
+    * the call returns only once no fit is running, so the caller's
+    * release of the fitted slots can never miss one that finishes late.
+    * A cancelled fit that ignores its interrupt (a driver-side loop)
+    * holds that return up; each minute of it is logged.
     */
   private def fitConcurrently(ds: SurvDataset, n: Int)(fit: Int => Unit): Unit = {
     val sc = ds.df.sparkSession.sparkContext
@@ -333,8 +375,13 @@ final class Hyperband(
       }
     } finally {
       pool.shutdownNow()
-      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
-      ()
+      var waited = 0
+      while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) {
+        waited += 1
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"Hyperband: a cancelled fit is still running after $waited min; " +
+            "the rung's fitted models are released once it stops")
+      }
     }
   }
 
@@ -359,7 +406,7 @@ final class Hyperband(
   }
 
   private def runSync(ds: SurvDataset): Unit = {
-    trace.clear() // per-run trace: a reused instance must not mix runs
+    ashaTrace.clear() // per-run trace: a reused instance must not mix runs
     for (s <- sMax to 0 by -1) {
       val n = math.ceil(bBudget.toDouble / maxIter / (s + 1) * math.pow(eta, s)).toInt
       val r = maxIter * math.pow(eta, -s)
@@ -378,13 +425,13 @@ final class Hyperband(
   }
 
   /** The last search's evaluations: (bracket s, rung i, epochs, config
-    * key, score) — in config order, rung by rung, for the sync search;
-    * in completion order for ASHA. The spec's window into the rung
-    * ladders, promotion fractions and budgets.
+    * key, score) — in completion order for ASHA and, despite the name,
+    * also for the sync search, there in config order, rung by rung.
+    * The spec's window into the rung ladders, promotion fractions and
+    * budgets.
     */
-  private[automl] val trace =
+  private[automl] val ashaTrace =
     mutable.Buffer.empty[(Int, Int, Int, String, Double)]
-  private[automl] def ashaTrace: mutable.Buffer[(Int, Int, Int, String, Double)] = trace
 
   /** The asynchronous search: same brackets and budgets as [[runSync]],
     * no rung barriers. All shared search state (rung ledgers, promotion
@@ -392,7 +439,7 @@ final class Hyperband(
     * mutates only under ONE monitor; evaluation runs outside it.
     */
   private def runAsha(ds: SurvDataset): Unit = {
-    trace.clear() // per-run trace: a reused instance must not mix runs
+    ashaTrace.clear() // per-run trace: a reused instance must not mix runs
     val k = seeds.size
     final case class Cfg(m: ModelFactory, params: Map[String, Any]) {
       val key: String = keyOf(m.name, params)
@@ -523,7 +570,7 @@ final class Hyperband(
           lock.synchronized {
             b.completed(i) += ((cfg, score))
             recordBest(cfg.m, cfg.params, score)
-            trace += ((b.s, i, epochs, cfg.key, score))
+            ashaTrace += ((b.s, i, epochs, cfg.key, score))
             inflight -= 1
             lock.notifyAll()
           }

@@ -1,7 +1,8 @@
 package graft.eval
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** IPCW (integrated) Brier score over a time grid — the Spark design
   * of the reference's `integrated_brier_score(time_grid)` with
@@ -36,7 +37,8 @@ object BrierScore {
   def grid(df: DataFrame, idCol: String, tCol: String, eCol: String,
            surv: DataFrame, gridTimes: Array[Double]): DataFrame = {
     val split = ScoringSplit.build(df, idCol, tCol, eCol, gridTimes)
-    perTau(split, split.attach(surv, idCol)).drop(ScoringSplit.Cfg)
+    perTau(split, split.attach(surv.withColumn(ScoringSplit.Cfg, lit(0)), idCol))
+      .drop(ScoringSplit.Cfg)
   }
 
   /** Per-τ Brier scores (cfg, tau_idx, tau, bs), lazy, over `x` — the
@@ -58,31 +60,51 @@ object BrierScore {
       .withColumn("tau_idx", col("_pos") - 1)
       .withColumn("g_tau", element_at(array(split.gAtTau.map(lit(_)): _*), col("_pos")))
       .groupBy(col(ScoringSplit.Cfg), col("tau_idx"), col("tau"))
-      .agg(sum(contrib).as("_c"))
+      .agg(exactSum(contrib).as("_c"))
       .select(col(ScoringSplit.Cfg), col("tau_idx"), col("tau"),
         (col("_c") / lit(split.n.toDouble)).as("bs"))
   }
 
-  /** Trapezoid-integrated Brier score normalized by grid span — one
-    * row (cfg, ibs) per config of `gridBs` (cfg, tau_idx, tau, bs); a
-    * frame without a cfg column, such as [[grid]]'s, is one config,
-    * cfg 0.
+  /** Trapezoid-integrated Brier score normalized by grid span —
+    * single-row (ibs) over [[grid]]'s per-τ scores: the one-config
+    * case of [[integratedPerCfg]], cfg 0.
     */
-  def integrated(gridBs: DataFrame): DataFrame = {
+  def integrated(gridBs: DataFrame): DataFrame =
+    integratedPerCfg(gridBs.withColumn(ScoringSplit.Cfg, lit(0))).select(col("ibs"))
+
+  /** [[integrated]] per config: one row (cfg, ibs) per config of
+    * `gridBs` (cfg, tau_idx, tau, bs), as [[perTau]] returns it.
+    */
+  private[eval] def integratedPerCfg(gridBs: DataFrame): DataFrame = {
     val cfg = ScoringSplit.Cfg
-    val bs = if (gridBs.columns.contains(cfg)) gridBs else gridBs.withColumn(cfg, lit(0))
     // prev-row lookup as a shifted SELF-JOIN on the dense tau_idx —
     // window-free: a constant-key window still plans as a
     // single-partition WindowExec (Spark 4.1 eliminates even a
     // non-foldable constant partition key from the spec), whereas the
     // equi-join on a <= 100-row frame broadcasts. tau_idx is dense
     // (0..k-1 by construction), so idx-1 IS the previous grid point.
-    val prev = bs.select(col(cfg), (col("tau_idx") + 1).as("tau_idx"),
+    val prev = gridBs.select(col(cfg), (col("tau_idx") + 1).as("tau_idx"),
       col("bs").as("prev_bs"), col("tau").as("prev_tau"))
-    bs.join(broadcast(prev), Seq(cfg, "tau_idx"))
+    gridBs.join(broadcast(prev), Seq(cfg, "tau_idx"))
       .groupBy(col(cfg))
-      .agg((sum((col("bs") + col("prev_bs")) / 2.0 * (col("tau") - col("prev_tau")))
+      .agg((exactSum((col("bs") + col("prev_bs")) / 2.0 * (col("tau") - col("prev_tau")))
         / (max(col("tau")) - min(col("prev_tau")))).as("ibs"))
+  }
+
+  /** Σ of the non-negative double `c`, independent of the order of
+    * addition: finite terms are summed as DECIMAL, as
+    * `RelationalQueries.dsum` does. A config's rows spread over
+    * partitions differently in each batch it is scored in, and a double
+    * sum would add them in a different order, so the same model would
+    * score differently alone and in a rung, or at another
+    * `parallelism`. A non-finite term (a diverged model's NaN or ∞)
+    * gives what the double sum gives. A Brier term is at most n
+    * (S ≤ 1, G ≥ 1/n), so the sum fits DECIMAL(38, 18) up to n = 10^9.
+    */
+  private def exactSum(c: Column): Column = {
+    val finite = !isnan(c) && c =!= Double.PositiveInfinity
+    coalesce(max(when(!finite, c)),
+      sum(when(finite, c).cast(DecimalType(38, 18))).cast("double"))
   }
 
   /** The reference's default grid: 100 equidistant points over the

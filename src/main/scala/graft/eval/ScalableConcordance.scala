@@ -161,14 +161,14 @@ object ScalableConcordance {
     * τ(t_i) and the active τ set come from the split's
     * [[ScoringSplit]] — the same value `FittedSurvModel.scoreAll` reads,
     * which also takes the integrated Brier score from the same collect.
-    * This is the scoring path's one-config case: `surv` carries no
-    * config column, so [[ScoringSplit.attach]] tags it cfg 0.
+    * This is the scoring path's one-config case: `surv` is scored as
+    * cfg 0.
     */
   def antolini(df: DataFrame, idCol: String, tCol: String, eCol: String,
                surv: DataFrame, grid: Array[Double],
                numBuckets: Int = 16): DataFrame = graft.core.Pins.scoped {
     val split = ScoringSplit.build(df, idCol, tCol, eCol, grid)
-    val x = ScoringSplit.materialized(split.attach(surv, idCol))
+    val x = ScoringSplit.materialized(split.attach(surv.withColumn(Cfg, lit(0)), idCol))
     val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
       collectScalars(antoliniCounts(split, x, numBuckets), configs = 1).head
     val spark = df.sparkSession

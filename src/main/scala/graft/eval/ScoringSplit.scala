@@ -36,14 +36,12 @@ final case class ScoringSplit(
     activeTau: Array[Double]) {
 
   /** The prediction matrices `surv` (cfg, idCol, tau, s) joined to the
-    * subject facts: (cfg, id, tau, s, t, e, tau_i, g_ti), lazy. A
-    * matrix without a cfg column is one config, cfg 0.
+    * subject facts: (cfg, id, tau, s, t, e, tau_i, g_ti), lazy. The
+    * one-config entry points tag their matrix cfg 0 themselves.
     */
-  def attach(surv: DataFrame, idCol: String): DataFrame = {
-    val cfg = if (surv.columns.contains(ScoringSplit.Cfg)) col(ScoringSplit.Cfg) else lit(0)
-    surv.select(cfg.as(ScoringSplit.Cfg), col(idCol).as("id"), col("tau"), col("s"))
+  def attach(surv: DataFrame, idCol: String): DataFrame =
+    surv.select(col(ScoringSplit.Cfg), col(idCol).as("id"), col("tau"), col("s"))
       .join(subjects, Seq("id"))
-  }
 
   /** (c_index, brier_score) of each prediction matrix in `survs` (id,
     * tau, s) over [[grid]], in order: the matrices are tagged with
@@ -56,7 +54,7 @@ final case class ScoringSplit(
       s.select(lit(i).as(ScoringSplit.Cfg), col("id"), col("tau"), col("s"))
     }
     val x = ScoringSplit.materialized(attach(tagged.reduce(_.unionAll(_)), "id"))
-    val ibs = BrierScore.integrated(BrierScore.perTau(this, x))
+    val ibs = BrierScore.integratedPerCfg(BrierScore.perTau(this, x))
       .select(col(ScoringSplit.Cfg), col("ibs").as("v"))
     ScalableConcordance.collectScalars(
         ScalableConcordance.antoliniCounts(this, x, numBuckets = 16) :+ ibs, survs.size)

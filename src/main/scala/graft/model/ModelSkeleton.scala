@@ -31,20 +31,20 @@ trait FittedSurvModel {
     * same matrix with time horizons as the index
     * (model_cox_ph.py:106-110). Every score derives from this matrix
     * ([[FittedSurvModel.scoreAll]]); a fitted artifact that cannot
-    * predict (a test stub) throws `UnsupportedOperationException` here
-    * and must override [[score]].
+    * predict (a test stub) throws exactly `UnsupportedOperationException`
+    * here and overrides [[score]].
     */
   def predictSurv(tensorized: DataFrame, grid: Array[Double]): DataFrame
 
   /** Scores on the test split — c_index (Antolini concordance_td) and
     * brier_score (IPCW IBS over the 100-point grid), mirroring
-    * base.py:61-82: [[FittedSurvModel.scoreAll]] over this model alone,
-    * so a lone score and a rung's batched score are one implementation.
-    * A model whose [[predictSurv]] throws `UnsupportedOperationException`
-    * must override this: `scoreAll` scores such a model by calling it.
+    * base.py:61-82: the scoring pass of [[FittedSurvModel.scoreAll]]
+    * over this model alone, so a lone score and a rung's batched score
+    * are one implementation. This default never falls back: whatever
+    * [[predictSurv]] throws leaves as itself.
     */
   def score(ds: SurvDataset): Map[String, Double] =
-    FittedSurvModel.scoreAll(ds, Seq(this)).head
+    FittedSurvModel.scoreBatch(ds, Seq(this), ownScore = false).head
 }
 
 object FittedSurvModel {
@@ -62,17 +62,31 @@ object FittedSurvModel {
     * sharing scope (a Hyperband search) every rung reuses the one the
     * first score built; outside one it is built and released per call.
     *
-    * A model whose `predictSurv` throws `UnsupportedOperationException`
-    * is scored by its own [[FittedSurvModel.score]] instead.
+    * A model whose `predictSurv` throws exactly
+    * `UnsupportedOperationException` (not a subclass, such as Spark's
+    * `SparkUnsupportedOperationException`) is scored by its own
+    * [[FittedSurvModel.score]] instead; a model that does not override
+    * it then fails with that exception.
     */
   def scoreAll(ds: SurvDataset, models: Seq[FittedSurvModel]): Seq[Map[String, Double]] =
+    scoreBatch(ds, models, ownScore = true)
+
+  /** [[scoreAll]]'s pass; `ownScore` = whether a model that cannot
+    * predict is scored by its own `score`. The trait's default `score`
+    * passes false, so it can never call itself back.
+    */
+  private[model] def scoreBatch(ds: SurvDataset, models: Seq[FittedSurvModel],
+                                ownScore: Boolean): Seq[Map[String, Double]] =
     graft.core.Pins.scoped {
       val (split, release) = TrainCache.acquire(TrainCache.key("score_split", ds))(
         ScoringSplit.of(ds))
       try {
         val survs = models.map { m =>
           try Some(m.predictSurv(split.test, split.grid))
-          catch { case _: UnsupportedOperationException => None }
+          catch {
+            case e: UnsupportedOperationException
+                if ownScore && e.getClass == classOf[UnsupportedOperationException] => None
+          }
         }
         val batch = survs.flatten
         val scores = (if (batch.isEmpty) Nil else split.score(batch)).iterator

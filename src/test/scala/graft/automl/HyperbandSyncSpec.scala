@@ -4,7 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
-import graft.model.{FittedSurvModel, Param, SurvModel}
+import graft.model.{FittedSurvModel, FloatP, Param, SurvModel}
 import graft.surv.SurvDataset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -13,10 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** The sync search's rung evaluation: every config of a rung is fitted
-  * before the rung is scored in one pass, so a failed fit must release
-  * the siblings that did fit; and each evaluation is recorded in
-  * [[Hyperband.trace]] in config order.
+/** The sync search's rung evaluation: a rung is fitted and scored
+  * `parallelism` configs at a time, every config of such a batch fitted
+  * before it is scored in one pass, so no more than `parallelism`
+  * fitted models are held at once, and a failed fit or release must
+  * release the siblings that did fit; each evaluation is recorded in
+  * [[Hyperband.ashaTrace]] in config order.
   */
 class HyperbandSyncSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -71,6 +73,62 @@ class HyperbandSyncSpec extends AnyFunSuite {
     }
   }
 
+  /** Stub fits, no Spark work: each fitted model scores by its own
+    * `score` (its `predictSurv` throws), counts itself in `live` until
+    * released, and `maxLive` keeps the high-water mark. The release of
+    * the `failRelease`-th fitted model (1-based; 0 = none) throws.
+    */
+  private final class Held(live: AtomicInteger, maxLive: AtomicInteger,
+                           failRelease: Int = 0) extends ModelFactory {
+    val name = "held"
+    val space: Seq[Param] = Seq(FloatP("lr", 0.0, 1.0))
+    private val fits = new AtomicInteger()
+    def build(params: Map[String, Any], epochs: Int): SurvModel = new SurvModel {
+      def name: String = Held.this.name
+      def hyperparameterSpace: Seq[Param] = space
+      def fit(ds: SurvDataset): FittedSurvModel = {
+        val nth = fits.incrementAndGet()
+        val now = live.incrementAndGet()
+        maxLive.getAndUpdate(m => math.max(m, now))
+        val lr = params.getOrElse("lr", 0.5).asInstanceOf[Double]
+        new FittedSurvModel {
+          private var released = false
+          override def release(): Unit = synchronized {
+            if (!released) { released = true; live.decrementAndGet() }
+            if (nth == failRelease) throw new IllegalStateException("failing release")
+          }
+          def predictSurv(t: DataFrame, g: Array[Double]): DataFrame =
+            throw new UnsupportedOperationException("stub")
+          override def score(ds: SurvDataset): Map[String, Double] =
+            Map("c_index" -> (0.5 + 0.4 * math.sin(lr * 37.0 + epochs)), "brier_score" -> 0.1)
+        }
+      }
+    }
+  }
+
+  test("a rung of nine configs holds at most parallelism fitted models") {
+    val live = new AtomicInteger()
+    val maxLive = new AtomicInteger()
+    // maxIter 9, eta 3: the first bracket's first rung has nine configs
+    val hb = new Hyperband(seeds = Seq(new Held(live, maxLive)), maxIter = 9, eta = 3,
+      outputEpochs = 9, seedRng = 42L, parallelism = 2)
+    hb.selectModel(tinyDs).release()
+    assert(hb.ashaTrace.count(e => e._1 == 2 && e._2 == 0) == 9, hb.ashaTrace.toString)
+    assert(maxLive.get() == 2, s"held at most ${maxLive.get()} fitted models at once")
+    assert(live.get() == 0, s"${live.get()} fitted models left unreleased")
+  }
+
+  test("a failed release fails the search after releasing its siblings") {
+    val live = new AtomicInteger()
+    val maxLive = new AtomicInteger()
+    val hb = new Hyperband(seeds = Seq(new Held(live, maxLive, failRelease = 1)),
+      maxIter = 9, eta = 3, outputEpochs = 9, seedRng = 42L, parallelism = 4)
+    val e = intercept[IllegalStateException](hb.selectModel(tinyDs))
+    assert(e.getMessage == "failing release", e.toString)
+    assert(maxLive.get() == 4 && live.get() == 0,
+      s"held at most ${maxLive.get()}, left ${live.get()} unreleased")
+  }
+
   for (parallelism <- Seq(1, 4)) {
     test(s"a failed fit fails the search and releases its fitted siblings (parallelism $parallelism)") {
       val ds = tinyDs
@@ -98,7 +156,7 @@ class HyperbandSyncSpec extends AnyFunSuite {
     val ds = graft.surv.ChurnView.dataset(spark, "/root/testdata/sf0.001")
     val hb = new Hyperband(maxIter = 3, eta = 3, outputEpochs = 3, seedRng = 42L)
     hb.selectModel(ds).release()
-    val trace = hb.trace.toList
+    val trace = hb.ashaTrace.toList
     assert(trace.size == 7, trace.mkString("\n"))
     val rungs = trace.map(e => (e._1, e._2, e._3))
     val sizes = rungs.foldLeft(List.empty[((Int, Int, Int), Int)]) {

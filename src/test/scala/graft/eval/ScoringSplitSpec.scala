@@ -6,6 +6,7 @@ import graft.SparkTestBase
 import graft.model.{CoxPH, DeepHit, FittedSurvModel, LogisticHazard, TrainCache}
 import graft.surv.{ChurnView, Gbsg2Fixture, SurvDataset}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CacheProbe, bridge}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * test-split facts ([[ScoringSplit]]): the same c_index as the
   * pair-join reference, the same Brier score as a driver-side IPCW
   * reference, a batch of models scored as each alone in no more jobs
-  * than one, the split built once per sharing scope, and nothing left
+  * than one, a model that cannot predict failing with its own
+  * exception, the split built once per sharing scope, and nothing left
   * cached afterwards.
   */
 class ScoringSplitSpec extends AnyFunSuite {
@@ -102,7 +104,9 @@ class ScoringSplitSpec extends AnyFunSuite {
         models.lazyZip(alone).lazyZip(batch).foreach { (m, a, b) =>
           assert(b("c_index") == a("c_index"),
             s"${m.name}: batched c_index ${b("c_index")} vs alone ${a("c_index")}")
-          assert(math.abs(b("brier_score") - a("brier_score")) < 1e-12,
+          // bit for bit as well: the Brier sums do not depend on the
+          // order of addition, which the batch changes
+          assert(b("brier_score") == a("brier_score"),
             s"${m.name}: batched brier_score ${b("brier_score")} vs alone ${a("brier_score")}")
         }
       } finally fitted.foreach(_.release())
@@ -122,6 +126,28 @@ class ScoringSplitSpec extends AnyFunSuite {
       // grid), in a batch as alone; the scoring pass adds none per model
       assert(all <= alone.max, s"three models: $all jobs; one at a time: $alone")
     } finally fitted.foreach(_.release())
+  }
+
+  test("a model that cannot predict fails with its own exception unless it overrides score") {
+    val ds = gbsg2
+    val plain = new FittedSurvModel {
+      def predictSurv(t: DataFrame, g: Array[Double]): DataFrame =
+        throw new UnsupportedOperationException("no predictions")
+    }
+    // the default score never falls back to itself: no stack overflow
+    assert(intercept[UnsupportedOperationException](plain.score(ds)).getMessage ==
+      "no predictions")
+    assert(intercept[UnsupportedOperationException](
+      FittedSurvModel.scoreAll(ds, Seq(plain))).getMessage == "no predictions")
+    // only the exact class selects the model's own score, not a subclass
+    // (Spark's SparkUnsupportedOperationException is one)
+    final class Narrower extends UnsupportedOperationException("narrower")
+    val overriding = new FittedSurvModel {
+      def predictSurv(t: DataFrame, g: Array[Double]): DataFrame = throw new Narrower
+      override def score(ds: SurvDataset): Map[String, Double] =
+        Map("c_index" -> 0.5, "brier_score" -> 0.25)
+    }
+    intercept[Narrower](FittedSurvModel.scoreAll(ds, Seq(overriding)))
   }
 
   test("an empty test split fails naming trainRatio and n") {
