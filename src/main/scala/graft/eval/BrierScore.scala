@@ -1,8 +1,7 @@
 package graft.eval
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** IPCW (integrated) Brier score over a time grid — the Spark design
   * of the reference's `integrated_brier_score(time_grid)` with
@@ -22,9 +21,10 @@ import org.apache.spark.sql.types.DecimalType
   * grid, G(t_i⁻) per subject, N — comes from one [[ScoringSplit]];
   * the KM lookups run through [[KaplanMeier.lookup]] (no broadcast of
   * a continuous-time curve, no nested-loop join). The prediction
-  * matrix then needs one keyed equi-join to the subject table; G(τ)
-  * and the grid index attach as literal-array lookups on τ, and N
-  * divides in as a literal. One final groupBy(τ).
+  * matrix then needs one keyed equi-join to the subject table and one
+  * shuffle by (cfg, τ): the split's slice kernel sums each τ's terms
+  * exactly ([[exactSum]]), so BS(τ) does not depend on how the rows
+  * were partitioned, and a task holds one τ slice at a time.
   */
 object BrierScore {
 
@@ -35,76 +35,63 @@ object BrierScore {
     * path: `surv` is scored as cfg 0.
     */
   def grid(df: DataFrame, idCol: String, tCol: String, eCol: String,
-           surv: DataFrame, gridTimes: Array[Double]): DataFrame = {
-    val split = ScoringSplit.build(df, idCol, tCol, eCol, gridTimes)
-    perTau(split, split.attach(surv.withColumn(ScoringSplit.Cfg, lit(0)), idCol))
-      .drop(ScoringSplit.Cfg)
-  }
-
-  /** Per-τ Brier scores (cfg, tau_idx, tau, bs), lazy, over `x` — the
-    * split's [[ScoringSplit.attach]] join of a batch of prediction
-    * matrices, one config each.
-    */
-  private[eval] def perTau(split: ScoringSplit, x: DataFrame): DataFrame = {
-    // τ's 1-based grid position (0 = not a grid time: dropped, as the
-    // former equi-join on the grid dropped it)
-    val pos = array_position(array(split.grid.map(lit(_)): _*), col("tau")).cast("int")
-    val contrib =
-      when(col("t") <= col("tau") && col("e") === 1 && col("g_ti") > 0.0,
-        col("s") * col("s") / col("g_ti"))
-      .when(col("t") > col("tau") && col("g_tau") > 0.0,
-        (lit(1.0) - col("s")) * (lit(1.0) - col("s")) / col("g_tau"))
-      .otherwise(0.0)
-    x.withColumn("_pos", pos)
-      .filter(col("_pos") > 0)
-      .withColumn("tau_idx", col("_pos") - 1)
-      .withColumn("g_tau", element_at(array(split.gAtTau.map(lit(_)): _*), col("_pos")))
-      .groupBy(col(ScoringSplit.Cfg), col("tau_idx"), col("tau"))
-      .agg(exactSum(contrib).as("_c"))
-      .select(col(ScoringSplit.Cfg), col("tau_idx"), col("tau"),
-        (col("_c") / lit(split.n.toDouble)).as("bs"))
-  }
+           surv: DataFrame, gridTimes: Array[Double]): DataFrame =
+    ScoringSplit.build(df, idCol, tCol, eCol, gridTimes)
+      .slices(surv.withColumn(ScoringSplit.Cfg, lit(0)), idCol)
+      .select(col("tauIdx").as("tau_idx"), col("tau"), col("bs"))
 
   /** Trapezoid-integrated Brier score normalized by grid span —
-    * single-row (ibs) over [[grid]]'s per-τ scores: the one-config
-    * case of [[integratedPerCfg]], cfg 0.
+    * single-row (ibs) over [[grid]]'s per-τ scores, lazy: one
+    * aggregation that hands the scores to [[trapezoid]], the driver
+    * integration of the scoring path.
     */
-  def integrated(gridBs: DataFrame): DataFrame =
-    integratedPerCfg(gridBs.withColumn(ScoringSplit.Cfg, lit(0))).select(col("ibs"))
-
-  /** [[integrated]] per config: one row (cfg, ibs) per config of
-    * `gridBs` (cfg, tau_idx, tau, bs), as [[perTau]] returns it.
-    */
-  private[eval] def integratedPerCfg(gridBs: DataFrame): DataFrame = {
-    val cfg = ScoringSplit.Cfg
-    // prev-row lookup as a shifted SELF-JOIN on the dense tau_idx —
-    // window-free: a constant-key window still plans as a
-    // single-partition WindowExec (Spark 4.1 eliminates even a
-    // non-foldable constant partition key from the spec), whereas the
-    // equi-join on a <= 100-row frame broadcasts. tau_idx is dense
-    // (0..k-1 by construction), so idx-1 IS the previous grid point.
-    val prev = gridBs.select(col(cfg), (col("tau_idx") + 1).as("tau_idx"),
-      col("bs").as("prev_bs"), col("tau").as("prev_tau"))
-    gridBs.join(broadcast(prev), Seq(cfg, "tau_idx"))
-      .groupBy(col(cfg))
-      .agg((exactSum((col("bs") + col("prev_bs")) / 2.0 * (col("tau") - col("prev_tau")))
-        / (max(col("tau")) - min(col("prev_tau")))).as("ibs"))
+  def integrated(gridBs: DataFrame): DataFrame = {
+    val spark = gridBs.sparkSession
+    import spark.implicits._
+    gridBs.select(col("tau_idx"), col("tau"), col("bs")).as[(Int, Double, Double)]
+      .groupByKey(_ => 0)
+      .mapGroups((_, pts) => trapezoid(pts.toArray.sortBy(_._1)))
+      .toDF("ibs")
   }
 
-  /** Σ of the non-negative double `c`, independent of the order of
-    * addition: finite terms are summed as DECIMAL, as
-    * `RelationalQueries.dsum` does. A config's rows spread over
-    * partitions differently in each batch it is scored in, and a double
-    * sum would add them in a different order, so the same model would
-    * score differently alone and in a rung, or at another
-    * `parallelism`. A non-finite term (a diverged model's NaN or ∞)
-    * gives what the double sum gives. A Brier term is at most n
-    * (S ≤ 1, G ≥ 1/n), so the sum fits DECIMAL(38, 18) up to n = 10^9.
+  /** ∫ BS(τ) dτ by trapezoid over the per-τ scores `pts` (tau_idx, tau,
+    * bs), sorted by tau_idx, normalized by the span of the grid points
+    * it pairs. Only neighbouring grid points pair (a τ a matrix has no
+    * rows at is skipped); NaN when none do. The areas are summed by
+    * [[exactSum]].
     */
-  private def exactSum(c: Column): Column = {
-    val finite = !isnan(c) && c =!= Double.PositiveInfinity
-    coalesce(max(when(!finite, c)),
-      sum(when(finite, c).cast(DecimalType(38, 18))).cast("double"))
+  private[eval] def trapezoid(pts: Array[(Int, Double, Double)]): Double = {
+    val steps = pts.indices.drop(1).filter(k => pts(k)._1 == pts(k - 1)._1 + 1)
+    if (steps.isEmpty) Double.NaN
+    else {
+      val areas = steps.map(k => (pts(k)._3 + pts(k - 1)._3) / 2.0 * (pts(k)._2 - pts(k - 1)._2))
+      exactSum(areas.toArray, areas.size) /
+        (steps.map(k => pts(k)._2).reduce(math.max(_, _)) -
+          steps.map(k => pts(k - 1)._2).reduce(math.min(_, _)))
+    }
+  }
+
+  /** Subject i's IPCW term at grid time τ (the class doc's cases):
+    * `gTi` = G(t_i⁻), `gTau` = G(τ).
+    */
+  private[eval] def term(s: Double, t: Double, e: Int, tau: Double,
+                         gTi: Double, gTau: Double): Double =
+    if (t <= tau && e == 1 && gTi > 0.0) s * s / gTi
+    else if (t > tau && gTau > 0.0) (1.0 - s) * (1.0 - s) / gTau
+    else 0.0
+
+  /** Σ xs(0 until len), independent of the order of addition: every
+    * finite term is an exact `BigDecimal` and the sum is rounded to a
+    * double once. A config's rows spread over partitions differently in
+    * each batch it is scored in, so a double sum would score the same
+    * model differently alone and in a rung, or at another
+    * `parallelism`. Non-finite terms (a diverged model's NaN or ∞) give
+    * what the double sum gives: NaN if any is NaN, else ±∞.
+    */
+  private[eval] def exactSum(xs: Array[Double], len: Int): Double = {
+    val (finite, other) = xs.iterator.take(len).partition(java.lang.Double.isFinite)
+    if (other.hasNext) other.sum
+    else finite.foldLeft(java.math.BigDecimal.ZERO)(_ add new java.math.BigDecimal(_)).doubleValue
   }
 
   /** The reference's default grid: 100 equidistant points over the

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *     tunable via B).
   *
   * The comparable and ties counts need suffix sums over DISTINCT times
-  * (optionally within a risk / τ group). Those used ordered windows
+  * (optionally within a risk group). Those used ordered windows
   * through round 6 — a global `Window.orderBy(t)` serializes on one
   * partition when |distinct t| ≈ n (continuous time), and the keyed
   * windows buffered whole groups. Now: KEYED suffixes hash-partition
@@ -38,6 +38,11 @@ import org.apache.spark.sql.functions._
   * partial per partition, and all four come back in ONE collect that
   * the driver sums ([[collectScalars]]) — no final single-partition
   * aggregation stage per branch.
+  *
+  * [[antolini]] needs none of this machinery: its pairs fall apart into
+  * ≤ |grid| independent τ slices of n test rows each, so one shuffle
+  * by τ brings each slice to one task, which counts it exactly with
+  * one Fenwick sweep ([[sliceCounts]]) — the [[ScoringSplit]] kernel.
   */
 object ScalableConcordance {
 
@@ -89,8 +94,11 @@ object ScalableConcordance {
         .agg(count(lit(1)).as("m"), sum(col("e")).as("ev")),
       Seq(Cfg, "r"))
 
-    // ---- cross-bucket at EVENT points only (no dense t × bucket
-    // grid — see the antolini() comment for the union/prefix trick) ----
+    // ---- cross-bucket at EVENT points only, without the dense
+    // (t × bucket) grid: union the per-(b, t) data counts with one
+    // query row per (event t) × bucket, running-prefix-sum m ordered
+    // by (t, data-before-query), and read f = tot − prefix at the
+    // query rows — one window pass over O(rows) cells ----
     val perBT = sb.groupBy(col("b"), col("t")).agg(count(lit(1)).as("m"))
     val evT = sb.filter(col("e") === 1).select(col("t")).distinct()
     val allB = spark.range(0, bounds.length + 1L).select(col("id").cast("int").as("b"))
@@ -134,145 +142,85 @@ object ScalableConcordance {
     // column is one scored config: cfg 0.
     val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
       collectScalars(Seq(comparableDf, tiesDf, crossDf, withinDf), configs = 1).head
-    Seq(concordance(comparable, ties, cross, within))
+    Seq(concordance(comparable, ties, cross + within))
       .toDF("comparable", "concordant", "cindex")
   }
 
-  /** Antolini time-dependent C-index WITHOUT the quadratic pair join —
-    * same counting scheme as [[harrell]], with one extra leading key.
+  /** Antolini time-dependent C-index WITHOUT the quadratic pair join.
     *
     * Antolini compares S(t_i|x_i) vs S(t_i|x_j), so the compared score
     * depends on the pair only through τ(t_i) — the step grid point of
     * the event subject's time — and τ takes ≤ |grid| distinct values.
-    * Slicing the long-form `surv` matrix (id, tau, s) by ACTIVE τ
-    * (grid points hit by ≥1 event) gives, per slice, a plain Harrell
-    * problem with risk r = −S(τ|x): comparable/ties/cross/within are
-    * the identical suffix-sum + bucket-grid + Fenwick algebra with τ
-    * prepended to every grouping key, window partition, and shuffle
-    * key. Total work is O(|surv|) = O(n·|grid|) — the size of the
-    * prediction matrix the caller already materialized — vs the
-    * O(n_events·n) pair space of [[Concordance.antolini]].
-    *
-    * Buckets are equal-width on s ∈ [0, 1] (survival probabilities),
-    * a monotone map, so the counts are exact regardless of balance;
-    * B and spark.sql.shuffle.partitions bound per-task memory of the
-    * within-bucket sweep.
-    *
-    * τ(t_i) and the active τ set come from the split's
-    * [[ScoringSplit]] — the same value `FittedSurvModel.scoreAll` reads,
-    * which also takes the integrated Brier score from the same collect.
-    * This is the scoring path's one-config case: `surv` is scored as
-    * cfg 0.
+    * Slicing the long-form `surv` matrix (id, tau, s) by τ gives, per
+    * slice, a plain Harrell problem over the slice's events:
+    * [[sliceCounts]] counts it exactly in one descending-t sweep. The
+    * slices are the [[ScoringSplit]]'s (cfg, τ) kernel, which also sums
+    * the Brier terms — this is the scoring path's one-config case:
+    * `surv` is scored as cfg 0. Total work is O(|surv| log n), the size
+    * of the prediction matrix, vs the O(n_events·n) pair space of
+    * [[Concordance.antolini]]; a task holds one τ slice (the test
+    * rows) at a time.
     */
   def antolini(df: DataFrame, idCol: String, tCol: String, eCol: String,
-               surv: DataFrame, grid: Array[Double],
-               numBuckets: Int = 16): DataFrame = graft.core.Pins.scoped {
+               surv: DataFrame, grid: Array[Double]): DataFrame = graft.core.Pins.scoped {
     val split = ScoringSplit.build(df, idCol, tCol, eCol, grid)
-    val x = ScoringSplit.materialized(split.attach(surv.withColumn(Cfg, lit(0)), idCol))
-    val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
-      collectScalars(antoliniCounts(split, x, numBuckets), configs = 1).head
+    val c = ScoringSplit.concordance(split.slices(surv.withColumn(Cfg, lit(0)), idCol).collect())
     val spark = df.sparkSession
     import spark.implicits._
-    Seq(concordance(comparable, ties, cross, within))
-      .toDF("comparable", "concordant", "cindex")
+    Seq(c).toDF("comparable", "concordant", "cindex")
   }
 
-  /** Antolini's comparable / ties / cross / within counts as four
-    * branches of per-partition, per-config partials (cfg, v) for the
-    * caller's single [[collectScalars]]. `joined` is
-    * [[ScoringSplit.attach]]'s join, cached by the caller; its `cfg`
-    * column leads every grouping key, window partition and shuffle
-    * key, so the configs of a batch never meet in one count.
+  /** Antolini's counts over one (cfg, τ) slice of `len` subjects:
+    * (comparable, ties, concordant) over the pairs (i, j) with i's event
+    * at τ (`ev`) and t_j > t_i; tied when s_j = s_i, concordant when
+    * s_j > s_i. One sweep down the distinct t, each equal-t group
+    * querying a Fenwick tree over the slice's survival ranks before it
+    * inserts (so t_j > t_i strictly). Values compare as Spark SQL
+    * compares doubles — −0.0 is 0.0, NaN is the largest and equal to
+    * NaN — so the counts are exactly [[Concordance.antolini]]'s. A
+    * slice with no event counts nothing and skips the sweep.
     */
-  private[eval] def antoliniCounts(split: ScoringSplit, joined: DataFrame,
-                                   numBuckets: Int): Seq[DataFrame] = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-
-    // One Harrell slice per active τ: every subject once, as risk
-    // r = −s(τ|x); the event flag is LOCAL to the subject's own slice.
-    val x = joined.filter(col("tau").isin(split.activeTau.toIndexedSeq: _*))
-      .select(col(Cfg), col("tau"), col("t"), negate(col("s").cast("double")).as("r"),
-        when(col("e") === 1 && col("tau_i") === col("tau"), 1)
-          .otherwise(0).as("ei"))
-
-    // Suffix counts per τ (and per (τ, r) for ties) via the keyed
-    // streaming scan — hash-partitioned on the key, sorted within, so
-    // each branch stays one lazy plan inside the single counting job.
-    // Parallelism = #keys (≥ |active τ|, vs ONE partition for the old
-    // per-τ window), memory O(1) per task (the window buffered whole
-    // τ slices).
-    val comparableDf = evAfterKeyedDf(
-      x.groupBy(col(Cfg), col("tau"), col("t"))
-        .agg(count(lit(1)).as("m"), sum(col("ei")).as("ev")),
-      Seq(Cfg, "tau"))
-
-    val tiesDf = evAfterKeyedDf(
-      x.groupBy(col(Cfg), col("tau"), col("r"), col("t"))
-        .agg(count(lit(1)).as("m"), sum(col("ei")).as("ev")),
-      Seq(Cfg, "tau", "r"))
-
-    // b monotone in r: r = −s ∈ [−1, 0] → equal-width cells, clamped.
-    val b = greatest(lit(0), least(lit(numBuckets - 1),
-      floor((col("r") + 1.0) * numBuckets).cast("int")))
-    val xb = x.withColumn("b", b)
-
-    // Cross-bucket counts at EVENT points only, without completing the
-    // (τ × t × bucket) grid (that crossJoin is O(|τ|·|t|·B) rows — a
-    // scale blowup): union the per-(τ,b,t) data counts with one query
-    // row per (event (τ,t)) × bucket, running-prefix-sum m ordered by
-    // (t, data-before-query), and read f = tot − prefix at the query
-    // rows. One window pass over O(|x|) rows instead of the dense grid.
-    // The B query rows per event point come from a scan-fused explode:
-    // a cross join with a bucket range would be a nested-loop join whose
-    // size estimate (the product of both sides) grows with the batch
-    // and plans the joins above it as shuffles that AQE only demotes
-    // to broadcasts after running them.
-    val perBT = xb.groupBy(col(Cfg), col("tau"), col("b"), col("t")).agg(count(lit(1)).as("m"))
-    val evT = xb.filter(col("ei") === 1).select(col(Cfg), col("tau"), col("t")).distinct()
-    val u = perBT.select(col(Cfg), col("tau"), col("b"), col("t"), col("m"), lit(0).as("q"))
-      .unionAll(evT.select(col(Cfg), col("tau"),
-        explode(sequence(lit(0), lit(numBuckets - 1))).as("b"), col("t"),
-        lit(0L).as("m"), lit(1).as("q")))
-    val wBT = Window.partitionBy(col(Cfg), col("tau"), col("b"))
-    val cells = u
-      .withColumn("pref", // Σ m with t' <= t (data rows sort before queries)
-        sum(col("m")).over(wBT.orderBy(col("t"), col("q"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("tot", sum(col("m")).over(wBT))
-      .filter(col("q") === 1)
-      .withColumn("f", col("tot") - col("pref")) // # in (τ,b) with t_j > t
-      .withColumn("g", // Σ_{b' <= b} f(τ, b', t)
-        sum(col("f")).over(Window.partitionBy(col(Cfg), col("tau"), col("t")).orderBy(col("b"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val evTB = xb.filter(col("ei") === 1)
-      .groupBy(col(Cfg), col("tau"), col("t"), col("b")).agg(count(lit(1)).as("ev"))
-    val crossDf = evTB
-      .join(cells.select(col(Cfg), col("tau"), col("t"), (col("b") + 1).as("b"), col("g")),
-        Seq(Cfg, "tau", "t", "b"), "left")
-      .select(col(Cfg), (col("ev") * coalesce(col("g"), lit(0L))).as("v"))
-      .transform(partitionSums)
-
-    val withinDf = xb.select(col(Cfg), col("tau"), col("b"), col("t"), col("ei"), col("r"))
-      .repartition(col(Cfg), col("tau"), col("b"))
-      .as[(Int, Double, Int, Double, Int, Double)]
-      .mapPartitions { it =>
-        sumByCfg(it.toSeq.groupBy(p => (p._1, p._2, p._3)).iterator.map { case (k, rows) =>
-          (k._1, countWithin(rows.map(p => (p._4, p._5, p._6))))
-        })
-      }.toDF(Cfg, "v")
-
-    // branches independent over the cached join → concurrently
-    // scheduled stages of the caller's one collect
-    Seq(comparableDf, tiesDf, crossDf, withinDf)
+  private[eval] def sliceCounts(t: Array[Double], ev: Array[Boolean], s: Array[Double],
+                                len: Int): (Long, Long, Long) = {
+    if (!ev.iterator.take(len).contains(true)) return (0L, 0L, 0L)
+    val sRank = ranks(s, len)
+    val tRank = ranks(t, len)
+    val byT = (0 until len).groupBy(tRank(_)) // dense ranks: every group exists
+    val bit = new Fenwick(sRank.max + 1)
+    var inserted, comparable, ties, concordant = 0L
+    for (g <- tRank.max to 0 by -1; group = byT(g)) {
+      for (i <- group if ev(i)) {
+        val atMost = bit.queryBelow(sRank(i) + 1)
+        val below = bit.queryBelow(sRank(i))
+        comparable += inserted
+        ties += atMost - below
+        concordant += inserted - atMost
+      }
+      group.foreach(i => bit.add(sRank(i)))
+      inserted += group.size
+    }
+    (comparable, ties, concordant)
   }
 
-  /** (comparable, concordant, cindex) from the four counts; ties
-    * score 0.5.
+  /** Dense ranks of xs(0 until len) in Spark SQL's double order: −0.0
+    * folded into 0.0, every NaN the largest value and one rank.
     */
-  private[eval] def concordance(comparable: Long, ties: Long, cross: Long,
-                                within: Long): (Long, Double, Double) = {
-    val concordant = cross + within + 0.5 * ties
+  private def ranks(xs: Array[Double], len: Int): Array[Int] = {
+    val v = Array.tabulate(len)(i => if (xs(i) == 0.0) 0.0 else xs(i))
+    val distinct = v.clone()
+    java.util.Arrays.sort(distinct) // NaN last
+    var m = 0
+    for (x <- distinct)
+      if (m == 0 || java.lang.Double.compare(x, distinct(m - 1)) != 0) { distinct(m) = x; m += 1 }
+    v.map(java.util.Arrays.binarySearch(distinct, 0, m, _))
+  }
+
+  /** (comparable, concordant, cindex) from the pair counts: strictly
+    * concordant pairs score 1, ties 0.5.
+    */
+  private[eval] def concordance(comparable: Long, ties: Long,
+                                strict: Long): (Long, Double, Double) = {
+    val concordant = strict + 0.5 * ties
     (comparable, concordant, concordant / comparable.toDouble)
   }
 
@@ -300,7 +248,7 @@ object ScalableConcordance {
     * a key's whole run is then contained in a single partition, so
     * Σ ev · #(same key, larger t) streams per partition with O(1)
     * state and no cross-partition carries, no window buffering, and
-    * no prep jobs. Parallelism is #distinct keys (τ / risk granular);
+    * no prep jobs. Parallelism is #distinct keys (risk granular);
     * the KEYLESS global suffix is the one case that needs the sampled
     * range scan instead. The keys lead with the config column `cfg`,
     * and each partition yields one partial (cfg, v) per config in it.
@@ -367,7 +315,7 @@ object ScalableConcordance {
       .sortWithinPartitions(sortExprs: _*)
     // RDD-level persist shared by object across both passes (same
     // contract as KaplanMeier.curveExpr: one sampled partitioning;
-    // released with the calling harrell/antolini scope).
+    // released with the calling harrell scope).
     val rows = graft.core.Pins.pinRdd(g.rdd)
     def keyOf(r: Row): Seq[Any] = Seq.tabulate(k)(r.get)
 
@@ -448,32 +396,18 @@ object ScalableConcordance {
     acc.iterator
   }
 
-  /** Collect N independent scalars for each of `configs` configs in ONE
+  /** Collect N independent counts for each of `configs` configs in ONE
     * job: tag each branch, union, collect, read back per config in
-    * branch order. Every branch is (cfg, v), cfg in [0, configs). A
-    * long branch may yield one partial per partition and config — its
-    * scalar is their exact sum (0 when none); a double branch yields
-    * exactly one row per config. Longs and doubles ride separate
-    * columns, so no count is widened to a double.
+    * branch order. Every branch is (cfg, v: long), cfg in [0, configs),
+    * and may yield one partial per partition and config — its count is
+    * their exact sum (0 when none).
     */
   private[eval] def collectScalars(branches: Seq[DataFrame],
-                                   configs: Int): IndexedSeq[Seq[Any]] = {
-    val isLong = branches.map(_.schema("v").dataType == org.apache.spark.sql.types.LongType)
-    val tagged = branches.zipWithIndex.map { case (b, i) =>
-      b.select(lit(i).as("k"), col(Cfg),
-        (if (isLong(i)) col("v") else lit(null).cast("long")).as("l"),
-        (if (isLong(i)) lit(null).cast("double") else col("v").cast("double")).as("d"))
-    }
+                                   configs: Int): IndexedSeq[Seq[Long]] = {
+    val tagged = branches.zipWithIndex.map { case (b, i) => b.select(lit(i).as("k"), col(Cfg), col("v")) }
     val rows = tagged.reduce(_.unionAll(_)).collect().groupBy(r => (r.getInt(0), r.getInt(1)))
     (0 until configs).map { c =>
-      branches.indices.map { i =>
-        val rs = rows.getOrElse((i, c), Array.empty[Row])
-        if (isLong(i)) rs.map(_.getLong(2)).sum
-        else {
-          require(rs.length == 1, s"scalar branch $i returned ${rs.length} rows for cfg $c")
-          rs.head.getDouble(3)
-        }
-      }
+      branches.indices.map(i => rows.getOrElse((i, c), Array.empty[Row]).map(_.getLong(2)).sum)
     }
   }
 

@@ -1,7 +1,9 @@
 package graft.eval
 
+import java.util.Arrays.copyOf
+
 import graft.core.Pins
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** The facts both test-split scores need that depend on the test split
@@ -17,50 +19,63 @@ import org.apache.spark.sql.functions._
   *  - `gAtTau`: the censoring survival G(τ) at each grid point;
   *  - `subjects`: pinned (id, t, e, tau_i, g_ti) — each subject's
   *    step grid point τ(t_i) and its strict IPCW weight G(t_i⁻);
-  *  - `n`: the number of test rows (the Brier denominator);
-  *  - `activeTau`: the grid points hit by ≥ 1 event (the C-index
-  *    slices), sorted.
+  *  - `n`: the number of test rows (the Brier denominator).
   *
-  * Both arrays are bounded by the grid; the subject table stays
+  * The arrays are bounded by the grid; the subject table stays
   * distributed. Scoring a batch of prediction matrices — one per
-  * config, a whole Hyperband rung — is then one join ([[attach]]) and
-  * one collect ([[score]]), whatever the batch size: every count and
-  * Brier sum is keyed by the matrix's config index `cfg`.
+  * config, a whole Hyperband rung — is one keyed shuffle whatever the
+  * batch size ([[slices]]): the matrices, tagged with their config
+  * index `cfg`, join the subject table, are hash-partitioned by
+  * (cfg, τ), and one kernel scores each (cfg, τ) slice — its exact
+  * Brier sum and, where an event falls at τ, its Antolini pair
+  * counts. One collect brings back at most configs × |grid| rows; the
+  * driver adds up the counts and integrates the Brier scores per
+  * config. A task holds one slice at a time — the slice's test rows as
+  * primitive arrays.
   */
 final case class ScoringSplit(
     test: DataFrame,
     grid: Array[Double],
     gAtTau: Array[Double],
     subjects: DataFrame,
-    n: Long,
-    activeTau: Array[Double]) {
+    n: Long) {
 
-  /** The prediction matrices `surv` (cfg, idCol, tau, s) joined to the
-    * subject facts: (cfg, id, tau, s, t, e, tau_i, g_ti), lazy. The
-    * one-config entry points tag their matrix cfg 0 themselves.
+  /** One [[ScoringSplit.SliceScore]] per (cfg, τ) slice of the
+    * prediction matrices `surv` (cfg, idCol, tau, s), lazy; τ outside
+    * the grid is dropped. The rows of a slice are sorted together
+    * within their partition, so the kernel reads them one slice at a
+    * time.
     */
-  def attach(surv: DataFrame, idCol: String): DataFrame =
+  private[eval] def slices(surv: DataFrame, idCol: String): Dataset[ScoringSplit.SliceScore] = {
+    val spark = surv.sparkSession
+    import spark.implicits._
+    // the kernel's closure takes the arrays, not the split's frames
+    val (grid, gAtTau, n) = (this.grid, this.gAtTau, this.n)
     surv.select(col(ScoringSplit.Cfg), col(idCol).as("id"), col("tau"), col("s"))
       .join(subjects, Seq("id"))
+      .select(col(ScoringSplit.Cfg), col("tau"), col("s"), col("t"), col("e"),
+        // the subject's event falls in this slice
+        coalesce(col("e") === 1 && col("tau_i") === col("tau"), lit(false)),
+        coalesce(col("g_ti"), lit(0.0)))
+      .repartition(col(ScoringSplit.Cfg), col("tau"))
+      .sortWithinPartitions(ScoringSplit.Cfg, "tau")
+      .as[(Int, Double, Double, Double, Int, Boolean, Double)]
+      .mapPartitions(ScoringSplit.kernel(_, grid, gAtTau, n))
+  }
 
   /** (c_index, brier_score) of each prediction matrix in `survs` (id,
     * tau, s) over [[grid]], in order: the matrices are tagged with
-    * their index, unioned and joined to the subject table once, and
-    * every config's Antolini counts and integrated Brier score come
-    * back from ONE collect.
+    * their index and scored in ONE pass ([[slices]]).
     */
-  def score(survs: Seq[DataFrame]): Seq[(Double, Double)] = Pins.scoped {
+  def score(survs: Seq[DataFrame]): Seq[(Double, Double)] = {
     val tagged = survs.zipWithIndex.map { case (s, i) =>
       s.select(lit(i).as(ScoringSplit.Cfg), col("id"), col("tau"), col("s"))
     }
-    val x = ScoringSplit.materialized(attach(tagged.reduce(_.unionAll(_)), "id"))
-    val ibs = BrierScore.integratedPerCfg(BrierScore.perTau(this, x))
-      .select(col(ScoringSplit.Cfg), col("ibs").as("v"))
-    ScalableConcordance.collectScalars(
-        ScalableConcordance.antoliniCounts(this, x, numBuckets = 16) :+ ibs, survs.size)
-      .map { case Seq(comparable: Long, ties: Long, cross: Long, within: Long, brier: Double) =>
-        (ScalableConcordance.concordance(comparable, ties, cross, within)._3, brier)
-      }
+    val byCfg = slices(tagged.reduce(_.unionAll(_)), "id").collect().groupBy(_.cfg)
+    survs.indices.map { c =>
+      val ss = byCfg.getOrElse(c, Array.empty[ScoringSplit.SliceScore]).sortBy(_.tauIdx)
+      (ScoringSplit.concordance(ss)._3, BrierScore.trapezoid(ss.map(x => (x.tauIdx, x.tau, x.bs))))
+    }
   }
 }
 
@@ -68,6 +83,17 @@ object ScoringSplit {
 
   /** The column that tells the configs of a scored batch apart. */
   private[eval] val Cfg = "cfg"
+
+  /** One (cfg, τ) slice scored: τ's grid index, its Brier score BS(τ),
+    * and its Antolini pair counts (0 at a τ no event falls at).
+    */
+  private[eval] final case class SliceScore(cfg: Int, tauIdx: Int, tau: Double, bs: Double,
+                                            comparable: Long, ties: Long, concordant: Long)
+
+  /** (comparable, concordant, cindex) of one config's slices. */
+  private[eval] def concordance(ss: Array[SliceScore]): (Long, Double, Double) =
+    ScalableConcordance.concordance(ss.map(_.comparable).sum, ss.map(_.ties).sum,
+      ss.map(_.concordant).sum)
 
   /** The scoring facts of a dataset's test split, over the reference's
     * default 100-point grid. Fails, naming the split, when the test
@@ -105,7 +131,7 @@ object ScoringSplit {
     // The censoring KM's and the lookups' own pins (the range-scan RDDs
     // of a large curve) go to a nested scope: after the build only the
     // pinned subject table is read, so they are dropped as soon as the
-    // facts job below has filled it.
+    // count below has filled it.
     val ((gAtTau, gAtTi), releaseKm) = Pins.held {
       val cens = KaplanMeier.censoringCurve(df, tCol, eCol)
       // G(τ) per grid point, back in grid order (the lookup may reorder)
@@ -114,26 +140,60 @@ object ScoringSplit {
         .as[(Double, Double)].collect().toMap
       (grid.map(gByTau), KaplanMeier.lookup(base, "t", cens, strict = true, "g_ti"))
     }
-    // one job: materializes the subject table, counts it, and collects
-    // the active τ set (collect_set skips the non-event nulls)
-    val (subjects, facts) = try {
+    // one job: materializes the subject table and counts it
+    val (subjects, n) = try {
       val s = Pins.pin(gAtTi)
-      (s, s.agg(count(lit(1)), collect_set(when(col("e") === 1, col("tau_i")))).head())
+      (s, s.count())
     } finally releaseKm()
-    ScoringSplit(df, grid, gAtTau, subjects, facts.getLong(0),
-      facts.getSeq[Double](1).sorted.toArray)
+    ScoringSplit(df, grid, gAtTau, subjects, n)
   }
 
-  /** Pins `x` and fills its cache with one job, so the branches of the
-    * single collect that follows read the cache instead of each
-    * recomputing it. The rows are counted per partition on the cached
-    * scan itself: a `Dataset.count` adds an aggregation exchange (one
-    * more job) as soon as `x` has more than one partition, as a batch
-    * of several configs does.
+  /** The slice kernel: the rows of one partition, (cfg, tau, s, t, e,
+    * event-at-τ, g_ti) sorted by (cfg, τ), scored one slice at a time —
+    * [[BrierScore.term]]s summed exactly ([[BrierScore.exactSum]]) and
+    * divided by n, and the pair counts of
+    * [[ScalableConcordance.sliceCounts]].
     */
-  private[eval] def materialized(x: DataFrame): DataFrame = {
-    val p = Pins.pin(x)
-    p.queryExecution.toRdd.count()
-    p
+  private def kernel(rows: Iterator[(Int, Double, Double, Double, Int, Boolean, Double)],
+                     grid: Array[Double], gAtTau: Array[Double],
+                     n: Long): Iterator[SliceScore] = {
+    // grid equality as SQL's: −0.0 is 0.0
+    def key(tau: Double): Long = java.lang.Double.doubleToLongBits(if (tau == 0.0) 0.0 else tau)
+    val pos = grid.indices.map(i => key(grid(i)) -> i).toMap
+    val in = rows.buffered
+    val sl = new Slice
+    val out = scala.collection.mutable.ArrayBuffer.empty[SliceScore]
+    while (in.hasNext) {
+      val (cfg, tau) = (in.head._1, in.head._2)
+      val i = pos.getOrElse(key(tau), -1) // -1: not a grid time
+      val gTau = if (i >= 0) gAtTau(i) else 0.0
+      sl.size = 0
+      while (in.hasNext && in.head._1 == cfg && key(in.head._2) == key(tau)) {
+        val (_, _, s, t, e, ev, gTi) = in.next()
+        sl.add(t, ev, s, BrierScore.term(s, t, e, tau, gTi, gTau))
+      }
+      if (i >= 0) {
+        val (comparable, ties, concordant) = ScalableConcordance.sliceCounts(sl.t, sl.ev, sl.s, sl.size)
+        out += SliceScore(cfg, i, tau, BrierScore.exactSum(sl.bs, sl.size) / n.toDouble,
+          comparable, ties, concordant)
+      }
+    }
+    out.iterator
+  }
+
+  /** One slice's rows as growable primitive arrays. */
+  private final class Slice {
+    var size = 0
+    var t, s, bs = new Array[Double](64)
+    var ev = new Array[Boolean](64)
+
+    def add(ti: Double, evi: Boolean, si: Double, bsi: Double): Unit = {
+      if (size == t.length) {
+        t = copyOf(t, 2 * size); s = copyOf(s, 2 * size); bs = copyOf(bs, 2 * size)
+        ev = copyOf(ev, 2 * size)
+      }
+      t(size) = ti; ev(size) = evi; s(size) = si; bs(size) = bsi
+      size += 1
+    }
   }
 }

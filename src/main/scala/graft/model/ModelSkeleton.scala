@@ -52,12 +52,13 @@ object FittedSurvModel {
   /** Scores `models` on the test split of `ds`, in order, in ONE
     * scoring pass: each model's prediction matrix
     * (`predictSurv(split.test, split.grid)`) is tagged with its index,
-    * the union joins the split's subject table once, and one collect
-    * returns every model's four Antolini counts and integrated Brier
-    * score. The jobs of the pass do not grow with the number of models.
+    * the union joins the split's subject table once and is shuffled by
+    * (cfg, τ), and one collect returns every model's Antolini counts
+    * and Brier score per τ ([[graft.eval.ScoringSplit.score]]). The
+    * jobs of the pass do not grow with the number of models.
     *
     * The model-independent facts of the test split (tensorized rows,
-    * grid, censoring KM weights, N, active τ) are one
+    * grid, censoring KM weights, N) are one
     * [[graft.eval.ScoringSplit]] taken through [[TrainCache]]: inside a
     * sharing scope (a Hyperband search) every rung reuses the one the
     * first score built; outside one it is built and released per call.

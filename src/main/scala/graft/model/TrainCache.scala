@@ -14,7 +14,7 @@ import java.util.concurrent.ConcurrentHashMap
   * training math — dominates rung cost. Scoring has the same shape:
   * every config is scored on the same test split, and the split's
   * scoring facts ([[graft.eval.ScoringSplit]]: tensorized test rows,
-  * grid, censoring-KM weights, N, active τ) do not depend on the
+  * grid, censoring-KM weights, N) do not depend on the
   * config, so [[FittedSurvModel.score]] takes them through [[acquire]]
   * too (key `score_split`).
   *

@@ -86,14 +86,14 @@ object EvalQueries {
         parametricSurv(test, grid), grid)
     }),
 
-    // §2.7/§7.5 the 100-TB path for Antolini: counting aggregation
-    // sliced per survival-grid step — must produce the identical row
-    // as q_cindex_td (same algebra as q_cindex_sorted vs q_cindex).
+    // §2.7/§7.5 the 100-TB path for Antolini: pair counting sliced
+    // per survival-grid step (the scoring path's slice kernel) — must
+    // produce the identical row as q_cindex_td.
     "q_cindex_td_sorted" -> ((s, dir) => {
       val test = testWithRisk(s, dir)
       val grid = BrierScore.defaultGrid(test, "t")
       graft.eval.ScalableConcordance.antolini(test, "id", "t", "e",
-        parametricSurv(test, grid), grid, numBuckets = 16)
+        parametricSurv(test, grid), grid)
     }),
 
     // §2.7 per-τ IPCW Brier over the reference's 100-point grid.

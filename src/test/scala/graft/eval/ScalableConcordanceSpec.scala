@@ -7,7 +7,7 @@ import scala.util.Random
 
 /** The sort-based C-index must equal the pair-join C-index exactly,
   * including risk ties (0.5 credit) and time ties (excluded), across
-  * bucket counts.
+  * Harrell's bucket counts.
   */
 class ScalableConcordanceSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -37,7 +37,7 @@ class ScalableConcordanceSpec extends AnyFunSuite {
   test("matches pair-join antolini exactly on tie-heavy data") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    for ((n, seed, buckets) <- Seq((150, 4L, 4), (250, 5L, 16))) {
+    for ((n, seed) <- Seq((150, 4L), (250, 5L))) {
       val rng = new Random(seed)
       val df = (0 until n).map { i =>
         (i.toLong, 1.0 + rng.nextInt(15).toDouble, rng.nextInt(2),
@@ -49,11 +49,11 @@ class ScalableConcordanceSpec extends AnyFunSuite {
       val surv = df.crossJoin(g).select(col("id"), col("tau"),
         round(exp(-col("r") * col("tau") / 10.0), 1).as("s"))
       val slow = Concordance.antolini(df, "id", "t", "e", surv, grid).head()
-      val fast = ScalableConcordance.antolini(df, "id", "t", "e", surv, grid, buckets).head()
+      val fast = ScalableConcordance.antolini(df, "id", "t", "e", surv, grid).head()
       assert(fast.getLong(0) == slow.getLong(0),
-        s"comparable n=$n b=$buckets: ${fast.getLong(0)} != ${slow.getLong(0)}")
+        s"comparable n=$n: ${fast.getLong(0)} != ${slow.getLong(0)}")
       assert(fast.getDouble(1) == slow.getDouble(1),
-        s"concordant n=$n b=$buckets: ${fast.getDouble(1)} != ${slow.getDouble(1)}")
+        s"concordant n=$n: ${fast.getDouble(1)} != ${slow.getDouble(1)}")
     }
   }
 
