@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the row-level work is ONE shuffle (groupBy t with
   * map-side partial agg); the cumulative statistics over the grouped
-  * distinct-time table then use the distributed three-pass range scan
-  * (range-partition by t + per-partition summaries + driver carry +
+  * distinct-time table then use a [[graft.core.CarryScan]] over the
+  * range-partitioned rows (per-partition summaries + driver carry +
   * seeded per-partition scan) instead of a single-partition ordered
   * window, so the curve survives continuous-time data where
   * |distinct t| ≈ n. The at-risk counts are integer sums (exact, any
@@ -60,45 +60,34 @@ object KaplanMeier {
       .sortWithinPartitions(col("t"))
       .select(col("t"), col("d"), col("m"))
 
-    // RDD-level persist, shared BY OBJECT across the three passes: the
-    // partitioning (RangePartitioner's sampled bounds) is computed once
-    // for this one RDD, so the per-partition carries below can never
-    // disagree with the emit pass. Registered with Pins so an enclosing
-    // cache scope (Hyperband config evaluation, bench query) releases
-    // it deterministically; outside a scope the ContextCleaner still
-    // auto-unpersists once the returned DataFrame is unreachable.
-    val rows = graft.core.Pins.pinRdd(g.rdd)
+    val scan = new graft.core.CarryScan(g.rdd)
 
     // Pass 1: per-partition subject counts → suffix carries for n
-    // (n_t = Σ_{t' >= t} m; integer sums — association-free).
-    val mSums = rows.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single(pid -> it.map(_.getLong(2)).sum)
-    }.collect().sortBy(_._1).map(_._2)
-    // at-risk seed for partition p: Σ m over partitions >= p (the scan
-    // then decrements row by row, so n at each row is the full
-    // suffix count including that row's subjects)
-    val mFrom = mSums.scanRight(0L)(_ + _).init
+    // (n_t = Σ_{t' >= t} m; integer sums — association-free). The
+    // at-risk seed for partition p is Σ m over partitions >= p (the
+    // scan then decrements row by row, so n at each row is the full
+    // suffix count including that row's subjects).
+    val mFrom = scan.partials(_.map(_.getLong(2)).sum).scanRight(0L)(_ + _).init
 
     // Pass 2: per-partition KM factor products (ascending-t,
     // left-to-right) → driver-side carry C_p = Π over partitions < p,
     // also combined left-to-right.
-    val fProds = rows.mapPartitionsWithIndex { (pid, it) =>
-      var atRisk = mFrom(pid)
+    val carry = scan.seeded(mFrom) { (m0, it) =>
+      var atRisk = m0
       var prod = 1.0
       it.foreach { r =>
         val d = r.getLong(1); val m = r.getLong(2)
         prod = prod * (1.0 - d.toDouble / atRisk.toDouble)
         atRisk -= m
       }
-      Iterator.single(pid -> prod)
-    }.collect().sortBy(_._1).map(_._2)
-    val carry = fProds.scanLeft(1.0)(_ * _).init
+      Iterator.single(prod)
+    }.collect().scanLeft(1.0)(_ * _).init
 
     // Pass 3: emit — re-run the identical factor sequence seeded with
     // the carry; the multiply order equals the global window's.
-    val out = rows.mapPartitionsWithIndex { (pid, it) =>
-      var atRisk = mFrom(pid)
-      var s = carry(pid)
+    val out = scan.seeded(mFrom.zip(carry)) { case ((m0, s0), it) =>
+      var atRisk = m0
+      var s = s0
       it.map { r =>
         val tv = r.getDouble(0); val d = r.getLong(1); val m = r.getLong(2)
         val n = atRisk
@@ -122,10 +111,10 @@ object KaplanMeier {
     * Determinism/scale: [[curveExpr]] hands back the knots
     * range-partitioned by t and sorted within partitions, so each
     * knot's successor is literally the NEXT ROW — a per-partition
-    * buffered-iterator shift plus one boundary carry (the first knot
-    * of the next non-empty partition, a numPartitions-bounded driver
-    * array). Linear in knots, zero joins, no broadcast — the
-    * continuous-time regime (|distinct t| ≈ n) that [[lookup]]'s
+    * buffered-iterator shift plus one [[graft.core.CarryScan]]
+    * boundary carry (the first knot of the next non-empty partition).
+    * Linear in knots, zero joins, no broadcast — the continuous-time
+    * regime (|distinct t| ≈ n) that [[lookup]]'s
     * distributed branch handles works here too. The step areas sum in
     * DECIMAL (order-independent). S is rounded to 6dp FIRST: the
     * engine and the oracle prove 6dp agreement on the curve (q_km),
@@ -143,14 +132,11 @@ object KaplanMeier {
     val cv = curve(df, tCol, eCol)
       .select(col("t"), round(col("s"), 6).as("s"))
       .filter(col("t") < lit(horizon))
-    val rows = graft.core.Pins.pinRdd(cv.rdd)
+    val scan = new graft.core.CarryScan(cv.rdd)
     // Pass 1: first knot per partition → boundary successors + the
     // global first knot (S = 1 on [0, minT); rmst = horizon when no
     // knot precedes it).
-    val firsts = rows.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single(pid ->
-        (if (it.hasNext) Some(it.next().getDouble(0)) else None))
-    }.collect().sortBy(_._1).map(_._2)
+    val firsts = scan.partials(it => if (it.hasNext) Some(it.next().getDouble(0)) else None)
     val nextFirst: Array[Option[Double]] =
       firsts.scanRight(Option.empty[Double])((cur, acc) => cur.orElse(acc))
         .drop(1)
@@ -158,14 +144,14 @@ object KaplanMeier {
     // Pass 2: emit (t, s, next) with the in-partition lookahead; the
     // last knot of a partition takes the boundary carry (null = no
     // later knot anywhere → the horizon closes the step).
-    val knotsNext = rows.mapPartitionsWithIndex { (pid, it0) =>
+    val knotsNext = scan.seeded(nextFirst) { (boundary, it0) =>
       val it = it0.buffered
       new scala.collection.AbstractIterator[Row] {
         override def hasNext: Boolean = it.hasNext
         override def next(): Row = {
           val r = it.next()
           val nxt: Option[Double] =
-            if (it.hasNext) Some(it.head.getDouble(0)) else nextFirst(pid)
+            if (it.hasNext) Some(it.head.getDouble(0)) else boundary
           Row(r.getDouble(0), r.getDouble(1), nxt.map(Double.box).orNull)
         }
       }
@@ -191,12 +177,11 @@ object KaplanMeier {
     * fused codegen binary search ([[graft.functions.StepLookup]] —
     * no shuffle, no jobs, O(log c)/row); beyond that (continuous-time
     * data, |curve| ≈ n_test) the keyed [[graft.ops.AsofJoin]]
-    * union-scan would degenerate to one partition, so instead it gets
-    * the same distributed 3-pass range-scan
-    * shape as [[curveExpr]]: union the tagged sides, ONE
-    * repartitionByRange on (t, tag), per-partition last-curve-value
-    * summaries, a driver carry (bounded at numPartitions), and a
-    * seeded emit scan. Linear in |points|+|curve| with no broadcast —
+    * union-scan would degenerate to one partition, so instead it is a
+    * [[graft.core.CarryScan]] like [[curveExpr]]: union the tagged
+    * sides, ONE repartitionByRange on (t, tag), per-partition
+    * last-curve-value summaries, a driver carry, and a seeded emit
+    * scan. Linear in |points|+|curve| with no broadcast —
     * at 100 TB the censoring curve is ~|distinct test times| rows,
     * far past broadcast range. Strictness is the tag order: the curve
     * row at t == at sorts before the point (inclusive) or after it
@@ -215,7 +200,7 @@ object KaplanMeier {
     // (<= SmallCurveRows knots — discrete/rounded time grids, the
     // common case), evaluate the step function with a fused codegen
     // binary search: O(log c) per point, NO union, NO range shuffle,
-    // NO extra jobs. The distributed 3-pass scan below stays the
+    // NO extra jobs. The distributed carry scan below stays the
     // continuous-time path where |curve| ≈ n_test and nothing
     // driver-bounded can hold it. The probe collects at most
     // SmallCurveRows+1 rows (limit pushdown stops the scan early).
@@ -242,21 +227,17 @@ object KaplanMeier {
     val u = (c unionByName p)
       .repartitionByRange(col("_t"), col("_tag"))
       .sortWithinPartitions(col("_t"), col("_tag"))
-    // shared BY OBJECT across both passes (see curveExpr: the sampled
-    // range bounds must agree between summary and emit)
-    val rows = graft.core.Pins.pinRdd(u.rdd)
+    val scan = new graft.core.CarryScan(u.rdd)
     // Pass 1: last curve value per partition (curve rows have _tag ==
     // cTag; a null `at` point sorts first and sees no curve row).
-    val lastS = rows.mapPartitionsWithIndex { (pid, it) =>
+    val carry = scan.partials { it =>
       var s = Option.empty[Double]
       it.foreach { r => if (r.getInt(1) == cTag) s = Some(r.getDouble(2)) }
-      Iterator.single(pid -> s)
-    }.collect().sortBy(_._1).map(_._2)
-    val carry = lastS.scanLeft(Option.empty[Double])((acc, cur) =>
-      cur.orElse(acc)).init
+      s
+    }.scanLeft(Option.empty[Double])((acc, cur) => cur.orElse(acc)).init
     // Pass 2: emit — running step value seeded with the carry.
-    val outRows = rows.mapPartitionsWithIndex { (pid, it) =>
-      var s = carry(pid)
+    val outRows = scan.seeded(carry) { (s0, it) =>
+      var s = s0
       it.flatMap { r =>
         if (r.getInt(1) == cTag) { s = Some(r.getDouble(2)); Iterator.empty }
         else {

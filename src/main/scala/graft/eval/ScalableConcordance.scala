@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   * windows buffered whole groups. Now: KEYED suffixes hash-partition
   * by key + sort within, so each branch streams in O(1) task memory as
   * one lazy plan ([[evAfterKeyedDf]]); the one genuinely GLOBAL suffix
-  * (harrell's comparable) uses the [[KaplanMeier.curveExpr]]-style
-  * distributed range scan with driver carries ([[evAfterDf]]) over the
-  * small grouped distinct-time table. Each count branch ends in one
+  * (harrell's comparable) is a [[graft.core.CarryScan]] with one
+  * `Long` carry per partition ([[evAfterDf]]) over the small grouped
+  * distinct-time table. Each count branch ends in one
   * partial per partition, and all four come back in ONE collect that
   * the driver sums ([[collectScalars]]) — no final single-partition
   * aggregation stage per branch.
@@ -81,8 +81,7 @@ object ScalableConcordance {
     // when |distinct t| ≈ n). Its cells are the grouped distinct-time
     // table, so the scan's two prep jobs are small.
     val comparableDf = evAfterDf(
-      s.groupBy(col("t")).agg(count(lit(1)).as("m"), sum(col("e")).as("ev")),
-      Nil)
+      s.groupBy(col("t")).agg(count(lit(1)).as("m"), sum(col("e")).as("ev")))
 
     // ---- ties: same risk, larger t ----
     // Keyed suffix: hash-partition BY KEY + sort within — every key's
@@ -90,9 +89,9 @@ object ScalableConcordance {
     // memory as ONE lazy branch of the final job (no window buffering,
     // no extra jobs, no carries).
     val tiesDf = evAfterKeyedDf(
-      s.groupBy(lit(0).as(Cfg), col("r"), col("t"))
+      s.groupBy(col("r"), col("t"))
         .agg(count(lit(1)).as("m"), sum(col("e")).as("ev")),
-      Seq(Cfg, "r"))
+      Seq("r"))
 
     // ---- cross-bucket at EVENT points only, without the dense
     // (t × bucket) grid: union the per-(b, t) data counts with one
@@ -121,7 +120,7 @@ object ScalableConcordance {
     val crossDf = evTB
       .join(grid.select(col("t"), (col("b") + 1).as("b"), col("g")),
         Seq("t", "b"), "left")
-      .select(lit(0).as(Cfg), (col("ev") * coalesce(col("g"), lit(0L))).as("v"))
+      .select((col("ev") * coalesce(col("g"), lit(0L))).as("v"))
       .transform(partitionSums)
 
     // ---- within-bucket: exact local Fenwick sweep per bucket ----
@@ -133,15 +132,14 @@ object ScalableConcordance {
         it.toSeq.groupBy(_._4).valuesIterator.foreach { rows =>
           total += countWithin(rows.map(x => (x._1, x._2, x._3)))
         }
-        Iterator.single((0, total))
-      }.toDF(Cfg, "v")
+        Iterator.single(total)
+      }.toDF("v")
 
     // ONE action for all four counts: the branches are independent, so
     // Spark schedules their stages concurrently instead of paying four
-    // sequential job round-trips over the same cached base. One risk
-    // column is one scored config: cfg 0.
-    val Seq(comparable: Long, ties: Long, cross: Long, within: Long) =
-      collectScalars(Seq(comparableDf, tiesDf, crossDf, withinDf), configs = 1).head
+    // sequential job round-trips over the same cached base.
+    val Seq(comparable, ties, cross, within) =
+      collectScalars(Seq(comparableDf, tiesDf, crossDf, withinDf))
     Seq(concordance(comparable, ties, cross + within))
       .toDF("comparable", "concordant", "cindex")
   }
@@ -226,12 +224,12 @@ object ScalableConcordance {
 
   /** Key-run equality with java.lang boxed semantics (NaN == NaN):
     * Spark's groupBy collapses every NaN of a key column into ONE
-    * group, so the run detectors must not re-fragment that group —
-    * Scala == on boxed doubles would (NaN != NaN), silently
-    * undercounting the key's suffix sums. (-0.0 vs 0.0 needs no
-    * care: grouping already normalized them into one cell.) Null
-    * sentinels compare unequal, matching the detectors' "no open
-    * run" convention.
+    * group, so [[evAfterKeyedDf]]'s run detector must not re-fragment
+    * that group — Scala == on boxed doubles would (NaN != NaN),
+    * silently undercounting the key's suffix sums. (-0.0 vs 0.0 needs
+    * no care: grouping already normalized them into one cell.) Null
+    * sentinels compare unequal, matching the detector's "no open run"
+    * convention.
     */
   private def sameKey(a: Seq[Any], b: Seq[Any]): Boolean =
     a != null && b != null && a.length == b.length &&
@@ -250,11 +248,9 @@ object ScalableConcordance {
     * state and no cross-partition carries, no window buffering, and
     * no prep jobs. Parallelism is #distinct keys (risk granular);
     * the KEYLESS global suffix is the one case that needs the sampled
-    * range scan instead. The keys lead with the config column `cfg`,
-    * and each partition yields one partial (cfg, v) per config in it.
+    * range scan instead. Each partition yields one partial `v`.
     */
   private def evAfterKeyedDf(cells: DataFrame, keyCols: Seq[String]): DataFrame = {
-    require(keyCols.headOption.contains(Cfg), s"keyed suffix keys must lead with $Cfg: $keyCols")
     val k = keyCols.length
     // width: session-default map side, AQE advisory-size coalescing
     val sortExprs = keyCols.map(col(_).asc) :+ col("t").desc
@@ -266,149 +262,85 @@ object ScalableConcordance {
       .mapPartitions { it =>
         var curKey: Seq[Any] = null
         var pref = 0L
-        sumByCfg(it.map { r =>
+        var acc = 0L
+        it.foreach { r =>
           val key = Seq.tabulate(k)(r.get)
           if (!sameKey(key, curKey)) { curKey = key; pref = 0L }
-          val v = r.getLong(k + 2) * pref
+          acc += r.getLong(k + 2) * pref
           pref += r.getLong(k + 1)
-          (r.getInt(0), v)
-        })
-      }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .toDF(Cfg, "v")
+        }
+        Iterator.single(acc)
+      }(Encoders.scalaLong)
+      .toDF("v")
   }
 
-  /** Σ_cells ev · #{rows in same-key cells with strictly larger t},
-    * as one partial (cfg 0, v) per partition, which the caller unions
-    * into its single counting collect. Its one caller, [[harrell]],
-    * scores a single risk column.
+  /** Σ_cells ev · #{rows in cells with strictly larger t}, as one
+    * partial `v` per partition, which the caller unions into its single
+    * counting collect.
     *
-    * `cells` must be (keyCols..., t, m, ev) with one row per distinct
-    * (keys, t) — m subjects and ev events at that cell. Used with
-    * keys = Nil (the global suffix); the keyed-run machinery keeps the
-    * scheme correct for fine partition splits of one run too. This is
-    * the KaplanMeier.curveExpr three-pass range scan generalized to
-    * keyed runs: rows are range-partitioned and sorted by (keys asc, t DESC),
-    * so each key's run is contiguous (possibly spanning partitions) and
-    * "same key, larger t" = "earlier in the run". Pass 1 collects per-
-    * partition leading/trailing run summaries (4 scalars + the boundary
-    * keys per partition — never O(rows) on the driver); a driver scan
-    * turns them into per-partition carry-in counts; pass 2 seeds each
-    * partition with its carry and streams Σ ev·prefix in O(1) memory.
-    * Integer sums only — association-free, so the result is EXACTLY the
-    * ordered-window formulation it replaces.
+    * `cells` must be (t, m, ev) with one row per distinct t — m
+    * subjects and ev events at that time. This is Harrell's one GLOBAL
+    * suffix, so it is a [[graft.core.CarryScan]] over the cells
+    * range-partitioned and sorted by t DESC: "larger t" = "earlier in
+    * the scan". Pass 1 sums m per partition, the driver's exclusive
+    * prefix of those sums seeds each partition, and pass 2 streams
+    * Σ ev·prefix in O(1) memory. Integer sums only — association-free,
+    * so the result is EXACTLY the ordered-window formulation it
+    * replaces.
     */
-  private def evAfterDf(cells: DataFrame, keyCols: Seq[String]): DataFrame = {
+  private def evAfterDf(cells: DataFrame): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
     // width: session-default map side, AQE advisory-size coalescing
-    val k = keyCols.length
-    val sortExprs = keyCols.map(col(_).asc) :+ col("t").desc
     // The grouped cell table is consumed TWICE by repartitionByRange
     // (RangePartitioner's sampling job, then the shuffle write) — pin
     // it across pass 1 so the groupBy aggregation runs once, release as
-    // soon as the sorted rows RDD below is materialized.
+    // soon as the scan's rows are materialized.
     val (cellsP, releaseCells) = graft.core.Pins.held(graft.core.Pins.pin(cells
-      .select((keyCols.map(col) :+ col("t").cast("double").as("t") :+
-        col("m").cast("long").as("m") :+ col("ev").cast("long").as("ev")): _*)))
-    val g = cellsP
-      .repartitionByRange(sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-    // RDD-level persist shared by object across both passes (same
-    // contract as KaplanMeier.curveExpr: one sampled partitioning;
-    // released with the calling harrell scope).
-    val rows = graft.core.Pins.pinRdd(g.rdd)
-    def keyOf(r: Row): Seq[Any] = Seq.tabulate(k)(r.get)
-
-    // Pass 1: per-partition (leadKey, leadRunSum, trailKey, trailRunSum,
-    // singleRun) — the only state the cross-partition carries need.
-    val stats = rows.mapPartitionsWithIndex { (pid, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var leadKey: Seq[Any] = null; var leadSum = 0L
-        var curKey: Seq[Any] = null; var curSum = 0L
-        var nRuns = 0
-        it.foreach { r =>
-          val key = keyOf(r)
-          if (!sameKey(key, curKey)) {
-            if (nRuns == 1) { leadKey = curKey; leadSum = curSum }
-            curKey = key; curSum = 0L; nRuns += 1
-          }
-          curSum += r.getLong(k + 1)
-        }
-        if (nRuns == 1) { leadKey = curKey; leadSum = curSum }
-        Iterator.single((pid, leadKey, leadSum, curKey, curSum, nRuns == 1))
-      }
-    }.collect().sortBy(_._1)
-    // pass 1 materialized `rows`; the unsorted cell cache is done
+      .select(col("t").cast("double").as("t"), col("m").cast("long").as("m"),
+        col("ev").cast("long").as("ev"))))
+    val scan = new graft.core.CarryScan(cellsP
+      .repartitionByRange(col("t").desc)
+      .sortWithinPartitions(col("t").desc)
+      .rdd)
+    // Pass 1: subjects per partition → the number of subjects in
+    // earlier partitions (all with larger t).
+    val carry = scan.partials(_.map(_.getLong(1)).sum).scanLeft(0L)(_ + _).init
+    // pass 1 materialized the scan's rows; the unsorted cell cache is done
     releaseCells()
-
-    // Driver scan, ascending partitions: a key's run spans consecutive
-    // partitions, so carry-in for p's leading run = the accumulated sum
-    // of the SAME key's rows in earlier partitions (earlier partitions
-    // sort before ⇒ same key with LARGER t there ⇒ they count).
-    val carry = new Array[Long](rows.getNumPartitions)
-    var openKey: Seq[Any] = null
-    var openSum = 0L
-    stats.foreach { case (pid, leadKey, leadSum, trailKey, trailSum, single) =>
-      val cont = sameKey(leadKey, openKey)
-      carry(pid) = if (cont) openSum else 0L
-      if (single && cont) openSum += leadSum
-      else if (single) { openKey = leadKey; openSum = leadSum }
-      else { openKey = trailKey; openSum = trailSum }
-    }
-
-    // Pass 2: seed each partition's first run with its carry; within a
-    // run (t strictly descending, cells unique) the streaming prefix of
-    // m IS the strict larger-t count for the current row.
-    rows.mapPartitionsWithIndex { (pid, it) =>
+    // Pass 2: within the scan (t strictly descending, cells unique) the
+    // streaming prefix of m IS the strict larger-t count for each row.
+    scan.seeded(carry) { (pref0, it) =>
       var acc = 0L
-      var curKey: Seq[Any] = null
-      var pref = 0L
+      var pref = pref0
       it.foreach { r =>
-        val key = keyOf(r)
-        if (curKey == null) { curKey = key; pref = carry(pid) }
-        else if (!sameKey(key, curKey)) { curKey = key; pref = 0L }
-        acc += r.getLong(k + 2) * pref
-        pref += r.getLong(k + 1)
+        acc += r.getLong(2) * pref
+        pref += r.getLong(1)
       }
-      Iterator.single((0, acc))
-    }.toDF(Cfg, "v")
+      Iterator.single(acc)
+    }.toDF("v")
   }
 
-  /** One long (cfg, v) per partition and config of `df` (cfg, v): its
-    * sum. The partials of a count branch are added up by
-    * [[collectScalars]], so the branch needs no final single-partition
-    * aggregation stage.
+  /** One long `v` per partition of `df` (v): its sum. The partials of a
+    * count branch are added up by [[collectScalars]], so the branch
+    * needs no final single-partition aggregation stage.
     */
   private def partitionSums(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(Cfg), col("v").cast("long")).as[(Int, Long)]
-      .mapPartitions(sumByCfg).toDF(Cfg, "v")
+    df.select(col("v").cast("long")).as[Long]
+      .mapPartitions(it => Iterator.single(it.sum)).toDF("v")
   }
 
-  /** The (cfg, v) pairs of one partition summed per config: one
-    * partial per config present, none for an empty partition.
+  /** Collect N independent counts in ONE job: tag each branch, union,
+    * collect, read back in branch order. Every branch is (v: long) and
+    * may yield one partial per partition — its count is their exact
+    * sum (0 when none).
     */
-  private def sumByCfg(it: Iterator[(Int, Long)]): Iterator[(Int, Long)] = {
-    val acc = scala.collection.mutable.HashMap.empty[Int, Long]
-    it.foreach { case (c, v) => acc(c) = acc.getOrElse(c, 0L) + v }
-    acc.iterator
-  }
-
-  /** Collect N independent counts for each of `configs` configs in ONE
-    * job: tag each branch, union, collect, read back per config in
-    * branch order. Every branch is (cfg, v: long), cfg in [0, configs),
-    * and may yield one partial per partition and config — its count is
-    * their exact sum (0 when none).
-    */
-  private[eval] def collectScalars(branches: Seq[DataFrame],
-                                   configs: Int): IndexedSeq[Seq[Long]] = {
-    val tagged = branches.zipWithIndex.map { case (b, i) => b.select(lit(i).as("k"), col(Cfg), col("v")) }
-    val rows = tagged.reduce(_.unionAll(_)).collect().groupBy(r => (r.getInt(0), r.getInt(1)))
-    (0 until configs).map { c =>
-      branches.indices.map(i => rows.getOrElse((i, c), Array.empty[Row]).map(_.getLong(2)).sum)
-    }
+  private def collectScalars(branches: Seq[DataFrame]): Seq[Long] = {
+    val tagged = branches.zipWithIndex.map { case (b, i) => b.select(lit(i).as("k"), col("v")) }
+    val rows = tagged.reduce(_.unionAll(_)).collect().groupBy(_.getInt(0))
+    branches.indices.map(i => rows.getOrElse(i, Array.empty[Row]).map(_.getLong(1)).sum)
   }
 
   /** Strict pairs {(i,j): e_i=1, t_j > t_i, r_j < r_i} in one bucket:

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * row IN FRAME ORDER, so the value is the exact left-associated
   * product Π f_1 · f_2 · … · f_k — no exp/log detour, no
   * reassociation. Nulls are skipped like built-in aggregates. (The KM
-  * estimator itself now uses the distributed three-pass range scan,
-  * which subsumes the single-partition window this accelerated.)
+  * estimator itself now uses a [[graft.core.CarryScan]], which
+  * subsumes the single-partition window this accelerated.)
   */
 case class ProductAgg(child: Expression)
     extends DeclarativeAggregate with ImplicitCastInputTypes

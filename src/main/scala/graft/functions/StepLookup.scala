@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * censoring weights G(t⁻), piecewise-constant interpolation) whose
   * knot tables fit comfortably in the plan (the caller bounds the
   * size; [[graft.eval.KaplanMeier.lookup]] caps it and falls back to
-  * the distributed 3-pass range scan beyond the cap).
+  * a distributed [[graft.core.CarryScan]] beyond the cap).
   *
   * Semantics match the distributed formulation exactly: value 1.0
   * before the first knot AND for a null `at` (the no-match row of the

@@ -92,11 +92,11 @@ final case class CoxPH(
       // become prefix carries in partition order, exactly like
       // [[CoxPH.breslow]].
       // width: session-default map side, AQE advisory-size coalescing
-      val sorted = graft.core.Pins.pinRdd(tr
+      val sorted = new graft.core.CarryScan(tr
         .repartitionByRange(col("t").desc)
         .sortWithinPartitions(col("t").desc)
         .rdd)
-      sorted.count()
+      sorted.partials(_.size) // materialize the pin once
       (tr, sorted, mu0, sd0)
     }
     val session = train.sparkSession
@@ -142,7 +142,7 @@ final case class CoxPH(
     * scale than materializing per-iteration score columns.
     */
   private def logLikAndGrad(spark: org.apache.spark.sql.SparkSession,
-                            sortedRows: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
+                            sortedRows: graft.core.CarryScan[org.apache.spark.sql.Row],
                             beta: DenseVector[Double])
       : (Double, DenseVector[Double]) = {
     val p = beta.length
@@ -155,7 +155,7 @@ final case class CoxPH(
     }
 
     // pass A: per-partition Σw, Σw·x
-    val partials = sortedRows.mapPartitionsWithIndex { (pid, it) =>
+    val partials = sortedRows.partials { it =>
       val b = bc.value
       var sw = 0.0
       val swx = new Array[Double](p)
@@ -173,31 +173,22 @@ final case class CoxPH(
         sw += w
         var j = 0; while (j < p) { swx(j) += x(j) * w; j += 1 }
       }
-      Iterator.single((pid, sw, swx))
-    }.collect().sortBy(_._1)
+      (sw, swx)
+    }
 
     // carries: partition 0 holds the LARGEST t, so the suffix sums over
     // T >= t seed each partition with the sum of all PRECEDING
     // partitions.
-    val nParts = partials.length
-    val carry0 = new Array[Double](nParts)
-    val carry1 = Array.fill(nParts)(new Array[Double](p))
-    var accW = 0.0
-    val accWX = new Array[Double](p)
-    partials.foreach { case (pid, sw, swx) =>
-      carry0(pid) = accW
-      Array.copy(accWX, 0, carry1(pid), 0, p)
-      accW += sw
-      var j = 0; while (j < p) { accWX(j) += swx(j); j += 1 }
-    }
-    val bcC0 = spark.sparkContext.broadcast(carry0)
-    val bcC1 = spark.sparkContext.broadcast(carry1)
+    val carries = partials.scanLeft((0.0, new Array[Double](p))) {
+      case ((accW, accWX), (sw, swx)) =>
+        (accW + sw, Array.tabulate(p)(j => accWX(j) + swx(j)))
+    }.init
 
     // pass B: fold tie groups in t-desc order, score events
-    val contribs = sortedRows.mapPartitionsWithIndex { (pid, it) =>
+    val contribs = sortedRows.seeded(carries) { case ((c0, c1), it) =>
       val b = bc.value
-      var s0 = bcC0.value(pid)
-      val s1 = bcC1.value(pid).clone()
+      var s0 = c0
+      val s1 = c1.clone()
       var ll = 0.0
       val g = new Array[Double](p)
       val buf = it.buffered
@@ -227,7 +218,7 @@ final case class CoxPH(
       Iterator.single((ll, g))
     }.collect()
 
-    bc.destroy(); bcC0.destroy(); bcC1.destroy()
+    bc.destroy()
     var ll = 0.0
     val grad = DenseVector.zeros[Double](p)
     contribs.foreach { case (l, g) =>
@@ -252,8 +243,9 @@ object CoxPH {
     *
     * Distributed like [[graft.eval.KaplanMeier.curveExpr]]: ONE shuffle
     * groups to the distinct-time table, range-partitioned descending,
-    * then three cheap passes (per-partition partials → driver carries →
-    * seeded per-partition scans) replace the two single-partition
+    * then three cheap [[graft.core.CarryScan]] passes (per-partition
+    * partials → driver carries → seeded per-partition scans, the S0
+    * carry seeding the H0 partials) replace the two single-partition
     * ordered windows, so the baseline survives continuous-time data
     * where |distinct t| ≈ n. S0 is scanned in descending-t order,
     * H0 ascending (reverse of the stored order) with its own carries.
@@ -284,63 +276,39 @@ object CoxPH {
       .repartitionByRange(col("t").desc)
       .sortWithinPartitions(col("t").desc)
       .select(col("t"), col("w_t"), col("d"), col("nsat"))
-    // RDD-level persist shared by object across passes: pins one
-    // physical range partitioning. Pins-scoped release (Hyperband
-    // config evaluation); ContextCleaner releases the unscoped case
-    // when the returned frame (or fitted model holding it) is dropped.
-    val rows = graft.core.Pins.pinRdd(g.rdd)
+    val scan = new graft.core.CarryScan(g.rdd)
 
     // Pass 1: per-partition Σ w_t → descending-order S0 carries.
     // Piggybacks the ±50 saturation count so fit-vs-baseline clamp
     // divergence (likelihood clamps at ±500) is observable, not silent.
-    val p1 = rows.mapPartitionsWithIndex { (pid, it) =>
+    val p1 = scan.partials { it =>
       var s = 0.0
       var sat = 0L
       it.foreach { r => s += r.getDouble(1); sat += r.getLong(3) }
-      Iterator.single((pid, s, sat))
-    }.collect().sortBy(_._1)
-    val satTotal = p1.map(_._3).sum
+      (s, sat)
+    }
+    val satTotal = p1.map(_._2).sum
     if (satTotal > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"breslow(): $satTotal linear predictor(s) exceeded the ±50 " +
           "baseline clamp (likelihood passes clamp at ±500) — baseline " +
           "hazard weights for those rows are saturated")
-    val wParts = p1.map(_._2)
-    val s0Carry = wParts.scanLeft(0.0)(_ + _).init // Σ over partitions < p (larger t)
+    val s0Carry = p1.map(_._1).scanLeft(0.0)(_ + _).init // Σ over partitions < p (larger t)
 
     // Pass 2: per-partition Σ h0 over event rows (ascending order) →
-    // ascending-t H0 carries (partition np-1 holds the smallest t).
-    val hParts = rows.mapPartitionsWithIndex { (pid, it) =>
-      var s0 = s0Carry(pid)
+    // ascending-t H0 carries (partition np-1 holds the smallest t, so
+    // partition p's carry sums the partitions after it).
+    val hCarry = scan.seeded(s0Carry) { (s0, it) =>
       var hsum = 0.0
-      val h0s = scala.collection.mutable.ArrayBuffer.empty[Double]
-      it.foreach { r =>
-        s0 += r.getDouble(1)
-        val d = r.getLong(2)
-        if (d > 0) h0s += d.toDouble / s0
-      }
-      h0s.reverseIterator.foreach(h => hsum += h) // ascending-t order
-      Iterator.single(pid -> hsum)
-    }.collect().sortBy(_._1).map(_._2)
-    val hCarry = new Array[Double](hParts.length)
-    var acc = 0.0
-    (hParts.length - 1 to 0 by -1).foreach { p => // ascending-t visit order
-      hCarry(p) = acc
-      acc += hParts(p)
-    }
+      eventHazards(s0, it).reverseIterator.foreach(h => hsum += h._2) // ascending-t order
+      Iterator.single(hsum)
+    }.collect().scanRight(0.0)(_ + _).tail
 
     // Pass 3: emit (t, H0) — S0 rescanned descending, H0 accumulated
     // ascending from the carry.
-    val out = rows.mapPartitionsWithIndex { (pid, it) =>
-      var s0 = s0Carry(pid)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-      it.foreach { r =>
-        s0 += r.getDouble(1)
-        val d = r.getLong(2)
-        if (d > 0) buf += ((r.getDouble(0), d.toDouble / s0))
-      }
-      var h = hCarry(pid)
-      buf.reverseIterator.map { case (tv, h0) =>
+    val out = scan.seeded(s0Carry.zip(hCarry)) { case ((s0, h0Carry), it) =>
+      var h = h0Carry
+      eventHazards(s0, it).reverseIterator.map { case (tv, h0) =>
         h += h0
         org.apache.spark.sql.Row(tv, h)
       }
@@ -348,6 +316,20 @@ object CoxPH {
     spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("t", org.apache.spark.sql.types.DoubleType),
       org.apache.spark.sql.types.StructField("H0", org.apache.spark.sql.types.DoubleType))))
+  }
+
+  // (t, h0 = d / S0) of a partition's event times in its stored
+  // descending-t order, S0 scanned from the partition's carry `s0`.
+  private def eventHazards(s0: Double, it: Iterator[org.apache.spark.sql.Row])
+      : scala.collection.mutable.ArrayBuffer[(Double, Double)] = {
+    var s = s0
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+    it.foreach { r =>
+      s += r.getDouble(1)
+      val d = r.getLong(2)
+      if (d > 0) buf += ((r.getDouble(0), d.toDouble / s))
+    }
+    buf
   }
 
   /** Step lookup of the baseline on a τ-grid, fully distributed:

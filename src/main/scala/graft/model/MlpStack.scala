@@ -544,7 +544,7 @@ object MlpStack {
       val sofar = out.toArray
       val ll = l
       val w = stack.widths(l)
-      val partials = xs.mapPartitionsWithIndex { (pid, it) =>
+      val partials = xs.mapPartitions { it =>
         val s = new Array[Double](w)
         val s2 = new Array[Double](w)
         var n = 0L
@@ -554,12 +554,12 @@ object MlpStack {
           while (j < w) { s(j) += z(j); s2(j) += z(j) * z(j); j += 1 }
           n += 1
         }
-        Iterator.single((pid, s, s2, n))
-      }.collect().sortBy(_._1)
+        Iterator.single((s, s2, n))
+      }.collect()
       val s = new Array[Double](w)
       val s2 = new Array[Double](w)
       var n = 0L
-      partials.foreach { case (_, ps, ps2, pn) =>
+      partials.foreach { case (ps, ps2, pn) =>
         var j = 0
         while (j < w) { s(j) += ps(j); s2(j) += ps2(j); j += 1 }
         n += pn

@@ -130,7 +130,7 @@ private[model] object MlpTrainer {
           // significance; same-seed same-layout fits stay
           // bit-reproducible because the composed path IS the path.
           val widths = stack.widths
-          val parts = rows.mapPartitionsWithIndex { (pid, it) =>
+          val parts = rows.mapPartitions { it =>
             val acc = mkAcc(th, dropKey0)
             var any = false
             it.grouped(bs).foreach { batch =>
@@ -141,15 +141,14 @@ private[model] object MlpTrainer {
                 "bnEma requires an accumulator that records batch stats" +
                   " (enable its stack's BN recorder)")
             val (coeff, off) = composeAffine(acc.bnRecorded, widths)
-            Iterator.single((pid, acc.loss, acc.grad, acc.norm,
-              coeff, off))
-          }.collect().sortBy(_._1)
-          parts.foreach(p => applyAffine(emaState, p._5, p._6))
+            Iterator.single((acc.loss, acc.grad, acc.norm, coeff, off))
+          }.collect()
+          parts.foreach(p => applyAffine(emaState, p._4, p._5))
           val g = new Array[Double](th.length)
           var ls = 0.0; var n = 0L
           parts.foreach { p =>
-            ls += p._2; n += p._4
-            var i = 0; while (i < g.length) { g(i) += p._3(i); i += 1 }
+            ls += p._1; n += p._3
+            var i = 0; while (i < g.length) { g(i) += p._2(i); i += 1 }
           }
           (ls, g, n)
         }

@@ -12,4 +12,17 @@ object SparkTestBase {
       // skip (spec: "sessionClone survives non-settable entries")
       .config("spark.sql.warehouse.dir", "spark-warehouse")
       .getOrCreate()
+
+  /** Run `f` at shuffle width `np` with AQE partition coalescing off,
+    * then restore both confs. A small fixture's range scan otherwise
+    * coalesces to one partition and never crosses a partition
+    * boundary; this way it gets up to `np` partitions.
+    */
+  def atWidth[T](np: Int)(f: => T): T = {
+    val confs = Seq("spark.sql.shuffle.partitions" -> np.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val before = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally before.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }

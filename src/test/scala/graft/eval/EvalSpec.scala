@@ -47,15 +47,14 @@ class EvalSpec extends AnyFunSuite {
         sv * (nxt - t)
       }.sum
     val df = data.toDF("t", "e")
-    // partition independence: different shuffle widths move the
-    // partition boundaries the carry must bridge (restore the SHARED
-    // session's configured width — leaking 32 into later suites would
-    // make plan-shape assertions order-dependent)
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val got = Seq(3, 32).map { np =>
-      spark.conf.set("spark.sql.shuffle.partitions", np)
-      try KaplanMeier.rmst(df, "t", "e", horizon).head().getDouble(1)
-      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    // partition independence: different shuffle widths, with AQE
+    // coalescing off, move the partition boundaries the carry must
+    // bridge (atWidth restores the SHARED session's confs — leaking
+    // them into later suites would make plan-shape assertions
+    // order-dependent)
+    val got = Seq(3, 7).map { np =>
+      SparkTestBase.atWidth(np)(
+        KaplanMeier.rmst(df, "t", "e", horizon).head().getDouble(1))
     }
     assert(got.distinct.size == 1,
       s"rmst not partition-independent: $got")
@@ -106,7 +105,9 @@ class EvalSpec extends AnyFunSuite {
       (0, None), (1, Some(0.5)), (2, Some(1.0)), (3, Some(2.0)),
       (4, Some(3.0)), (5, Some(4.5)), (6, Some(5.0)), (7, Some(9.0)))
       .toDF("id", "at")
-    for (strict <- Seq(false, true)) {
+    // the distributed scan at widths 3 and 7 with AQE coalescing off,
+    // so its carry crosses partition boundaries
+    for (np <- Seq(3, 7); strict <- Seq(false, true)) SparkTestBase.atWidth(np) {
       val fused = KaplanMeier.lookup(pts, "at", curve, strict, "g")
         .orderBy("id").select(col("id"), col("g")).collect()
         .map(r => (r.getInt(0), r.getDouble(1)))
@@ -114,7 +115,7 @@ class EvalSpec extends AnyFunSuite {
           smallCap = 0)
         .orderBy("id").select(col("id"), col("g")).collect()
         .map(r => (r.getInt(0), r.getDouble(1)))
-      assert(fused.toSeq == dist.toSeq, s"strict=$strict")
+      assert(fused.toSeq == dist.toSeq, s"strict=$strict width=$np")
       // hand values: null→1, before-first→1, knot inclusive vs strict
       val byId = fused.toMap
       assert(byId(0) == 1.0 && byId(1) == 1.0)

@@ -62,8 +62,9 @@ class ScalableConcordanceSpec extends AnyFunSuite {
     // continuous t: |distinct t| = n, so the global-suffix range scan
     // gets multi-row partitions and non-trivial cross-partition
     // carries (the tie-heavy fixture above has only 15 distinct times);
-    // continuous r makes every ties-branch run a singleton.
-    for ((n, seed) <- Seq((400, 7L), (250, 8L))) {
+    // continuous r makes every ties-branch run a singleton. Widths 3
+    // and 7 with AQE coalescing off spread the scan over partitions.
+    for ((n, seed) <- Seq((400, 7L), (250, 8L)); np <- Seq(3, 7)) SparkTestBase.atWidth(np) {
       val rng = new Random(seed)
       val df = (0 until n).map { _ =>
         (rng.nextDouble() * 100.0, rng.nextInt(2), rng.nextDouble())
@@ -71,9 +72,9 @@ class ScalableConcordanceSpec extends AnyFunSuite {
       val slow = Concordance.harrell(df, "t", "e", "r").head()
       val fast = ScalableConcordance.harrell(df, "t", "e", "r", 8).head()
       assert(fast.getLong(0) == slow.getLong(0),
-        s"comparable n=$n: ${fast.getLong(0)} != ${slow.getLong(0)}")
+        s"comparable n=$n width=$np: ${fast.getLong(0)} != ${slow.getLong(0)}")
       assert(fast.getDouble(1) == slow.getDouble(1),
-        s"concordant n=$n: ${fast.getDouble(1)} != ${slow.getDouble(1)}")
+        s"concordant n=$n width=$np: ${fast.getDouble(1)} != ${slow.getDouble(1)}")
     }
   }
 
