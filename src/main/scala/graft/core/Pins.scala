@@ -267,8 +267,8 @@ object Pins {
 
   /** Release the cached blocks of a locally-checkpointed Dataset —
     * the per-iteration STATE ROTATION primitive for iterative
-    * operators (PageRank, connectedComponents). Without rotation a
-    * 20-round loop leaves 20 superseded checkpoint RDDs in the
+    * operators (connectedComponents, the k-means quantizer). Without
+    * rotation a 20-round loop leaves 20 superseded checkpoint RDDs in the
     * storage pool; at scale the pool saturates and every block
     * unroll fights task execution for the ONE UnifiedMemoryManager
     * monitor (jstack on the sf10 board's slow PageRank runs: 18–30

@@ -209,6 +209,32 @@ object Dec15 {
     new java.math.BigDecimal(u, 15).doubleValue()
   }
 
+  /** The (hi, lo) limbs of an exact scale-15 sum, for RDD kernels that
+    * sum outside an aggregate: `+` is [[Dec15Sum]]'s merge (same carry,
+    * same loud hi-limb overflow) and `value` its evaluate, so a sum of
+    * [[Limbs.of]] values is bit-identical to the aggregate's.
+    */
+  final case class Limbs(hi: Long, lo: Long) {
+    def +(o: Limbs): Limbs = {
+      val l = lo + o.lo
+      if (l >= 1000000000000000000L)
+        Limbs(java.lang.Math.addExact(java.lang.Math.addExact(hi, o.hi), 1L),
+          l - 1000000000000000000L)
+      else Limbs(java.lang.Math.addExact(hi, o.hi), l)
+    }
+    def value: Double = combine(hi, lo)
+  }
+
+  object Limbs {
+    val zero: Limbs = Limbs(0L, 0L)
+
+    /** [[split]] as limbs; null where the aggregate skips the input. */
+    def of(d: Double): Limbs = {
+      val r = split(d)
+      if (r == null) null else Limbs(r.getLong(0), r.getLong(1))
+    }
+  }
+
   /** The per-row split as a Column — project this ONCE below the
     * aggregate, then feed [[dec15_sum_split]].
     */

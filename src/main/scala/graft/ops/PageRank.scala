@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Pins
+import graft.functions.Dec15.Limbs
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** PageRank over a directed edge list — the iterated-join companion to
   * [[Dedup.connectedComponents]]: where CC answers "which documents
@@ -14,53 +18,66 @@ import org.apache.spark.sql.types.DecimalType
   * Determinism contract (the oracle hash-compares full-precision
   * doubles): ranks are kept in MASS units (m = rank × n, so the mean
   * is 1.0 and magnitudes are O(1)), every per-node contribution sum
-  * and the dangling-mass total accumulate in DECIMAL(38,15) — exact,
-  * order-independent — and each iteration's result is rounded to
-  * `roundDp` decimals, so the whole trajectory is independent of
-  * partitioning and join order (same trick as the k-means
-  * quantizer's 6dp-deterministic centroid path).
+  * and the dangling-mass total accumulate exactly at scale 15
+  * ([[graft.functions.Dec15.Limbs]], bit-identical to a DECIMAL(38,15)
+  * sum — exact, order-independent), and each iteration's result is
+  * rounded to `roundDp` decimals HALF_UP exactly as Spark's `round`
+  * does, so the whole trajectory is independent of partitioning
+  * (same trick as the k-means quantizer's 6dp-deterministic centroid
+  * path).
   *
-  * Scale shape, per iteration: ONE equi-join of the rank table with
-  * the edge list on `src` + ONE map-side-combined groupBy(dst) for
-  * the contributions, a 1-row dangling aggregate broadcast back by
-  * crossJoin (never a driver collect), and a keyed left join onto the
-  * static node table. Lineage is cut every round (localCheckpoint) —
-  * without the cut the plan doubles per iteration and the analyzer
-  * dies long before the executors work (see connectedComponents
-  * note). Loop shuffle width is right-sized to the edge count
-  * ([[loopWidth]]) on an isolated conf-preserving session clone — the
-  * caller's session conf is never mutated — so a small graph doesn't
-  * pay corpus-width task scheduling × iters and a 100-TB edge set
-  * keeps full parallelism.
+  * Scale shape: an RDD kernel on one [[HashPartitioner]] at
+  * [[loopWidth]]. The edge list is hash-partitioned by `src` once and
+  * pinned; the per-node state (node, od, seed, m) is partitioned the
+  * same way, so a node's state and its out-edges share a partition.
+  * Each round is one `zipPartitions` that emits every edge's m/od as
+  * exact limbs keyed by `dst`, one map-side-combined `reduceByKey` on
+  * the same partitioner, and a narrow update that zips the sums back
+  * onto the state: ONE shuffle and ONE job per round. That job also
+  * materialises the new state's pin and sums its dangling mass, the
+  * one driver value the next round needs.
+  *
+  * Why not DataFrames: the per-round DataFrame dataflow (rank⋈edge
+  * join + groupBy(dst), a broadcast 1-row dangling aggregate, a left
+  * join onto the node table and an eager localCheckpoint) cost about
+  * seven AQE jobs a round, and its wall time was almost all driver-side
+  * SQL planning, codegen and stage scheduling, not executor work
+  * (q_pagerank: 38 one-task jobs, ~3.2 s of build against ~1 cpu-s).
+  * The kernel needs no session clone either: the partitioner carries
+  * the loop width, and the caller's session conf is only read (for
+  * the width cap), never changed.
+  *
+  * State rotation: each round's state is pinned in its own scope and
+  * released once its successor is materialised; the edge pin goes when
+  * the last round has run. The final state backs the returned frame
+  * and is pinned in the caller's scope (consume the result inside it).
+  * Pins are persists, not checkpoints, so every released block can
+  * still be recomputed from lineage; the lineage grows by one narrow
+  * zip per round.
   */
 object PageRank {
 
-  /** `edges`: (src string, dst string), assumed pre-deduplicated.
-    * Returns (node, od, m): out-degree and final rank mass (mean 1.0;
-    * divide by n for the classic probability-vector form).
+  /** `edges`: (src, dst), assumed pre-deduplicated; both columns of one
+    * atomic key type (long in the queries, string in the specs), or
+    * two types Spark's coercion can widen to one. Returns (node, od,
+    * m): out-degree and final rank mass (mean 1.0; divide by n for the
+    * classic probability-vector form). Fails with
+    * IllegalArgumentException on `iters < 0`, `damping` outside
+    * [0, 1] or `roundDp < 0`.
     *
     * `earlyRelease`: halve the graph-construction PEAK storage window.
-    * By default the edge-sized ingest checkpoint (recompute insurance
-    * while the pinned edge table builds) and the edge-sized sorted pin
-    * coexist until the node table materializes — ~2× edge bytes of
-    * block storage, which competes with shuffle space on the same
-    * disks at scale (single-node measured: the sf100 probe, ~600M
-    * edges, ENOSPC'd exactly this window at 75 GB free). With
-    * `earlyRelease = true` the pin is materialized eagerly (ONE extra
-    * pass over the edge table — the paid price) and the checkpoint is
-    * released immediately, so peak live state is ~1× edge bytes plus
-    * the transient crossover. Results are bit-identical (spec-pinned);
-    * the default path is unchanged.
-    *
-    * DURABILITY caveat: releasing the ingest checkpoint also drops the
-    * loop's RECOMPUTE INSURANCE — the sorted edge pin's lineage roots
-    * in the released checkpoint, so on a cluster a lost/evicted block
-    * of the MEMORY_AND_DISK pin (executor loss, decommission) is
-    * unrecoverable and converts a recompute into a job failure. That
-    * trade is right for the single-node storage-window probes this
-    * knob was built for; CLUSTER callers should prefer the default
-    * path (insurance intact until the node table materializes) or
-    * accept re-running the job on executor loss.
+    * By default the edge-sized ingest pin (the edge list as read, so
+    * the sizing count and the partitioning pass run its plan once) and
+    * the src-partitioned edge pin coexist until the node table
+    * materialises — ~2× edge bytes of block storage, which competes
+    * with shuffle space on the same disks at scale (single-node
+    * measured: the sf100 probe, ~600M edges, ENOSPC'd exactly this
+    * window at 75 GB free). With `earlyRelease = true` the edge pin is
+    * materialised eagerly (ONE extra pass over the edge list — the
+    * paid price) and the ingest pin is released immediately, so peak
+    * live state is ~1× edge bytes plus the transient crossover.
+    * Results are bit-identical (spec-pinned). A lost edge-pin block is
+    * recomputed from the source plan either way.
     */
   def ranks(edges: DataFrame, iters: Int, damping: Double = 0.85,
             roundDp: Int = 6, earlyRelease: Boolean = false): DataFrame =
@@ -69,9 +86,9 @@ object PageRank {
   /** Personalized PageRank (random walk with restart): teleport AND
     * dangling mass land uniformly on the SEED nodes instead of the
     * whole graph — relevance relative to a query set (Haveliwala
-    * '02). `seeds`: one string column `node`; only seeds that are
-    * graph nodes receive mass. Same dataflow and determinism
-    * contract as [[ranks]]; per node,
+    * '02). `seeds`: one column `node` of the edges' key type; only
+    * seeds that are graph nodes receive mass. Same kernel and
+    * determinism contract as [[ranks]]; per node,
     * m' = d·Σ m/od + [v ∈ S]·((1−d)·n + d·dangling)/|S|.
     */
   def personalizedRanks(edges: DataFrame, seeds: DataFrame, iters: Int,
@@ -99,9 +116,7 @@ object PageRank {
     * exactly that. Partitions beyond ~2× cores add no parallelism for
     * the loop's CPU-bound per-round work, only per-task fixed cost ×
     * iters (the width-128 sf10 board measured it at 159 s vs 91 s on
-    * q_pagerank; per-task cpu flat, 2× the tasks) — and AQE cannot
-    * recover it, because each round's localCheckpoint boundary
-    * materializes the exchanges before coalescing sees them. On a
+    * q_pagerank; per-task cpu flat, 2× the tasks). On a
     * 1000-executor cluster defaultParallelism IS the capacity signal,
     * so the cap keeps full cluster width at any scale.
     *
@@ -116,173 +131,187 @@ object PageRank {
     math.max(1L, math.min(math.min(sessionParts, 2L * cores),
       nEdges / edgesPerPartition + 1L)).toInt
 
-  private def run(edges: DataFrame, iters: Int, damping: Double,
-                  roundDp: Int, seeds: Option[DataFrame],
-                  earlyRelease: Boolean): DataFrame = {
+  /** One node's loop state: out-degree, restart-set membership, mass. */
+  private final case class Node(od: Long, seed: Boolean, m: Double)
+
+  /** What a round's job sums over the state it materialises: |V|, the
+    * restart-set size and the exact dangling mass (Σ m over od = 0).
+    */
+  private final case class Summary(nodes: Long, seeds: Long, dangling: Limbs) {
+    def +(o: Summary): Summary =
+      Summary(nodes + o.nodes, seeds + o.seeds, dangling + o.dangling)
+  }
+
+  /** Spark's `round(x, dp)` on a double, as its interpreted path
+    * evaluates it: HALF_UP on the shortest decimal form; NaN and ±∞
+    * pass through.
+    */
+  private def roundHalfUp(x: Double, dp: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The round's one job: pin `state` and materialise it while summing
+    * its [[Summary]]. The last state's pin goes to the caller's scope
+    * (it backs the returned frame); every other one is held, and the
+    * returned release drops it once its successor is materialised (or
+    * at once, if the job fails).
+    */
+  private def settle(state: RDD[(Any, Node)], last: Boolean)
+      : (RDD[(Any, Node)], () => Unit, Summary) = {
+    def pinAndSum(): (RDD[(Any, Node)], Summary) = {
+      val pinned = Pins.pinRdd(state)
+      val summary = pinned.mapPartitions { it =>
+        var nodes = 0L
+        var seeds = 0L
+        var dangling = Limbs.zero
+        it.foreach { case (_, v) =>
+          nodes += 1
+          if (v.seed) seeds += 1
+          if (v.od == 0) {
+            val l = Limbs.of(v.m)
+            if (l != null) dangling += l
+          }
+        }
+        Iterator.single(Summary(nodes, seeds, dangling))
+      }.reduce(_ + _)
+      (pinned, summary)
+    }
+    if (last) {
+      val (pinned, summary) = pinAndSum()
+      (pinned, () => (), summary)
+    } else {
+      val ((pinned, summary), release) = Pins.held(pinAndSum())
+      (pinned, release, summary)
+    }
+  }
+
+  /** The kernel behind [[ranks]] and [[personalizedRanks]]; `parts`
+    * overrides [[loopWidth]] (specs run it at several widths).
+    */
+  private[ops] def run(edges: DataFrame, iters: Int, damping: Double,
+                       roundDp: Int, seeds: Option[DataFrame],
+                       earlyRelease: Boolean,
+                       parts: Option[Int] = None): DataFrame = {
+    require(iters >= 0, s"PageRank: iters must be >= 0, got $iters")
+    require(damping >= 0.0 && damping <= 1.0,
+      s"PageRank: damping must be in [0, 1], got $damping")
+    require(roundDp >= 0, s"PageRank: roundDp must be >= 0, got $roundDp")
     val spark = edges.sparkSession
-    val e0 = edges.localCheckpoint(true)
-    val nEdges = e0.count()
-    val teleport = 1.0 - damping
+    // one key type for both endpoints: the one Spark's own coercion
+    // gives the pair (the node column keeps the input's type)
+    val key = edges.select(array(col("src"), col("dst"))).schema.head
+      .dataType.asInstanceOf[ArrayType].elementType
 
-    // Right-size the loop's shuffle width to the edge count
-    // ([[loopWidth]]), applied the connectedComponents way: the whole
-    // loop runs on an ISOLATED conf-preserving session clone — shared
-    // SparkContext, cache, and checkpoint blocks, its OWN SQL conf —
-    // so EVERY per-round exchange (the contribution groupBy(dst), the
-    // nodes left join, the distinct) runs narrow WITH map-side combine
-    // (what a user-level repartition can't express: the partial agg
-    // would move above the exchange and ship raw edge rows), and
-    // nothing is mutated on the caller's session — concurrent queries
-    // (e.g. Hyperband's threaded config evaluation) are safe. The
-    // returned ranks are re-bound to the caller's session at the end.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = loopWidth(nEdges, sessionParts.toLong,
-      spark.sparkContext.defaultParallelism)
-    val loopSpark = org.apache.spark.sql.graft.bridge.sessionClone(spark)
-    loopSpark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val eb = org.apache.spark.sql.graft.bridge.rebind(loopSpark, e0)
-
-      // The edge table is the loop's big invariant input, so it is
-      // cached hash-partitioned AND sorted on the join key via
-      // Pins.pin — a persist, NOT a checkpoint: InMemoryTableScan
-      // reports the cached plan's outputPartitioning/outputOrdering,
-      // while LogicalRDD drops both (verified on the physical plan:
-      // a checkpointed edge table re-exchanged 1.1M rows on EVERY
-      // round; the pinned one exchanges only the node-cardinality
-      // rank table). Each iteration then pays the contribution
-      // groupBy(dst) — the algorithm's irreducible shuffle — plus
-      // rank-table-sized exchanges, never edge-sized ones. The pin
-      // rides the caller's cache scope (Bench/Verify sweeps release
-      // it); lineage above it is the already-checkpointed e0, so the
-      // per-round lineage cut stays shallow.
-      val e = graft.core.Pins.pin(eb.withColumnRenamed("src", "node")
-        .repartition(loopParts, col("node"))
-        .sortWithinPartitions("node"))
-      // earlyRelease: materialize the pin NOW (one extra edge pass)
-      // and drop the ingest checkpoint immediately — everything below
-      // reads the pin, so peak block storage stays ~1× edge bytes
-      // instead of carrying checkpoint + pin (2×) through the node
-      // table's materialization (see [[ranks]]). Default path: the
-      // pin materializes lazily inside nodes' checkpoint and the
-      // release happens right after (recompute insurance intact).
+    // The edge list as read, pinned: the sizing count and the
+    // partitioning pass below both read it, so its plan runs once.
+    val ((ingest, nEdges), releaseIngest) = Pins.held {
+      val rows = Pins.pinRdd(
+        edges.select(col("src").cast(key), col("dst").cast(key)).rdd
+          .map(r => (r.get(0), r.get(1))))
+      (rows, rows.count())
+    }
+    val part = new HashPartitioner(parts.getOrElse(loopWidth(nEdges,
+      spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      spark.sparkContext.defaultParallelism)))
+    // The loop's big invariant input: hash-partitioned by src once, so
+    // each round reads a node's out-edges in its own state partition.
+    val (bySrc, releaseEdges) =
+      Pins.held(Pins.pinRdd(ingest.partitionBy(part)))
+    // the current round's held state pin (none until the node table)
+    var releaseState: () => Unit = () => ()
+    try {
+      // earlyRelease: materialise the edge pin NOW (one extra edge
+      // pass) and drop the ingest pin — everything below reads the
+      // edge pin. Default: the node table's job materialises it, then
+      // the ingest pin goes.
       if (earlyRelease) {
-        e.count()
-        graft.core.Pins.releaseCheckpoint(e0)
+        bySrc.count()
+        releaseIngest()
       }
-      // Node universe AND out-degree from ONE pass (r19 optimization,
-      // guide §2.4): each edge contributes (src, 1) and (dst, 0); a
-      // single map-side-combined sum(c) per node IS the out-degree,
-      // with pure sinks landing at 0 — so the former three-piece
-      // derivation (deg aggregate over the pin + src∪dst distinct +
-      // left join, i.e. two aggregations, two extra passes over the
-      // edge set and a join) collapses into one explode + groupBy.
-      // Reading the PIN (not eb) on both paths keeps the invariant the
-      // default path's release below relies on — the pin is fully
-      // materialized inside nodes' eager checkpoint, before e0 goes —
-      // and retires the r18 path-dependence (the measured pin-scan
-      // penalty was the OLD shape's two extra columnar decodes; this
-      // shape scans the edge set exactly once). Measured at sf0.1:
-      // the pagerank pair's node-table phase cpu roughly halves and
-      // the per-query task count drops ~15% (OPTIMIZATION_r19.md).
-      val nodes0 = e.select(explode(array(
-          struct(col("node"), lit(1L).as("c")),
-          struct(col("dst").as("node"), lit(0L).as("c")))).as("nc"))
-        .select(col("nc.node").as("node"), col("nc.c").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("od"))
-      val nodes = seeds match {
-        case None => nodes0.withColumn("seed", lit(true))
-          .localCheckpoint(true)
-        case Some(s) => nodes0
-          // the seed frame is caller-session — re-bound so the whole
-          // loop dataflow lives on the clone (it is a tiny query set;
-          // its one-time evaluation cost is irrelevant)
-          .join(org.apache.spark.sql.graft.bridge.rebind(loopSpark, s)
-            .select(col("node")).distinct()
-            .withColumn("_sf", lit(1)), Seq("node"), "left")
-          .select(col("node"), col("od"), col("_sf").isNotNull.as("seed"))
-          .localCheckpoint(true)
+
+      // Node universe AND out-degree in one map-side-combined shuffle:
+      // each edge marks (src, 1) and (dst, 0), so a pure sink sums to 0.
+      val degree = bySrc.flatMap { case (s, d) => Iterator(s -> 1L, d -> 0L) }
+        .reduceByKey(part, _ + _)
+      val nodes: RDD[(Any, Node)] = seeds match {
+        case None => degree.mapValues(od => Node(od, seed = true, m = 1.0))
+        case Some(s) =>
+          // a restart key counts once and only if it is a graph node; a
+          // null key matches nothing (SQL join semantics)
+          val restart = s.select(col("node").cast(key)).rdd.map(r => (r.get(0), ()))
+          degree.cogroup(restart, part).mapPartitions(_.flatMap {
+            case (k, (od, hits)) =>
+              od.iterator.map(d => k -> Node(d, seed = k != null && hits.nonEmpty, m = 1.0))
+          }, preservesPartitioning = true)
       }
-      // ONE job for both cardinalities (|V| and the restart set): the
-      // two counts ride the same scan of the just-materialized
-      // checkpoint (r19: the separate filter-count was a whole extra
-      // job per personalized run)
-      val cnts = nodes.agg(count(lit(1)),
-        count(when(col("seed"), lit(1)))).head()
-      val nD = cnts.getLong(0).toDouble
+      val (nodeState, releaseNodes, nodeSummary) = settle(nodes, last = iters == 0)
+      releaseState = releaseNodes
+      releaseIngest()
+      val nD = nodeSummary.nodes.toDouble
       // |restart set|: the whole graph for classic PR, the in-graph
       // seeds for personalized
-      val sD = seeds.fold(nD)(_ => cnts.getLong(1).toDouble)
-      require(sD > 0, "personalized PageRank needs >= 1 in-graph seed")
-      // e0's consumers are all materialized by here (the pinned edge
-      // table cached MEMORY_AND_DISK through nodes' eager checkpoint,
-      // nodes itself counted above), so the edge-sized checkpoint —
-      // the loop's biggest block set — is released before the
-      // iterations start competing for the storage pool. (Already
-      // gone on the earlyRelease path.)
-      if (!earlyRelease) graft.core.Pins.releaseCheckpoint(e0)
-      var ranks = nodes.withColumn("m", lit(1.0)).localCheckpoint(true)
+      val sD = seeds.fold(nD)(_ => nodeSummary.seeds.toDouble)
+      require(sD > 0,
+        if (seeds.isEmpty) "PageRank needs a non-empty edge list"
+        else "personalized PageRank needs >= 1 in-graph seed")
+
+      val teleport = 1.0 - damping
+      val personalized = seeds.isDefined
+      var state = nodeState
+      var summary = nodeSummary
       var it = 0
       while (it < iters) {
-        // m/od per out-edge, summed exactly per destination: a plain
-        // map-side-combined groupBy — the shuffle carries one combined
-        // row per (task, dst), not per edge. The clone session makes
-        // this exchange (and every other per-round one) run at
-        // loopParts while KEEPING the partial agg below it; the join
-        // feeding it is co-located via the pinned edge table.
-        // r19: the exact sum runs through Dec15 (split once in the
-        // projection, two-long carry aggregation) — bit-identical to
-        // CAST(SUM(CAST(… AS DECIMAL(38,15))) AS DOUBLE) at ~half the
-        // cpu (Dec15 scaladoc; Dec15Spec pins the equality). Domain:
-        // mass conservation bounds every per-node sum by |V| ≪ 9.2e21.
-        val contrib = ranks.filter(col("od") > 0)
-          .join(e, Seq("node"))
-          .select(col("dst").as("node"),
-            graft.functions.Dec15.dec15_split(
-              col("m") / col("od").cast("double")).as("_c"))
-          .groupBy(col("node"))
-          .agg(graft.functions.Dec15.dec15_sum_split(col("_c")).as("c"))
-        // dangling mass: 1 row, broadcast back — never a driver value
-        val dang = ranks.filter(col("od") === 0)
-          .select(graft.functions.Dec15.dec15_split(col("m")).as("_m"))
-          .agg(coalesce(graft.functions.Dec15.dec15_sum_split(col("_m")),
-            lit(0.0)).as("dm"))
-        val joined = nodes.join(contrib, Seq("node"), "left")
-          .crossJoin(broadcast(dang))
-        val m2 = seeds match {
-          case None =>
-            lit(teleport) + lit(damping) *
-              (coalesce(col("c"), lit(0.0)) + col("dm") / lit(nD))
-          case Some(_) =>
-            lit(damping) * coalesce(col("c"), lit(0.0)) +
-              when(col("seed"),
-                lit(teleport) * lit(nD) / lit(sD) +
-                  lit(damping) * col("dm") / lit(sD))
-                .otherwise(lit(0.0))
+        val dm = summary.dangling.value
+        // m/od of every node with out-edges, split once and sent down
+        // each out-edge; null keys join nothing (SQL join semantics)
+        val sums = state.zipPartitions(bySrc) { (st, es) =>
+          val share = new java.util.HashMap[Any, Limbs]()
+          st.foreach { case (k, v) =>
+            if (v.od > 0 && k != null) {
+              val l = Limbs.of(v.m / v.od.toDouble)
+              if (l != null) share.put(k, l)
+            }
+          }
+          es.flatMap { case (s, d) =>
+            val l = share.get(s)
+            if (l == null) Iterator.empty else Iterator.single(d -> l)
+          }
+        }.reduceByKey(part, _ + _)
+        // The narrow update: the same double expressions, in the same
+        // order, as the SQL formulation's coalesce(c, 0.0) and m2.
+        val next = state.zipPartitions(sums, preservesPartitioning = true) { (st, cs) =>
+          val in = new java.util.HashMap[Any, Limbs]()
+          cs.foreach { case (k, l) => if (k != null) in.put(k, l) }
+          st.map { case (k, v) =>
+            val l = in.get(k)
+            val c = if (l == null) 0.0 else l.value
+            val m2 =
+              if (!personalized) teleport + damping * (c + dm / nD)
+              else damping * c +
+                (if (v.seed) teleport * nD / sD + damping * dm / sD else 0.0)
+            k -> v.copy(m = roundHalfUp(m2, roundDp))
+          }
         }
-        // state ROTATION: the eager checkpoint above fully consumed
-        // the previous round's ranks, so its blocks are released now —
-        // live checkpoint state stays O(1) in the iteration count
-        // instead of stacking `iters` superseded rank tables into the
-        // storage pool (see Pins.releaseCheckpoint for the measured
-        // memory-manager convoy that stacking causes at sf10)
-        val prev = ranks
-        ranks = joined
-          .select(col("node"), col("od"), col("seed"),
-            round(m2, roundDp).as("m"))
-          .localCheckpoint(true)
-        graft.core.Pins.releaseCheckpoint(prev)
+        val (nextState, releaseNext, nextSummary) = settle(next, last = it == iters - 1)
+        releaseState()
+        releaseState = releaseNext
+        state = nextState
+        summary = nextSummary
         it += 1
       }
-    // `nodes` fed every round's join; the loop is done and the final
-    // ranks checkpoint is self-contained, so it goes too
-    graft.core.Pins.releaseCheckpoint(nodes)
-    // the final ranks checkpoint backs the returned frame — registered
-    // with the caller's pin scope (released at scope exit; consume the
-    // result in the scope)
-    graft.core.Pins.pinCheckpoint(ranks)
-    // back to the caller's session (and its shuffle width): the rows
-    // come straight off the final round's checkpoint blocks
-    org.apache.spark.sql.graft.bridge.rebind(spark,
-      ranks.select(col("node"), col("od"), col("m")))
+      // the final state is materialised; the edges are no longer needed
+      releaseEdges()
+      spark.createDataFrame(state.map { case (k, v) => Row(k, v.od, v.m) },
+        StructType(Seq(StructField("node", key), StructField("od", LongType),
+          StructField("m", DoubleType))))
+    } catch {
+      // a failed round must not leave its held pins behind (each
+      // release is a no-op once it has run)
+      case t: Throwable =>
+        releaseState()
+        releaseEdges()
+        releaseIngest()
+        throw t
+    }
   }
 }

@@ -46,8 +46,8 @@ object GraphQueries {
     * Why (r19 optimization, guide §2.3/§8): the node id is a pure
     * proxy — every rank value is an exact DECIMAL(38,15) sum plus a
     * per-node 6dp round, both invariant under any injective re-keying
-    * of the isomorphic graph — so the loop's joins, group-bys, sorts,
-    * columnar edge pin and checkpoints can all run on 8-byte longs
+    * of the isomorphic graph — so the loop's hashing, shuffles and
+    * pinned edge and state RDDs all work on 8-byte longs
     * instead of UTF8 strings. Measured at sf0.1 (ScratchPR, committed
     * in OPTIMIZATION_r19.md): edge build cpu 4.6→3.3 s, node-universe
     * aggregation 3.8→1.1 s, node-table materialization 15.0→7.8 s;
