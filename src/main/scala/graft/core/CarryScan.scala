@@ -8,9 +8,10 @@ import scala.reflect.ClassTag
   * pass ([[partials]]), a prefix over those summaries on the driver,
   * then a pass that seeds each partition with its carry ([[seeded]]).
   * This is how the Kaplan–Meier curve, RMST, the step lookup, the
-  * Breslow baseline, the Cox likelihood and Harrell's comparable count
-  * compute running sums and products over range-partitioned rows
-  * without a single-partition ordered window.
+  * Breslow baseline and the Cox likelihood compute running sums and
+  * products over range-partitioned rows without a single-partition
+  * ordered window, and how Harrell's C counts its comparable and
+  * cross-bucket pairs with a per-bucket count vector as the carry.
   *
   * The carries are only right if every pass sees the same rows in the
   * same partitions: a range-partitioned RDD recomputed from its plan

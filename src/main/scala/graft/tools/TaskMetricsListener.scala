@@ -1,7 +1,7 @@
 package graft.tools
 
-/** Accumulates task metrics across a measurement window (shared by
-  * Bench and TwoLevelBench). The run/cpu pair is the decisive split for
+/** Accumulates task metrics across a measurement window (Bench's
+  * per-query record). The run/cpu pair is the decisive split for
   * wall-time variance: executorRunTime is thread WALL (inflates when
   * the host deschedules vCPUs — steal the guest may not even see),
   * executorCpuTime is actual on-CPU nanoseconds (inflates only with

@@ -83,6 +83,88 @@ class ScalableConcordanceSpec extends AnyFunSuite {
     val rows = Seq((1.0, 1, 2.0), (2.0, 0, 1.0), (2.0, 1, 3.0), (3.0, 0, 2.5))
     // event (t=1, r=2): j with t>1, r<2 → (2,0,1.0) → 1
     // event (t=2, r=3): j with t>2, r<3 → (3,0,2.5) → 1
-    assert(ScalableConcordance.countWithin(rows) == 2L)
+    val (_, strict) = ScalableConcordance.bucketPairs(rows.map(_._1).toArray,
+      rows.map(_._2 == 1).toArray, rows.map(_._3).toArray, rows.size)
+    assert(strict == 2L)
+  }
+
+  /** The three fields of a (comparable, concordant, cindex) row, nulls
+    * as None and doubles as raw bits.
+    */
+  private def fields(r: org.apache.spark.sql.Row): (Long, Option[Long], Option[Long]) = {
+    def bits(i: Int) = Option(r.get(i)).map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double]))
+    (r.getLong(0), bits(1), bits(2))
+  }
+
+  test("matches pair-join harrell exactly on NaN and signed-zero risks and times, at widths 3 and 7") {
+    import spark.implicits._
+    val rng = new Random(11L)
+    val risks = Array(Double.NaN, -0.0, 0.0, 0.25, -0.25, 0.5)
+    val times = Array(Double.NaN, -0.0, 0.0, 1.0, 2.0, 3.0)
+    val specials = (0 until 300).map { _ =>
+      (times(rng.nextInt(times.length)), rng.nextInt(2), risks(rng.nextInt(risks.length)))
+    }.toDF("t", "e", "r")
+    for (np <- Seq(3, 7)) SparkTestBase.atWidth(np) {
+      for ((name, df) <- Seq("specials" -> specials, "tie-heavy" -> randomData(300, 12L));
+           buckets <- Seq(1, 4, 16)) {
+        val slow = fields(Concordance.harrell(df, "t", "e", "r").head())
+        val fast = fields(ScalableConcordance.harrell(df, "t", "e", "r", buckets).head())
+        assert(fast == slow, s"$name width=$np b=$buckets: $fast != $slow")
+      }
+    }
+  }
+
+  private def allCensored = {
+    import spark.implicits._
+    Seq((1.0, 0, 0.5), (2.0, 0, 0.1), (3.0, 0, 0.9)).toDF("t", "e", "r")
+  }
+
+  test("harrell with no comparable pair gives the pair join's row: comparable 0, nulls") {
+    import spark.implicits._
+    val single = Seq((1.0, 1, 0.5)).toDF("t", "e", "r")
+    for ((name, df) <- Seq("all censored" -> allCensored, "one row" -> single)) {
+      val slow = fields(Concordance.harrell(df, "t", "e", "r").head())
+      assert(slow == ((0L, None, None)), s"$name: pair join $slow")
+      assert(fields(ScalableConcordance.harrell(df, "t", "e", "r", 4).head()) == slow, name)
+    }
+  }
+
+  test("antolini with no comparable pair gives the pair join's row: comparable 0, nulls") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val ids = allCensored.withColumn("id", monotonically_increasing_id())
+    val grid = Array(1.0, 2.0, 3.0)
+    val surv = ids.crossJoin(grid.toSeq.toDF("tau")).select(col("id"), col("tau"), col("r").as("s"))
+    val slow = fields(Concordance.antolini(ids, "id", "t", "e", surv, grid).head())
+    assert(slow == ((0L, None, None)), s"pair join $slow")
+    assert(fields(ScalableConcordance.antolini(ids, "id", "t", "e", surv, grid).head()) == slow)
+  }
+
+  test("harrell rejects a non-positive numBuckets, naming it") {
+    val df = randomData(10, 1L)
+    for (b <- Seq(0, -3)) {
+      val e = intercept[IllegalArgumentException](ScalableConcordance.harrell(df, "t", "e", "r", b))
+      assert(e.getMessage.contains(s"numBuckets=$b"), e.getMessage)
+    }
+  }
+
+  test("one harrell call on a multi-partition input runs at most 8 jobs") {
+    val df = randomData(400, 13L) // a local Seq: one input partition per core
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    SparkTestBase.atWidth(7) {
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+      sc.addSparkListener(l)
+      try {
+        ScalableConcordance.harrell(df, "t", "e", "r", 16).collect()
+        org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+      } finally sc.removeSparkListener(l)
+    }
+    assert(n.get() <= 8, s"harrell ran ${n.get()} jobs")
   }
 }
