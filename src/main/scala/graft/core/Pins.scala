@@ -149,6 +149,19 @@ object Pins {
     rdd
   }
 
+  /** Hand a pin on `rdd` that [[held]] returned with `release` over to
+    * the innermost scope on this thread: that scope takes a reference,
+    * then `release` drops the held one, so the cache stays live
+    * throughout. Unscoped, the held reference is forgotten instead: the
+    * RDD stays persisted, as an unscoped [[pinRdd]] leaves it, until it
+    * is garbage-collected. Do not call `release` afterwards.
+    */
+  def adopt[T](rdd: RDD[T], release: () => Unit): RDD[T] = lock.synchronized {
+    if (current.get().nonEmpty) { pinRdd(rdd); release() }
+    else entries.find(_.key eq rdd).foreach(entries -= _)
+    rdd
+  }
+
   /** Register an eagerly-checkpointed Dataset for release at the
     * innermost scope's exit (no scope → not released here; the blocks
     * go when the checkpoint RDD is garbage-collected). This is how an
@@ -266,8 +279,9 @@ object Pins {
     }
 
   /** Release the cached blocks of a locally-checkpointed Dataset —
-    * the per-iteration STATE ROTATION primitive for iterative
-    * operators (connectedComponents, the k-means quantizer). Without
+    * the per-iteration STATE ROTATION primitive for the k-means
+    * quantizer, the one iterative operator that still checkpoints
+    * (the RDD kernels rotate persists through `Rounds`). Without
     * rotation a 20-round loop leaves 20 superseded checkpoint RDDs in the
     * storage pool; at scale the pool saturates and every block
     * unroll fights task execution for the ONE UnifiedMemoryManager

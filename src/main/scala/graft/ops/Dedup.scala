@@ -1,18 +1,35 @@
 package graft.ops
 
-import graft.core.Pins
+import graft.core.{Pins, Rounds, Width}
 import graft.functions.VecDot.vec_dot
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines: exact
   * (content hash), n-gram Jaccard, MinHash+LSH, SimHash, and
-  * embedding-cosine near-dup. Everything is hash-partitioned
-  * relational dataflow — group-bys on content keys, explodes bounded
-  * by shingle counts, band-bucket joins instead of all-pairs — the
-  * shapes that survive a 100-TB corpus. All hash functions are
-  * arithmetic-only (md5-derived integers) so results are
-  * engine-independent and DuckDB-checkable.
+  * embedding-cosine near-dup, plus the connected components that turn
+  * near-dup pairs into keep/drop clusters. Every shuffle is keyed on
+  * content — group-bys on content keys, explodes bounded by shingle
+  * counts, band-bucket joins instead of all-pairs — the shapes that
+  * survive a 100-TB corpus. All hash functions are arithmetic-only
+  * (md5-derived integers) so results are engine-independent and
+  * DuckDB-checkable.
+  *
+  * The n-gram Jaccard pairs, the MinHash-LSH pairs and the connected
+  * components are RDD kernels on one [[HashPartitioner]] each: their
+  * shuffles run as stages of one Spark job (per pair build, per CC
+  * round), where the same dataflow as DataFrames cost one AQE job per
+  * exchange. Ids and node keys travel as Catalyst's internal values and
+  * compare as Spark SQL compares them (UTF8 byte order for strings), so
+  * every pair, count and label is the one the DataFrame form gives.
   */
 object Dedup {
 
@@ -40,7 +57,15 @@ object Dedup {
     * key downstream joins use.
     */
   def shingles(docs: DataFrame, idCol: String, textCol: String,
-               n: Int = 3): DataFrame = {
+               n: Int = 3): DataFrame =
+    shingleRows(docs, idCol, textCol, n).distinct()
+
+  /** [[shingles]] without its closing distinct: one (id, sh) row per
+    * gram position, so a shingle a document repeats comes once per
+    * occurrence. The pair kernels de-duplicate in their own shuffles.
+    */
+  private def shingleRows(docs: DataFrame, idCol: String, textCol: String,
+                          n: Int): DataFrame = {
     val toks = TextAnalysis.tokens(col(textCol))
     // Spark sequence(1, k) DESCENDS for k < 1, hence the guard
     val idx = when(size(col("toks")) >= n,
@@ -51,49 +76,106 @@ object Dedup {
       .select(col("id"), shingleInt(concat_ws(" ",
         (0 until n).map(o => element_at(col("toks"), col("i") + lit(o))): _*))
         .as("sh"))
-      .distinct()
   }
 
-  /** Candidate pairs sharing ≥1 shingle with exact Jaccard ≥ minJac.
-    * The shingle self-join is an equi-join on the shingle (shuffle on
-    * content, not all-pairs); pair aggregation is one group-by.
+  /** Ids and node keys as the kernels carry them: Catalyst's internal
+    * values (UTF8String for strings; floating keys with -0.0 and NaN
+    * folded the way Spark folds join and grouping keys), ordered the
+    * way Spark SQL's `<`, `min` and `least` order them.
+    */
+  private final case class Key(dt: DataType) {
+    require(dt match {
+      case _: NumericType | _: StringType | BooleanType | DateType | TimestampType |
+           TimestampNTZType => true
+      case _ => false
+    }, s"Dedup: ids and node keys must be numbers, strings, booleans, dates or timestamps, got $dt")
+    @transient lazy val ord: Ordering[Any] = PhysicalDataType.ordering(dt)
+    @transient private lazy val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+
+    def read(r: InternalRow, i: Int): Any =
+      if (r.isNullAt(i)) null
+      else dt match {
+        case DoubleType =>
+          val d = r.getDouble(i)
+          if (d.isNaN) Double.NaN else if (d == 0.0) 0.0 else d
+        case FloatType =>
+          val f = r.getFloat(i)
+          if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+        case _ => InternalRow.copyValue(r.get(i, dt))
+      }
+
+    def external(v: Any): Any = toScala(v)
+  }
+
+  /** `ids` without nulls, sorted by `key`'s order. */
+  private def sortedIds(ids: java.util.HashSet[Any], key: Key): Array[Any] =
+    ids.asScala.iterator.filter(_ != null).toArray.sorted(key.ord)
+
+  /** Candidate pairs sharing ≥1 shingle with exact Jaccard ≥ minJac:
+    * (i, j, inter, un, jac) with i < j, the shared and the union
+    * shingle counts, and jac = inter / un. Shingles in more than
+    * `maxDocFreq` documents are dropped from the shingle space first
+    * (intersection AND union stay consistent): Zipfian corpora have
+    * stop-shingles whose pair count is O(df²) on one key, and a shingle
+    * that common carries no dedup signal. Null ids count towards a
+    * shingle's document frequency but never pair.
+    *
+    * One lazy RDD job when consumed: the (id, sh) rows are shuffled once
+    * by shingle (`repartitionAndSortWithinPartitions`), so a task sweeps
+    * one shingle's ids at a time, drops repeated (id, sh) rows and
+    * capped shingles, and emits per-doc sizes and the (a < b) pairs,
+    * each through a map-side-combined `reduceByKey`; two co-partitioned
+    * joins by id attach `sza` and `szb`. Width: [[Width.explode]], the
+    * stage emits pairs quadratic in a shingle's df.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, minJac: Double = 0.05,
                         maxDocFreq: Int = Int.MaxValue): DataFrame = {
-    // Zipfian corpora have stop-shingles ("of the and" class) whose
-    // document frequency df makes the self-join below O(df²) on that
-    // one key — skewed AND quadratic. The standard production guard:
-    // drop shingles with df > maxDocFreq from the shingle space
-    // entirely (intersection AND union stay consistent); a shingle
-    // present in that many documents carries no dedup signal. One
-    // extra groupBy on the shingle key the join shuffles on anyway.
-    // with the cap, shAll feeds BOTH the df aggregate and the join's
-    // probe side — pin it so the dominant tokenize+hash+distinct
-    // pipeline runs once, not once per consumer
-    val shAll =
-      if (maxDocFreq == Int.MaxValue) shingles(docs, idCol, textCol, n)
-      else Pins.pin(shingles(docs, idCol, textCol, n))
-    val sh = Pins.pin(if (maxDocFreq == Int.MaxValue) shAll
-      else {
-        val freq = shAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDocFreq)
-        shAll.join(freq.select(col("sh")), Seq("sh"))
-      })
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = sh.as("a").join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("i"), col("b.id").as("j"))
-      .agg(count(lit(1)).as("inter"))
-    val out = inter
-      .join(sizes.select(col("id").as("i"), col("sz").as("sza")), Seq("i"))
-      .join(sizes.select(col("id").as("j"), col("sz").as("szb")), Seq("j"))
-      .select(col("i"), col("j"), col("inter"),
-        (col("sza") + col("szb") - col("inter")).as("un"),
-        (col("inter").cast("double") /
-          (col("sza") + col("szb") - col("inter")).cast("double")).as("jac"))
-      .filter(col("jac") >= minJac)
-    out
+    require(n >= 1, s"ngramJaccardPairs: n must be >= 1, got $n")
+    require(maxDocFreq >= 1,
+      s"ngramJaccardPairs: maxDocFreq must be >= 1, got $maxDocFreq")
+    val spark = docs.sparkSession
+    val rows = shingleRows(docs, idCol, textCol, n)
+    val idType = rows.schema("id").dataType
+    val key = Key(idType)
+    val part = new HashPartitioner(Width.explode(spark))
+    val byShingle = rows.queryExecution.toRdd
+      .map(r => (r.getLong(1), key.read(r, 0)))
+      .repartitionAndSortWithinPartitions(part)
+    // each kept shingle's distinct non-null ids, sorted, in one sweep
+    // per consumer (both read the one sorted shuffle)
+    def sweep[T: scala.reflect.ClassTag](emit: Array[Any] => Iterator[T]): RDD[T] =
+      byShingle.mapPartitions { it =>
+        val in = it.buffered
+        val ids = new java.util.HashSet[Any]()
+        Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+          val sh = in.head._1
+          ids.clear()
+          while (in.hasNext && in.head._1 == sh) {
+            val id = in.next()._2
+            if (ids.size <= maxDocFreq) ids.add(id)
+          }
+          if (ids.size > maxDocFreq) Iterator.empty else emit(sortedIds(ids, key))
+        }
+      }
+    val sizes = sweep(_.iterator.map(_ -> 1L)).reduceByKey(part, _ + _)
+    val inter = sweep { ids =>
+      ids.indices.iterator.flatMap(a =>
+        (a + 1 until ids.length).iterator.map(b => (ids(a), ids(b)) -> 1L))
+    }.reduceByKey(part, _ + _)
+    val out = inter.map { case ((i, j), c) => (i, (j, c)) }
+      .join(sizes, part)
+      .map { case (i, ((j, c), sza)) => (j, (i, c, sza)) }
+      .join(sizes, part)
+      .flatMap { case (j, ((i, c, sza), szb)) =>
+        val un = sza + szb - c
+        val jac = c.toDouble / un.toDouble
+        if (jac >= minJac) Iterator.single(Row(key.external(i), key.external(j), c, un, jac))
+        else Iterator.empty
+      }
+    spark.createDataFrame(out, StructType(Seq(StructField("i", idType),
+      StructField("j", idType), StructField("inter", LongType),
+      StructField("un", LongType), StructField("jac", DoubleType))))
   }
 
   /** Shingle → 60-bit integer via md5 prefix (engine-independent).
@@ -124,63 +206,99 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
   }
 
-  /** LSH band-bucket candidate pairs + estimated (minhash-agreement)
-    * and exact Jaccard. Bands of `rowsPerBand` signature rows; docs
-    * sharing any band key become candidates — the join is on the band
-    * key (content-addressed), never all-pairs. One persisted (id, sh)
-    * table feeds signatures, sizes, and the exact-Jaccard branch.
-    */
   /** Band `b`'s LSH bucket key from a minhash signature array: the
     * rowsPerBand slice serialized as a comma-joined string. ONE
     * definition on purpose — the streaming ingest gates
-    * ([[graft.streaming.StreamingOps]]) and this batch path compare
-    * these keys AS STRINGS, so any drift (separator, slice bounds,
-    * cast) between hand-rolled copies would silently break their
-    * batch-vs-stream parity.
+    * ([[graft.streaming.StreamingOps]]) compare these keys AS STRINGS,
+    * so any drift (separator, slice bounds, cast) between hand-rolled
+    * copies would silently break their batch-vs-stream parity.
+    * ([[minhashLshPairs]] compares the same slices as long arrays:
+    * equal strings iff equal slices.)
     */
   def bandKey(sig: Column, b: Column, rowsPerBand: Int): Column =
     concat_ws(",", transform(
       slice(sig, b * rowsPerBand + lit(1), lit(rowsPerBand)),
       _.cast("string")))
 
+  /** One document in [[minhashLshPairs]]: its sorted distinct shingles
+    * and its minhash signature.
+    */
+  private final case class MinhashDoc(sh: Array[Long], sig: Array[Long])
+
+  /** LSH band-bucket candidate pairs with their estimated (minhash
+    * agreement) and exact Jaccard: (i, j, est, jac), i < j. Bands of
+    * `rowsPerBand` signature rows; docs sharing any band key become
+    * candidates — buckets are keyed on content, never all-pairs. Null
+    * ids never pair. The signature is [[minhashSignatureArr]]'s, with
+    * the same Long arithmetic.
+    *
+    * One lazy RDD job when consumed: one shuffle by id builds each
+    * doc's sorted distinct shingle array and signature (pinned: three
+    * consumers), one shuffle of (band, slice) keys yields candidate id
+    * pairs only — payloads are never grouped inside a bucket — and a
+    * `reduceByKey` de-duplicates them; co-partitioned joins on i, then
+    * on j, attach both docs' payloads. `est` is agree / numHashes,
+    * `jac` a merge-intersection of the sorted arrays over the union.
+    */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 16, rowsPerBand: Int = 4,
                       n: Int = 3): DataFrame = {
-    val sh = Pins.pin(shingles(docs, idCol, textCol, n))
-    val sig = Pins.pin(minhashSignatureArr(sh, numHashes))
+    require(n >= 1, s"minhashLshPairs: n must be >= 1, got $n")
+    require(rowsPerBand >= 1,
+      s"minhashLshPairs: rowsPerBand must be >= 1, got $rowsPerBand")
+    require(numHashes >= rowsPerBand && numHashes % rowsPerBand == 0,
+      s"minhashLshPairs: numHashes must be a positive multiple of " +
+        s"rowsPerBand ($rowsPerBand), got $numHashes")
+    val spark = docs.sparkSession
+    val rows = shingleRows(docs, idCol, textCol, n)
+    val idType = rows.schema("id").dataType
+    val key = Key(idType)
+    val part = new HashPartitioner(Width.explode(spark))
     val nBands = numHashes / rowsPerBand
-    val bands = sig.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(nBands - 1)), b =>
-          bandKey(col("sig"), b, rowsPerBand))).as(Seq("band", "key")))
-    // persisted: both the est and exact-Jaccard branches consume cand,
-    // and without the pin the band self-join runs once per branch
-    val cand = Pins.pin(bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("i"), col("b.id").as("j")).distinct())
-    // estimated similarity: fraction of agreeing minhashes (array zip)
-    val est = cand
-      .join(sig.select(col("id").as("i"), col("sig").as("sa")), Seq("i"))
-      .join(sig.select(col("id").as("j"), col("sig").as("sb")), Seq("j"))
-      .select(col("i"), col("j"),
-        (aggregate(zip_with(col("sa"), col("sb"),
-          (a, b) => when(a === b, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") /
-          lit(numHashes.toDouble)).as("est"))
-    // exact jaccard for verification
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(sh.select(col("id").as("i"), col("sh").as("sha")), Seq("i"))
-      .join(sh.select(col("id").as("j"), col("sh").as("shb")), Seq("j"))
-      .filter(col("sha") === col("shb"))
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("inter"))
-    est.join(inter, Seq("i", "j"), "left")
-      .join(sizes.select(col("id").as("i"), col("sz").as("sza")), Seq("i"))
-      .join(sizes.select(col("id").as("j"), col("sz").as("szb")), Seq("j"))
-      .select(col("i"), col("j"), col("est"),
-        (coalesce(col("inter"), lit(0L)).cast("double") /
-          (col("sza") + col("szb") - coalesce(col("inter"), lit(0L))).cast("double"))
-          .as("jac"))
+    val byId = Pins.pinRdd(rows.queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0)) None else Some(key.read(r, 0) -> r.getLong(1)))
+      .groupByKey(part)
+      .mapValues { shs =>
+        val sh = shs.toArray.distinct.sorted
+        val sig = Array.tabulate(numHashes) { i =>
+          val (a, b) = (2L * i + 3L, 5L * i + 7L)
+          var m = Long.MaxValue
+          sh.foreach(x => m = math.min(m, ((x % P) * a + b) % P))
+          m
+        }
+        MinhashDoc(sh, sig)
+      })
+    val cand = byId.flatMap { case (id, d) =>
+        (0 until nBands).iterator.map(b =>
+          (b, ArraySeq.unsafeWrapArray(d.sig.slice(b * rowsPerBand, (b + 1) * rowsPerBand))) -> id)
+      }
+      .groupByKey(part)
+      .flatMap { case (_, bucket) =>
+        val ids = bucket.toArray.sorted(key.ord)
+        ids.indices.iterator.flatMap(a =>
+          (a + 1 until ids.length).iterator.map(b => (ids(a), ids(b)) -> ()))
+      }
+      .reduceByKey(part, (x, _) => x)
+      .keys
+    val out = cand.join(byId, part)
+      .map { case (i, (j, a)) => (j, (i, a)) }
+      .join(byId, part)
+      .map { case (j, ((i, a), b)) =>
+        var agree = 0
+        a.sig.indices.foreach(k => if (a.sig(k) == b.sig(k)) agree += 1)
+        var (x, y, inter) = (0, 0, 0L)
+        while (x < a.sh.length && y < b.sh.length) {
+          if (a.sh(x) < b.sh(y)) x += 1
+          else if (a.sh(x) > b.sh(y)) y += 1
+          else { inter += 1; x += 1; y += 1 }
+        }
+        val un = a.sh.length.toLong + b.sh.length.toLong - inter
+        Row(key.external(i), key.external(j), agree.toDouble / numHashes.toDouble,
+          inter.toDouble / un.toDouble)
+      }
+    spark.createDataFrame(out, StructType(Seq(StructField("i", idType),
+      StructField("j", idType), StructField("est", DoubleType),
+      StructField("jac", DoubleType))))
   }
 
   /** SimHash fingerprint over `bits` bit positions of md5-derived
@@ -276,154 +394,117 @@ object Dedup {
     * clustering step that turns pairwise dedup output into keep/drop
     * decisions (canonical = min doc id per component; everything else
     * in the component is a drop candidate). Iterative min-label
-    * propagation: lbl'(v) = min(lbl(v), min over neighbors lbl(u)).
-    * Each round is one equi-join on the node key plus one map-side-
-    * combined groupBy — shuffles keyed on content, never all-pairs —
-    * and the labels DataFrame (one row per node IN AN EDGE, a small
-    * fraction of the corpus) is the only iterated state. Near-dup
-    * graphs are unions of near-cliques (diameter 2–4), so the loop
-    * converges in a handful of rounds; convergence costs one count
-    * per round. For adversarial long-path graphs the same join+agg
-    * structure admits the alternating large-star/small-star variant
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) with O(log n) rounds — the per-round dataflow shape
-    * (and hence the 100-TB story) is identical.
-    * Returns (node, comp) for every node appearing in an edge.
+    * propagation, lbl'(v) = min(lbl(v), min over neighbors lbl(u)),
+    * then pointer jumping, lbl(v) := lbl(lbl(v)): propagation alone
+    * needs diameter rounds, with the jump a path needs about
+    * log(diameter). The label state holds one row per node IN AN EDGE,
+    * a small fraction of the corpus. Returns (node, comp) for every
+    * node appearing in an edge. Fails with IllegalArgumentException on
+    * `maxIter < 1`, and with IllegalStateException when the labels
+    * still change after `maxIter` rounds.
+    *
+    * Scale shape: an RDD kernel on [[graft.core.Rounds]], one
+    * [[HashPartitioner]] at [[PageRank.loopWidth]] with CC's 1M
+    * edges per partition. Both edge directions are hash-partitioned by
+    * node once and pinned; the labels (node → comp) are partitioned the
+    * same way. The init labels lbl0(v) = min(v, min nbr) come from one
+    * narrow pass over the pinned adjacency. A round is one
+    * `zipPartitions` that emits (nbr, label) per edge, one
+    * map-side-combined `reduceByKey(min)`, a narrow update, and the
+    * pointer jump: each node's request travels to its label's
+    * partition and the answer comes back, two more shuffles inside the
+    * same job. That job (`Rounds.settle`) materialises the next
+    * state's pin and counts the labels that changed; the loop stops at
+    * the first round that changes none.
+    *
+    * Nulls behave as the SQL joins of the DataFrame form did: a null
+    * endpoint is a node of its own that neither sends nor receives a
+    * neighbour's label; it starts at its least non-null neighbour (and
+    * is dropped if it has none) and follows that node's label through
+    * the pointer jumps.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // Lineage MUST be cut every round: `labels` appears twice in each
-    // round's plan (directly + through the neighbor join), so keeping
-    // lineage would double the logical plan per round — exponential
-    // analyzer/optimizer blowup long before any executor works hard
-    // (observed as a driver OOM at 25 rounds). The eager
-    // localCheckpoint makes every round's inputs flat cached tables;
-    // the blocks are one row per edge-endpoint node (near-dup nodes
-    // only, a small fraction of the corpus) and are released by the
-    // caller's cache scope.
-    // the edge list is checkpointed BEFORE the undirected union — the
-    // union consumes it twice, and without the cut the upstream pair
-    // pipeline (shingle joins etc.) would execute once per branch
-    val e0 = edges.localCheckpoint(true)
-    // Right-size the LOOP's shuffle parallelism to the iterated state:
-    // the label table is one row per edge-endpoint node — usually a
-    // tiny fraction of the corpus — while the session's shuffle
-    // partition count is sized for corpus-scale scans. Rounds of
-    // 4-shuffle dataflow at session width are pure task-scheduling
-    // overhead (re-measured this round: 1461 tasks / 72.6 execCpuS per
-    // warm sf0.1 run at width 32 + AQE — whose parallelismFirst
-    // coalescing deliberately keeps reducers ≈ cores — vs 356 tasks /
-    // 34.5 execCpuS narrowed). Target ~1M edges per partition, capped
-    // at the session setting so a 100-TB edge set keeps full width.
-    // The narrowing lives on an ISOLATED newSession() clone — shared
-    // SparkContext, cache, and checkpoint blocks, but its OWN SQL conf
-    // — so every loop shuffle runs narrow WITH map-side combine (what
-    // a user-level repartition can't express: the partial agg would
-    // move above the exchange and ship raw edge rows) and NOTHING is
-    // mutated on the caller's session; concurrent queries are safe.
-    // The loop's datasets live in the clone; the returned labels are
-    // re-bound to the caller's session at the end.
-    val spark = e0.sparkSession
-    val nEdges = e0.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    // PageRank.loopWidth with CC's own per-partition target: a
-    // billion-edge near-dup graph would derive past any session width,
-    // and partitions beyond ~2× the machine add only per-task fixed
-    // cost × rounds (see the width rationale and the r17 width-128
-    // probe note there). Sharing the helper keeps the cores cap from
-    // silently diverging between the two iterated-join loops.
-    val loopParts = PageRank.loopWidth(nEdges, sessionParts,
-      spark.sparkContext.defaultParallelism, edgesPerPartition = 1000000L)
-    // conf-preserving clone: a bare newSession() would silently drop
-    // any RUNTIME spark.conf.set state (ANSI mode, AQE toggles,
-    // timezone) a library caller holds — the loop must differ from
-    // the caller's session in shuffle width ONLY
-    val loopSpark = org.apache.spark.sql.graft.bridge.sessionClone(spark)
-    loopSpark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val e = org.apache.spark.sql.graft.bridge.rebind(loopSpark, e0)
-    val undBoth = e.select(col("i").as("node"), col("j").as("nbr"))
-      .union(e.select(col("j").as("node"), col("i").as("nbr")))
-    // init fuses propagation step 1: lbl0(v) = min(v, min nbr) — the
-    // same single groupBy an identity init's distinct() would cost,
-    // but one round ahead (typical near-dup graphs then need one
-    // fewer join-round before the convergence check comes back clean)
-    var labels = undBoth.groupBy(col("node"))
-      .agg(min(col("nbr")).as("nm"))
-      .select(col("node"), least(col("node"), col("nm")).as("comp"))
-      .localCheckpoint(true)
-    var it = 0
-    var converged = false
-    // superseded state (labels checkpoints, prop persists) whose
-    // blocks can only be released once a LATER round's count has
-    // materialized the round that consumed them — more than one entry
-    // accumulates only across count-skipped rounds (below)
-    var pendingLabels = List.empty[DataFrame]
-    var pendingProps = List.empty[() => Unit]
-    while (!converged && it < maxIter) {
-      // min over neighbors' labels (one equi-join + map-side-combined
-      // groupBy), then pointer-jumping compression lbl(v) := lbl(lbl(v))
-      // (one more equi-join on the label) — propagation alone needs
-      // diameter rounds, with compression the round count is
-      // O(log diameter), the property that holds at adversarial depth.
-      // The previous label rides along as `prev` so the convergence
-      // check is a filter-count on the round's own output — the count
-      // is the round's ONLY job; it materializes the lazy checkpoint.
-      val viaNbr = undBoth
-        .join(labels.select(col("node").as("nbr"), col("comp")), Seq("nbr"))
-        .groupBy(col("node")).agg(min(col("comp")).as("nbrMin"))
-      // pinned: the compression self-join consumes prop on BOTH sides —
-      // without the pin each round computes the propagation (and its
-      // two shuffles) twice
-      val (prop, releaseProp) = graft.core.Pins.held(graft.core.Pins.pin(
-        labels.join(viaNbr, Seq("node"), "left")
-          .select(col("node"), col("comp").as("prev"),
-            least(col("comp"), coalesce(col("nbrMin"), col("comp"))).as("comp"))))
-      val next = prop
-        .join(prop.select(col("node").as("comp"), col("comp").as("cc")),
-          Seq("comp"))
-        .select(col("node"), col("prev"), col("cc").as("comp"))
-        .localCheckpoint(false)
-      pendingProps ::= releaseProp
-      pendingLabels ::= labels
-      labels = next.select(col("node"), col("comp"))
-      // Round 1's convergence count is SKIPPED (r20, verdict item 4):
-      // init already fused propagation step 1, so real near-dup
-      // graphs never converge there — round 2's count materializes
-      // both rounds' lazy checkpoints in ONE job (the lineage is RDD-
-      // flat either way; prop stays persisted until its consumer has
-      // materialized). If round 1 DID converge, round 2's count sees
-      // changed == 0 over the already-fixed labels: same fixpoint,
-      // same result, one spare round of tiny-table dataflow traded
-      // for one job per query on every non-degenerate graph.
-      if (it > 0 || it == maxIter - 1) {
-        val changed = next.filter(col("comp") =!= col("prev")).count()
-        // state ROTATION: the count materialized every pending round's
-        // checkpoint — release the superseded blocks so live
-        // checkpoint state stays O(1) in the round count (see
-        // Pins.releaseCheckpoint for the memory-manager convoy that
-        // stacking superseded rounds causes at scale)
-        pendingProps.foreach(_())
-        pendingLabels.foreach(graft.core.Pins.releaseCheckpoint)
-        pendingProps = Nil
-        pendingLabels = Nil
-        converged = changed == 0
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    components(edges, maxIter, parts = None)
+
+  /** One node's label, and its label before the round that set it. */
+  private final case class Label(comp: Any, prev: Any)
+
+  /** The kernel behind [[connectedComponents]]; `parts` overrides the
+    * loop width (specs run it at several widths).
+    */
+  private[ops] def components(edges: DataFrame, maxIter: Int,
+                              parts: Option[Int]): DataFrame = {
+    require(maxIter >= 1, s"connectedComponents: maxIter must be >= 1, got $maxIter")
+    val spark = edges.sparkSession
+    // one key type for both endpoints, as Spark's coercion widens them
+    val keyType = edges.select(array(col("i"), col("j"))).schema.head
+      .dataType.asInstanceOf[ArrayType].elementType
+    val key = Key(keyType)
+    val rows = edges.select(col("i").cast(keyType), col("j").cast(keyType))
+      .queryExecution.toRdd.map(r => (key.read(r, 0), key.read(r, 1)))
+    val width = (nEdges: Long) => parts.getOrElse(PageRank.loopWidth(nEdges,
+      spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      spark.sparkContext.defaultParallelism, edgesPerPartition = 1000000L))
+    val labels = Rounds.run[Any, Any, Label](rows, width,
+        spread = _.flatMap { case (i, j) => Iterator(i -> j, j -> i) }) { loop =>
+      val part = loop.part
+      val adj = loop.input
+      var labels: RDD[(Any, Label)] = adj.mapPartitions({ es =>
+        val least = new java.util.HashMap[Any, Any]()
+        es.foreach { case (v, u) =>
+          val cur = if (least.containsKey(v)) least.get(v) else v
+          least.put(v, if (u == null) cur else if (cur == null) u else key.ord.min(cur, u))
+        }
+        val out = Iterator.newBuilder[(Any, Label)]
+        least.forEach((v, c) => if (c != null) out += v -> Label(c, c))
+        out.result()
+      }, preservesPartitioning = true)
+      var it = 0
+      var changed = 1L
+      while (changed > 0 && it < maxIter) {
+        val nbrMin = labels.zipPartitions(adj) { (ls, es) =>
+          val comp = new java.util.HashMap[Any, Any]()
+          ls.foreach { case (v, l) => if (v != null) comp.put(v, l.comp) }
+          es.flatMap { case (v, u) =>
+            val c = if (u == null) null else comp.get(v)
+            if (c == null) Iterator.empty else Iterator.single(u -> c)
+          }
+        }.reduceByKey(part, key.ord.min(_, _))
+        val prop = labels.zipPartitions(nbrMin, preservesPartitioning = true) { (ls, ms) =>
+          val m = new java.util.HashMap[Any, Any]()
+          ms.foreach { case (u, c) => m.put(u, c) }
+          ls.map { case (v, l) =>
+            val c = if (v == null) null else m.get(v)
+            v -> Label(if (c == null) l.comp else key.ord.min(l.comp, c), l.comp)
+          }
+        }
+        // pointer jumping: ask comp's partition for comp's own label
+        val next = prop.map { case (v, l) => l.comp -> (v, l.prev) }
+          .partitionBy(part)
+          .zipPartitions(prop) { (asks, ps) =>
+            val m = new java.util.HashMap[Any, Any]()
+            ps.foreach { case (v, l) => m.put(v, l.comp) }
+            asks.flatMap { case (c, (v, prev)) =>
+              val cc = m.get(c)
+              if (cc == null) Iterator.empty else Iterator.single(v -> Label(cc, prev))
+            }
+          }
+          .partitionBy(part)
+        val (settled, n) = loop.settle(next)(
+          _.count { case (_, l) => !key.ord.equiv(l.comp, l.prev) }.toLong)(_ + _)
+        if (it == 0) loop.dropIngest()
+        labels = settled
+        changed = n
+        it += 1
       }
-      it += 1
+      if (changed > 0) throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds " +
+          "(diameter > 2^maxIter is not a realistic near-dup graph)")
+      labels
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "(diameter > 2^maxIter is not a realistic near-dup graph)")
-    // the edge checkpoint fed every round's undirected union; the
-    // returned labels are checkpoint-cut and independent of it
-    // (released via e0 — the checkpointed dataset itself; `e` is a
-    // rebind whose leaf is a DERIVED scan of the same blocks)
-    graft.core.Pins.releaseCheckpoint(e0)
-    // the FINAL round's label checkpoint backs the returned frame —
-    // registered with the caller's pin scope (released at scope exit;
-    // consume the result inside the scope)
-    graft.core.Pins.pinCheckpoint(labels)
-    // back to the caller's session (and its shuffle width): labels'
-    // rows come straight off the final round's checkpoint blocks
-    org.apache.spark.sql.graft.bridge.rebind(spark, labels)
+    spark.createDataFrame(
+      labels.map { case (v, l) => Row(key.external(v), key.external(l.comp)) },
+      StructType(Seq(StructField("node", keyType), StructField("comp", keyType))))
   }
 
   /** Duplicate-SPAN scrub (the document-REWRITING flavor of dedup used

@@ -1,8 +1,7 @@
 package graft.ops
 
-import graft.core.Pins
+import graft.core.Rounds
 import graft.functions.Dec15.Limbs
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -26,20 +25,21 @@ import org.apache.spark.sql.types._
   * (same trick as the k-means quantizer's 6dp-deterministic centroid
   * path).
   *
-  * Scale shape: an RDD kernel on one [[HashPartitioner]] at
-  * [[loopWidth]]. The edge list is hash-partitioned by `src` once and
-  * pinned; the per-node state (node, od, seed, m) is partitioned the
-  * same way, so a node's state and its out-edges share a partition.
-  * Each round is one `zipPartitions` that emits every edge's m/od as
-  * exact limbs keyed by `dst`, one map-side-combined `reduceByKey` on
-  * the same partitioner, and a narrow update that zips the sums back
-  * onto the state: ONE shuffle and ONE job per round. That job also
-  * materialises the new state's pin and sums its dangling mass, the
-  * one driver value the next round needs.
+  * Scale shape: an RDD kernel on [[graft.core.Rounds]], one
+  * [[org.apache.spark.HashPartitioner]] at [[loopWidth]]. The edge
+  * list is hash-partitioned by `src` once and pinned; the per-node
+  * state (node, od, seed, m) is partitioned the same way, so a node's
+  * state and its out-edges share a partition. Each round is one
+  * `zipPartitions` that emits every edge's m/od as exact limbs keyed
+  * by `dst`, one map-side-combined `reduceByKey` on the same
+  * partitioner, and a narrow update that zips the sums back onto the
+  * state: ONE shuffle and ONE job per round. That job
+  * (`Rounds.settle`) also materialises the new state's pin and sums
+  * its dangling mass, the one driver value the next round needs.
   *
   * Why not DataFrames: the per-round DataFrame dataflow (rank⋈edge
   * join + groupBy(dst), a broadcast 1-row dangling aggregate, a left
-  * join onto the node table and an eager localCheckpoint) cost about
+  * join onto the node table and an eager local checkpoint) cost about
   * seven AQE jobs a round, and its wall time was almost all driver-side
   * SQL planning, codegen and stage scheduling, not executor work
   * (q_pagerank: 38 one-task jobs, ~3.2 s of build against ~1 cpu-s).
@@ -47,13 +47,11 @@ import org.apache.spark.sql.types._
   * the loop width, and the caller's session conf is only read (for
   * the width cap), never changed.
   *
-  * State rotation: each round's state is pinned in its own scope and
-  * released once its successor is materialised; the edge pin goes when
-  * the last round has run. The final state backs the returned frame
-  * and is pinned in the caller's scope (consume the result inside it).
-  * Pins are persists, not checkpoints, so every released block can
-  * still be recomputed from lineage; the lineage grows by one narrow
-  * zip per round.
+  * State rotation is `Rounds`': each round's state is pinned in its
+  * own scope and released once its successor is materialised; the
+  * edge pin goes when the last round has run. The final state backs
+  * the returned frame and is pinned in the caller's scope (consume the
+  * result inside it).
   */
 object PageRank {
 
@@ -122,9 +120,10 @@ object PageRank {
     *
     * SHARED by both iterative graph operators: connectedComponents
     * calls this with its own `edgesPerPartition` target (1M — its
-    * per-row work is a min over two longs) so the cores cap can never
+    * per-row work is a min over two keys) so the cores cap can never
     * silently diverge between the two loops (a CC-side width pin in
-    * PageRankSpec holds both).
+    * PageRankSpec holds both). Both loops run on
+    * [[graft.core.Rounds]] at this width.
     */
   def loopWidth(nEdges: Long, sessionParts: Long, cores: Int,
                 edgesPerPartition: Long = 262144L): Int =
@@ -150,41 +149,6 @@ object PageRank {
     if (x.isNaN || x.isInfinite) x
     else BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** The round's one job: pin `state` and materialise it while summing
-    * its [[Summary]]. The last state's pin goes to the caller's scope
-    * (it backs the returned frame); every other one is held, and the
-    * returned release drops it once its successor is materialised (or
-    * at once, if the job fails).
-    */
-  private def settle(state: RDD[(Any, Node)], last: Boolean)
-      : (RDD[(Any, Node)], () => Unit, Summary) = {
-    def pinAndSum(): (RDD[(Any, Node)], Summary) = {
-      val pinned = Pins.pinRdd(state)
-      val summary = pinned.mapPartitions { it =>
-        var nodes = 0L
-        var seeds = 0L
-        var dangling = Limbs.zero
-        it.foreach { case (_, v) =>
-          nodes += 1
-          if (v.seed) seeds += 1
-          if (v.od == 0) {
-            val l = Limbs.of(v.m)
-            if (l != null) dangling += l
-          }
-        }
-        Iterator.single(Summary(nodes, seeds, dangling))
-      }.reduce(_ + _)
-      (pinned, summary)
-    }
-    if (last) {
-      val (pinned, summary) = pinAndSum()
-      (pinned, () => (), summary)
-    } else {
-      val ((pinned, summary), release) = Pins.held(pinAndSum())
-      (pinned, release, summary)
-    }
-  }
-
   /** The kernel behind [[ranks]] and [[personalizedRanks]]; `parts`
     * overrides [[loopWidth]] (specs run it at several widths).
     */
@@ -201,32 +165,23 @@ object PageRank {
     // gives the pair (the node column keeps the input's type)
     val key = edges.select(array(col("src"), col("dst"))).schema.head
       .dataType.asInstanceOf[ArrayType].elementType
-
-    // The edge list as read, pinned: the sizing count and the
-    // partitioning pass below both read it, so its plan runs once.
-    val ((ingest, nEdges), releaseIngest) = Pins.held {
-      val rows = Pins.pinRdd(
-        edges.select(col("src").cast(key), col("dst").cast(key)).rdd
-          .map(r => (r.get(0), r.get(1))))
-      (rows, rows.count())
-    }
-    val part = new HashPartitioner(parts.getOrElse(loopWidth(nEdges,
+    val rows = edges.select(col("src").cast(key), col("dst").cast(key)).rdd
+      .map(r => (r.get(0), r.get(1)))
+    val width = (nEdges: Long) => parts.getOrElse(loopWidth(nEdges,
       spark.conf.get("spark.sql.shuffle.partitions").toLong,
-      spark.sparkContext.defaultParallelism)))
-    // The loop's big invariant input: hash-partitioned by src once, so
+      spark.sparkContext.defaultParallelism))
+    // The loop's input is the edge list hash-partitioned by src, so
     // each round reads a node's out-edges in its own state partition.
-    val (bySrc, releaseEdges) =
-      Pins.held(Pins.pinRdd(ingest.partitionBy(part)))
-    // the current round's held state pin (none until the node table)
-    var releaseState: () => Unit = () => ()
-    try {
+    val state = Rounds.run[Any, Any, Node](rows, width) { loop =>
+      val part = loop.part
+      val bySrc = loop.input
       // earlyRelease: materialise the edge pin NOW (one extra edge
       // pass) and drop the ingest pin — everything below reads the
       // edge pin. Default: the node table's job materialises it, then
       // the ingest pin goes.
       if (earlyRelease) {
         bySrc.count()
-        releaseIngest()
+        loop.dropIngest()
       }
 
       // Node universe AND out-degree in one map-side-combined shuffle:
@@ -244,21 +199,18 @@ object PageRank {
               od.iterator.map(d => k -> Node(d, seed = k != null && hits.nonEmpty, m = 1.0))
           }, preservesPartitioning = true)
       }
-      val (nodeState, releaseNodes, nodeSummary) = settle(nodes, last = iters == 0)
-      releaseState = releaseNodes
-      releaseIngest()
-      val nD = nodeSummary.nodes.toDouble
+      var (state, summary) = loop.settle(nodes)(summarise)(_ + _)
+      loop.dropIngest()
+      val nD = summary.nodes.toDouble
       // |restart set|: the whole graph for classic PR, the in-graph
       // seeds for personalized
-      val sD = seeds.fold(nD)(_ => nodeSummary.seeds.toDouble)
+      val sD = seeds.fold(nD)(_ => summary.seeds.toDouble)
       require(sD > 0,
         if (seeds.isEmpty) "PageRank needs a non-empty edge list"
         else "personalized PageRank needs >= 1 in-graph seed")
 
       val teleport = 1.0 - damping
       val personalized = seeds.isDefined
-      var state = nodeState
-      var summary = nodeSummary
       var it = 0
       while (it < iters) {
         val dm = summary.dangling.value
@@ -292,26 +244,31 @@ object PageRank {
             k -> v.copy(m = roundHalfUp(m2, roundDp))
           }
         }
-        val (nextState, releaseNext, nextSummary) = settle(next, last = it == iters - 1)
-        releaseState()
-        releaseState = releaseNext
+        val (nextState, nextSummary) = loop.settle(next)(summarise)(_ + _)
         state = nextState
         summary = nextSummary
         it += 1
       }
-      // the final state is materialised; the edges are no longer needed
-      releaseEdges()
-      spark.createDataFrame(state.map { case (k, v) => Row(k, v.od, v.m) },
-        StructType(Seq(StructField("node", key), StructField("od", LongType),
-          StructField("m", DoubleType))))
-    } catch {
-      // a failed round must not leave its held pins behind (each
-      // release is a no-op once it has run)
-      case t: Throwable =>
-        releaseState()
-        releaseEdges()
-        releaseIngest()
-        throw t
+      state
     }
+    spark.createDataFrame(state.map { case (k, v) => Row(k, v.od, v.m) },
+      StructType(Seq(StructField("node", key), StructField("od", LongType),
+        StructField("m", DoubleType))))
+  }
+
+  /** A state partition's [[Summary]]: the sum a round's job folds. */
+  private def summarise(it: Iterator[(Any, Node)]): Summary = {
+    var nodes = 0L
+    var seeds = 0L
+    var dangling = Limbs.zero
+    it.foreach { case (_, v) =>
+      nodes += 1
+      if (v.seed) seeds += 1
+      if (v.od == 0) {
+        val l = Limbs.of(v.m)
+        if (l != null) dangling += l
+      }
+    }
+    Summary(nodes, seeds, dangling)
   }
 }
