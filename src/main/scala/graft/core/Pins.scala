@@ -38,8 +38,18 @@ import org.apache.spark.storage.StorageLevel
   * are a per-thread stack, so concurrent configs (each in its own
   * scope on its own thread) release exactly their own pins. A pin
   * taken outside any scope is never released here: a plan stays cached
-  * for the session (the memoized churn dataset), an RDD until it is
-  * garbage-collected.
+  * for the session, an RDD until it is garbage-collected. (The
+  * memoized churn dataset keeps its pins the same way, under a [[held]]
+  * release it never calls.)
+  *
+  * Pins are persists, not checkpoints: a released block can still be
+  * recomputed from lineage, so a frame consumed after its scope has
+  * released its pins recomputes instead of failing. This is the
+  * engine's only state lifecycle; nothing in `src/main` takes a local
+  * checkpoint. A recompute repeats the plan, not the physical layout:
+  * a frame whose values depend on how a pinned range exchange split
+  * its rows (`StableOrder`'s row numbers) must keep its pins while it
+  * is read.
   */
 object Pins {
 
@@ -114,7 +124,6 @@ object Pins {
     */
   def pin[T](ds: Dataset[T],
              level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
-    requireConsumable(ds, "pin() input")
     // analysed before taking the lock
     val plan = ds.queryExecution.normalized
     acquire(plan, org.apache.spark.sql.graft.bridge.isCached(ds))(
@@ -160,162 +169,6 @@ object Pins {
     if (current.get().nonEmpty) { pinRdd(rdd); release() }
     else entries.find(_.key eq rdd).foreach(entries -= _)
     rdd
-  }
-
-  /** Register an eagerly-checkpointed Dataset for release at the
-    * innermost scope's exit (no scope → not released here; the blocks
-    * go when the checkpoint RDD is garbage-collected). This is how an
-    * iterative operator's FINAL checkpoint — the one round the
-    * rotation can't release, because the returned frame reads it —
-    * gets released once the caller's scope closes.
-    *
-    * Same safety contract as [[releaseCheckpoint]]: the scope must
-    * materialize every consumer of the returned frame before it exits
-    * — a truncated-lineage block can never recompute ("consume the
-    * result inside the scope").
-    *
-    * HAZARD (scope nesting): registration is with the INNERMOST scope
-    * on the current thread. If an operator returning a
-    * checkpoint-backed frame is ever invoked inside a narrower
-    * internal `scoped` block, the blocks are released at that inner
-    * scope's exit and the caller's later consumption fails — the
-    * frame must escape no scope narrower than its consumers. Released
-    * ids are tombstoned ([[requireConsumable]]) so the failure names
-    * the contract instead of surfacing as a block-manager error.
-    */
-  def pinCheckpoint(ds: Dataset[_]): Unit =
-    current.get().headOption.foreach(_.add(() => releaseCheckpoint(ds)))
-
-  // ---- use-after-release tombstones -------------------------------
-  // RDD ids of checkpoints released through releaseCheckpoint (state
-  // rotation AND scope-exit checkpoint pins). A released local checkpoint's
-  // lineage is truncated, so any later execution over it dies deep in
-  // the block manager with a generic "block not found" that names
-  // neither the operator nor the contract; the tombstones let the
-  // entry points that stale frames cross (bridge.rebind, [[pin]])
-  // fail loudly with the fix in the message instead. Bounded ring —
-  // ids are context-unique and never reused, so there are no ID-REUSE
-  // false positives; eviction only ever FORGETS an old release (back
-  // to the generic error), never misreports a live one. (The check is
-  // a LINEAGE property, not a cache one — see the caveat on
-  // [[requireConsumable]].)
-  private val TombstoneCap = 4096
-  private val tombstoneRing =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  // ring occupancy tracked explicitly: ConcurrentLinkedQueue.size() is
-  // an O(n) traversal, so calling it per released checkpoint turns the
-  // eviction loop quadratic once the ring sits near the cap
-  private val tombstoneCount = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val tombstones =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  // RDD ids restart at 0 per SparkContext, so the key carries the
-  // context's epoch-unique startTime — a tombstone can never flag an
-  // RDD of a LATER context that happens to reuse the integer id.
-  private def tombstoneKey(rdd: RDD[_]): String =
-    s"${rdd.context.startTime}:${rdd.id}"
-
-  private def recordTombstone(rdd: RDD[_]): Unit = {
-    val key = tombstoneKey(rdd)
-    if (tombstones.add(key)) {
-      tombstoneRing.add(key)
-      // count races concurrent adds at worst into harmless transient
-      // over-eviction (one extra old entry forgotten), never a miss
-      if (tombstoneCount.incrementAndGet() > TombstoneCap) {
-        val old = tombstoneRing.poll()
-        if (old != null) { tombstoneCount.decrementAndGet(); tombstones.remove(old) }
-      }
-    }
-  }
-
-  private def lineageHitsTombstone(rdd: RDD[_],
-                                   seen: scala.collection.mutable.Set[Int]): Option[Int] =
-    if (!seen.add(rdd.id)) None
-    else if (tombstones.contains(tombstoneKey(rdd))) Some(rdd.id)
-    else rdd.dependencies.iterator
-      .flatMap(d => lineageHitsTombstone(d.rdd, seen)).nextOption()
-
-  /** First released-checkpoint RDD id reachable from `ds`'s plan
-    * (LogicalRDD leaves and their lineage — a re-bound frame's leaf is
-    * a DERIVED scan over the checkpoint RDD, so the walk follows
-    * dependencies; checkpoint lineage is truncated, keeping it
-    * shallow). None → every checkpoint under `ds` is still live.
-    */
-  def releasedCheckpointIn(ds: Dataset[_]): Option[Int] = {
-    if (tombstones.isEmpty) return None // nothing released yet: no walk
-    val seen = scala.collection.mutable.Set.empty[Int]
-    ds.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.iterator.flatMap(lineageHitsTombstone(_, seen)).nextOption()
-  }
-
-  /** Fail loudly — naming the operator contract and the fix — when
-    * `ds` reads a checkpoint that state rotation or a pin-scope exit
-    * already released. Called where stale frames cross operator
-    * boundaries (bridge.rebind, [[pin]]); also a standalone debug
-    * helper for diagnosing a raw "block not found".
-    *
-    * CAVEAT (conservative by design): the walk is a LINEAGE property —
-    * it is blind to CacheManager coverage. A frame whose lineage roots
-    * in a released checkpoint but whose subtree is fully served by a
-    * live InMemoryRelation pin would execute fine off the cache, yet
-    * is rejected here; cache entries are evictable, so treating a
-    * cache hit as consumability would make the check load-dependent
-    * (pass under memory headroom, "block not found" under pressure).
-    * No in-repo call path pins/rebinds over released lineage, but
-    * library callers composing their own scopes may hit this: keep
-    * the checkpoint live until its cached consumers are materialized
-    * (the documented scope contract), exactly as the error says.
-    */
-  def requireConsumable(ds: Dataset[_], what: String = "frame"): Unit =
-    releasedCheckpointIn(ds).foreach { id =>
-      throw new IllegalStateException(
-        s"$what is backed by a local checkpoint (RDD $id) that was " +
-          "already released at pin-scope exit or by state rotation — a " +
-          "truncated-lineage checkpoint cannot recompute, so this frame " +
-          "is permanently dead (Spark would fail with a generic 'block " +
-          "not found' at execution). Consume an operator's result inside " +
-          "the Pins.scoped block that produced it.")
-    }
-
-  /** Release the cached blocks of a locally-checkpointed Dataset —
-    * the per-iteration STATE ROTATION primitive for the k-means
-    * quantizer, the one iterative operator that still checkpoints
-    * (the RDD kernels rotate persists through `Rounds`). Without
-    * rotation a 20-round loop leaves 20 superseded checkpoint RDDs in the
-    * storage pool; at scale the pool saturates and every block
-    * unroll fights task execution for the ONE UnifiedMemoryManager
-    * monitor (jstack on the sf10 board's slow PageRank runs: 18–30
-    * of 32 task threads BLOCKED in acquireExecutionMemory /
-    * reserveUnrollMemoryForThisTask while guest CPUs sat idle).
-    *
-    * A checkpointed Dataset's plan is a bare LogicalRDD over the
-    * checkpoint RDD (possibly under later projections), so the RDD
-    * is recovered from the analyzed plan and unpersisted directly —
-    * `Dataset.unpersist` can't reach it (checkpoint blocks never
-    * enter the CacheManager, so there is no entry to poison either).
-    *
-    * SAFETY: only call once every consumer of `ds` has been
-    * materialized into its own (eager) checkpoint or count — a
-    * locally-checkpointed RDD's lineage is truncated, so an
-    * unpersisted block can never be recomputed. Anything still lazy
-    * over `ds` will throw on next execution.
-    */
-  def releaseCheckpoint(ds: Dataset[_]): Unit = {
-    val rdds = ds.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    // Exactly ONE LogicalRDD by contract: every caller passes a single
-    // eagerly-checkpointed dataset (possibly under later projections).
-    // A plan with several — e.g. a JOIN of two checkpoints — would
-    // silently release a still-live sibling whose truncated lineage
-    // can never recompute ("block not found" far from the bug), so
-    // misuse fails loudly here instead.
-    require(rdds.size == 1,
-      s"releaseCheckpoint expects exactly one checkpoint RDD in the plan, " +
-        s"found ${rdds.size} — pass the checkpointed dataset itself, not a " +
-        "composition of checkpoints")
-    rdds.foreach { r => recordTombstone(r); r.unpersist(blocking = false) }
   }
 
   /** Run `f` in a fresh scope and return its result with the scope's

@@ -21,8 +21,8 @@ import scala.reflect.ClassTag
   * the input pins go when the body is done. If the body throws, every
   * pin is released.
   *
-  * Pins are persists, not checkpoints: a released block can still be
-  * recomputed from lineage, which grows by one round per state.
+  * A released state recomputes from lineage (see [[Pins]]), which
+  * grows by one round per state.
   */
 final class Rounds[K, E] private (val part: HashPartitioner,
                                   val input: RDD[(K, E)],

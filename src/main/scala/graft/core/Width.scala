@@ -39,7 +39,7 @@ object Width {
     }
 
   /** [[explode]] with a data term: width grows with the COUNTED rows
-    * of the (already pinned / checkpointed — so the count is one cheap
+    * of the (already pinned — so the count is one cheap
     * job, not a recompute) frame feeding the exploding join, over a
     * fine-grained per-task row target, floored at 1 and capped at
     * [[explode]]'s machine width. The target is small because an

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.functions.VecDot.vec_dot
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -142,6 +143,14 @@ object Similarity {
     * IVF/semDedup dataflows consume — the "learned k-means quantizer
     * slots into the same dataflow" path.
     *
+    * State rotates the way `core.Rounds` rotates it: every round after
+    * the first reads the previous round's table from a pinned RDD (one
+    * count per round), so the analyzed plan is O(1) in rounds, and the
+    * superseded state is released once its successor is counted. The
+    * last state's pin moves to the caller's scope ([[graft.core.Pins.adopt]]);
+    * the final round stays a live dataflow over it. `iters` ≤ 1 runs
+    * no job: the result is lazy over the pinned init table.
+    *
     * Scale envelope: exact Lloyd assignment needs every row to see
     * every centroid, so the refinement path is bounded by the
     * broadcast payload (cells·dims doubles ≤ [[TwoLevelBroadcastBytes]]
@@ -153,46 +162,49 @@ object Similarity {
   def kmeansQuantizer(corpus: DataFrame, idCol: String, vecCol: String,
                       numCells: Int, iters: Int): DataFrame = {
     var fine = initCentroidDf(corpus, idCol, vecCol, numCells)
-    // the currently-live inter-round checkpoint (rolling — see below)
-    var prevCkpt: Option[DataFrame] = None
-    var it = 0
-    while (it < iters) {
-      val prev =
-        if (it == 0)
-          // round 0 reads the lazy init table — pinned, because the
-          // round consumes it on BOTH the candidate fold and the
-          // empty-cell fallback join (scoped release by the caller's
-          // Pins scope, like every operator pin); iters ≤ 1 therefore
-          // stays fully lazy end to end
-          graft.core.Pins.pin(fine)
-        else {
-          // PHYSICAL lineage cut between rounds: each round embeds its
-          // input table ~3× (candidate fold, assignment, fallback
-          // join), so a pin-only loop grows the LOGICAL tree ~3× per
-          // round — analyzer cost explodes with `iters`, and a caller
-          // whose cache scope sweeps before execution would recompute
-          // the exponential tree. The eager checkpoint materializes
-          // round it−1 here and the next round reads its blocks; live
-          // checkpoint state is O(1) in rounds because the superseded
-          // round's blocks are released as soon as its successor
-          // materializes (the PageRank/CC rotation pattern). The
-          // checkpoint is cells×dims rows — tiny at any corpus scale.
-          val ck = fine.localCheckpoint(true)
-          prevCkpt.foreach(graft.core.Pins.releaseCheckpoint)
-          prevCkpt = Some(ck)
-          ck
-        }
-      fine = lloydRound(corpus, vecCol, prev)
-      it += 1
-    }
-    // the FINAL round stays a live dataflow over the last checkpoint
-    // (spec-pinned: fallback join + in-plan argmin visible in the
-    // analyzed plan); that last checkpoint is registered with the
-    // caller's pin scope, released at scope exit — consume the
-    // returned frame inside the scope (the documented contract for
-    // every operator pin)
-    prevCkpt.foreach(graft.core.Pins.pinCheckpoint)
-    fine
+    // the previous round's pinned state and the release of its pin
+    var state: RDD[Row] = null
+    var releaseState: () => Unit = () => ()
+    try {
+      var it = 0
+      while (it < iters) {
+        val prev =
+          if (it == 0)
+            // round 0 reads the lazy init table — pinned, because the
+            // round consumes it on BOTH the candidate fold and the
+            // empty-cell fallback join (scoped release by the caller's
+            // Pins scope, like every operator pin); iters ≤ 1 therefore
+            // stays fully lazy end to end
+            graft.core.Pins.pin(fine)
+          else {
+            // Each round embeds its input table ~3× (candidate fold,
+            // assignment, fallback join), so chaining the frames would
+            // grow the logical tree ~3× per round. Instead round it−1
+            // is pinned as an RDD and counted (the round's one job), and
+            // round it reads it back through a LogicalRDD leaf. The
+            // state is cells×dims values — tiny at any corpus scale.
+            val (rows, release) = graft.core.Pins.held {
+              val p = graft.core.Pins.pinRdd(fine.rdd)
+              p.count()
+              p
+            }
+            releaseState()
+            releaseState = release
+            state = rows
+            corpus.sparkSession.createDataFrame(rows, fine.schema)
+          }
+        fine = lloydRound(corpus, vecCol, prev)
+        it += 1
+      }
+      // the final round stays a live dataflow over the last state
+      // (spec-pinned: fallback join + in-plan argmin visible in the
+      // analyzed plan), whose pin the caller's scope now holds
+      if (state != null) {
+        graft.core.Pins.adopt(state, releaseState)
+        releaseState = () => ()
+      }
+      fine
+    } finally releaseState()
   }
 
   /** One Lloyd round: fold the (cell, carr) table into ONE sorted

@@ -1,6 +1,6 @@
 package graft.surv
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -84,6 +84,9 @@ object ChurnView {
   // just means a refit on next use (the memo is a perf cache, not
   // state). Access synchronized — WeakHashMap is not thread-safe and
   // Verify/Bench/Hyperband share the memo.
+  // The split's rn offsets fit only the pinned partitioning (a recompute
+  // may range-partition differently), so a memoized dataset keeps its
+  // pins: they go to a `Pins.held` release that is never called.
   private val cache =
     new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[
       scala.collection.mutable.Map[(String, Double), SurvDataset]]]()
@@ -101,7 +104,7 @@ object ChurnView {
       }
     }
     perSession.getOrElseUpdate((dir, trainRatio),
-      buildDataset(spark, dir, trainRatio))
+      Pins.held(buildDataset(spark, dir, trainRatio))._1)
   }
 
   private def buildDataset(spark: SparkSession, dir: String,

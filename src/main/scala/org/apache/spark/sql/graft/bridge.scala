@@ -34,36 +34,15 @@ object bridge {
     d.sparkSession.sharedState.cacheManager.lookupCachedData(d).isDefined
   }
 
-  /** Re-bind a dataset's PHYSICAL rows into another session of the
-    * same SparkContext: the source's executed RDD (for an eagerly
-    * checkpointed dataset, a scan of its cached blocks — zero
-    * recompute) becomes a LogicalRDD leaf in `target`. Used by
-    * iterative operators that right-size their loop's shuffle width on
-    * an isolated `newSession()` clone instead of mutating the shared
-    * session conf: the clone shares context, cache, and checkpoint
-    * blocks, but its `spark.sql.shuffle.partitions` is its own.
-    */
-  def rebind(target: org.apache.spark.sql.SparkSession,
-             ds: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.DataFrame = {
-    // fail loudly at the operator boundary if `ds` reads a checkpoint
-    // that state rotation / a pin-scope exit already released — the
-    // alternative is Spark's generic "block not found" at execution,
-    // far from the contract violation (Pins.requireConsumable note)
-    graft.core.Pins.requireConsumable(ds, "rebind input")
-    val c = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    target.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(c.queryExecution.toRdd, c.schema)
-  }
-
   /** `newSession()` clone that PRESERVES the caller's runtime SQL
     * conf. A bare clone initializes its SQLConf from the SparkConf
     * only, so anything the caller set at runtime via `spark.conf.set`
     * (ANSI mode, AQE toggles, session timezone, broadcast threshold)
-    * would silently revert to defaults inside an operator's isolated
-    * loop. Every parent entry is copied; static/immutable entries
-    * throw on set and are skipped (the clone already shares them
-    * through the context's SparkConf). Callers then override only
-    * their own knobs (e.g. the loop's shuffle width).
+    * would silently revert to defaults inside the clone. Every parent
+    * entry is copied; static/immutable entries throw on set and are
+    * skipped (the clone already shares them through the context's
+    * SparkConf). Callers then override only their own knobs (q_profile:
+    * its scan's split packing).
     *
     * The static-conf guard is matched by error-class PREFIX
     * `CANNOT_MODIFY` and skipped silently — that is the expected,
@@ -74,12 +53,12 @@ object bridge {
     * 27× per run, training readers to ignore the channel. The prefix
     * covers both classes and any future split of the guard.) Any
     * OTHER non-fatal set failure is still skipped (a reclassified
-    * guard on a future Spark must not crash every operator that
+    * guard on a future Spark must not crash every caller that
     * clones a session, over an entry the clone already inherits
     * through the shared SparkConf) but is reported through
     * `onUnexpectedSkip` (default: stderr): a mutable,
     * semantics-bearing conf (ANSI mode, timezone) failing for a
-    * transient or validation reason would otherwise leave the loop
+    * transient or validation reason would otherwise leave the
     * clone silently diverging from the caller's session. The handler
     * parameter exists so specs can assert the expected path is SILENT
     * by capture instead of grepping stderr.

@@ -11,7 +11,7 @@ class SessionSpec extends AnyFunSuite {
 
   test("only graft.Session builds a SparkSession in src/main") {
     val found = SourceScan.find(Seq("SparkSession.builder"),
-      except = "graft/Session.scala")
+      except = Some("graft/Session.scala"))
     assert(found.isEmpty,
       s"sessions built outside graft.Session:\n${found.mkString("\n")}")
   }

@@ -61,7 +61,7 @@ class CarryScanSpec extends AnyFunSuite {
 
   test("nothing in src/main calls mapPartitionsWithIndex outside CarryScan") {
     val found = graft.SourceScan.find(
-      Seq("mapPartitionsWithIndex"), except = "graft/core/CarryScan.scala")
+      Seq("mapPartitionsWithIndex"), except = Some("graft/core/CarryScan.scala"))
     assert(found.isEmpty, s"per-partition carries that bypass CarryScan:\n${found.mkString("\n")}")
   }
 }

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Dedup.minhashLshPairs]], [[Dedup.connectedComponents]]) against
   * the DataFrame forms they replaced, kept verbatim in
   * [[DedupReference]]: row for row, doubles by their raw bits, at
-  * widths 1, 3 and 7. Plus their job counts, argument checks and the
-  * source guard that keeps local checkpoints out of the operators.
+  * widths 1, 3 and 7. Plus their job counts and argument checks.
   */
 class DedupKernelSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -261,14 +260,6 @@ class DedupKernelSpec extends AnyFunSuite {
         e.getMessage.contains("rowsPerBand (4)"), e.getMessage)
     }
   }
-
-  // ------------------------------------------------------ source guard
-
-  test("src/main takes local checkpoints only in the k-means quantizer") {
-    val found = graft.SourceScan.find(Seq("localCheckpoint"),
-      except = "graft/ops/Similarity.scala")
-    assert(found.isEmpty, s"local checkpoints outside Similarity.scala:\n${found.mkString("\n")}")
-  }
 }
 
 /** The DataFrame forms the kernels replaced, verbatim: the n-gram pair
@@ -386,8 +377,8 @@ object DedupReference {
     // (observed as a driver OOM at 25 rounds). The eager
     // localCheckpoint makes every round's inputs flat cached tables;
     // the blocks are one row per edge-endpoint node (near-dup nodes
-    // only, a small fraction of the corpus) and are released by the
-    // caller's cache scope.
+    // only, a small fraction of the corpus) and go when the checkpoint
+    // RDDs are garbage-collected.
     // the edge list is checkpointed BEFORE the undirected union — the
     // union consumes it twice, and without the cut the upstream pair
     // pipeline (shingle joins etc.) would execute once per branch
@@ -427,7 +418,7 @@ object DedupReference {
     // the caller's session in shuffle width ONLY
     val loopSpark = org.apache.spark.sql.graft.bridge.sessionClone(spark)
     loopSpark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val e = org.apache.spark.sql.graft.bridge.rebind(loopSpark, e0)
+    val e = loopSpark.createDataFrame(e0.rdd, e0.schema)
     val undBoth = e.select(col("i").as("node"), col("j").as("nbr"))
       .union(e.select(col("j").as("node"), col("i").as("nbr")))
     // init fuses propagation step 1: lbl0(v) = min(v, min nbr) — the
@@ -440,11 +431,10 @@ object DedupReference {
       .localCheckpoint(true)
     var it = 0
     var converged = false
-    // superseded state (labels checkpoints, prop persists) whose
-    // blocks can only be released once a LATER round's count has
-    // materialized the round that consumed them — more than one entry
-    // accumulates only across count-skipped rounds (below)
-    var pendingLabels = List.empty[DataFrame]
+    // superseded prop persists, whose blocks can only be released once
+    // a LATER round's count has materialized the round that consumed
+    // them — more than one entry accumulates only across count-skipped
+    // rounds (below)
     var pendingProps = List.empty[() => Unit]
     while (!converged && it < maxIter) {
       // min over neighbors' labels (one equi-join + map-side-combined
@@ -471,7 +461,6 @@ object DedupReference {
         .select(col("node"), col("prev"), col("cc").as("comp"))
         .localCheckpoint(false)
       pendingProps ::= releaseProp
-      pendingLabels ::= labels
       labels = next.select(col("node"), col("comp"))
       // Round 1's convergence count is SKIPPED (r20, verdict item 4):
       // init already fused propagation step 1, so real near-dup
@@ -484,15 +473,10 @@ object DedupReference {
       // for one job per query on every non-degenerate graph.
       if (it > 0 || it == maxIter - 1) {
         val changed = next.filter(col("comp") =!= col("prev")).count()
-        // state ROTATION: the count materialized every pending round's
-        // checkpoint — release the superseded blocks so live
-        // checkpoint state stays O(1) in the round count (see
-        // Pins.releaseCheckpoint for the memory-manager convoy that
-        // stacking superseded rounds causes at scale)
+        // the count materialized every pending round's checkpoint, so
+        // the superseded prop pins go
         pendingProps.foreach(_())
-        pendingLabels.foreach(graft.core.Pins.releaseCheckpoint)
         pendingProps = Nil
-        pendingLabels = Nil
         converged = changed == 0
       }
       it += 1
@@ -500,17 +484,8 @@ object DedupReference {
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
         "(diameter > 2^maxIter is not a realistic near-dup graph)")
-    // the edge checkpoint fed every round's undirected union; the
-    // returned labels are checkpoint-cut and independent of it
-    // (released via e0 — the checkpointed dataset itself; `e` is a
-    // rebind whose leaf is a DERIVED scan of the same blocks)
-    graft.core.Pins.releaseCheckpoint(e0)
-    // the FINAL round's label checkpoint backs the returned frame —
-    // registered with the caller's pin scope (released at scope exit;
-    // consume the result inside the scope)
-    graft.core.Pins.pinCheckpoint(labels)
     // back to the caller's session (and its shuffle width): labels'
     // rows come straight off the final round's checkpoint blocks
-    org.apache.spark.sql.graft.bridge.rebind(spark, labels)
+    spark.createDataFrame(labels.rdd, labels.schema)
   }
 }

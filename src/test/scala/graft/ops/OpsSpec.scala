@@ -289,10 +289,10 @@ class OpsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val (n2, n6) = graft.core.Pins.scoped {
-      // iters ≥ 2 reads its final round off a checkpoint LEAF, so the
-      // analyzed tree has the SAME size at any round count — the
-      // pin-only loop this replaces grew ~3× per round (round 6 would
-      // be ~3⁶ the size of round 2 and analyzer-hostile at real iters)
+      // iters ≥ 2 reads its final round off a pinned-state LEAF, so
+      // the analyzed tree has the SAME size at any round count — a
+      // chained-frame loop grows ~3× per round (round 6 would be ~3⁶
+      // the size of round 2 and analyzer-hostile at real iters)
       val q2 = Similarity.kmeansQuantizer(df, "vec_id", "embedding",
         numCells = 3, iters = 2)
       val q6 = Similarity.kmeansQuantizer(df, "vec_id", "embedding",
@@ -303,11 +303,11 @@ class OpsSpec extends AnyFunSuite {
     assert(n6 == n2,
       s"quantizer plan must not grow with rounds: iters=6 has $n6 nodes " +
         s"vs iters=2's $n2")
-    // rolling rotation: superseded inter-round checkpoints are released
+    // rolling rotation: superseded inter-round states are released
     // as soon as their successor materializes; the scoped init pin AND
-    // the two final-round input checkpoints (registered via
-    // Pins.pinCheckpoint) are released at scope exit — bare
-    // Pins.scoped callers leave ZERO leaked RDDs
+    // the two final-round input states (handed to the scope via
+    // Pins.adopt) are released at scope exit — bare Pins.scoped
+    // callers leave ZERO leaked RDDs
     val leaked = (sc.getPersistentRDDs.keySet -- before).size
     assert(leaked == 0, s"expected 0 live RDDs after 2+6 rounds, got $leaked")
   }
@@ -348,6 +348,43 @@ class OpsSpec extends AnyFunSuite {
     got.foreach { case (c, arr) =>
       assert(arr.sameElements(cents(c)), s"cell $c: ${arr.toSeq} vs ${cents(c).toSeq}")
     }
+  }
+
+  test("kmeans quantizer: six rounds hold the init pin and the last " +
+      "state, and nothing after the scope") {
+    import spark.implicits._
+    val df = (0L until 24L).map { i =>
+      i -> Seq(math.cos(i * 0.5), math.sin(i * 0.8), 0.05 * i)
+    }.toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val during = graft.core.Pins.scoped {
+      Similarity.kmeansQuantizer(df, "vec_id", "embedding",
+        numCells = 3, iters = 6).collect()
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    assert(during <= 2, s"expected <=2 live RDDs during the run " +
+      s"(init pin + last state), got $during")
+    val leaked = (sc.getPersistentRDDs.keySet -- before).size
+    assert(leaked == 0, s"expected 0 live RDDs after scope exit, got $leaked")
+  }
+
+  test("kmeans quantizer: a result read after its scope recomputes " +
+      "the same centroids") {
+    import spark.implicits._
+    val df = (0L until 24L).map { i =>
+      i -> Seq(math.cos(i * 0.5), math.sin(i * 0.8), 0.05 * i)
+    }.toDF("vec_id", "embedding")
+    def cells(q: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[Long])] =
+      q.collect().map(r => r.getInt(0) ->
+        r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).sortBy(_._1).toSeq
+    val (q, inside) = graft.core.Pins.scoped {
+      val q = Similarity.kmeansQuantizer(df, "vec_id", "embedding",
+        numCells = 3, iters = 4)
+      (q, cells(q))
+    }
+    // the scope has released every pin under q: it recomputes
+    assert(cells(q) == inside)
   }
 
   test("sessionClone preserves runtime SQL conf, isolates overrides") {

@@ -69,10 +69,9 @@ class PageRankSpec extends AnyFunSuite {
     // e0 and nodes) in the storage pool — at sf10 that saturated the
     // pool and convoyed every task on the UnifiedMemoryManager monitor
     // (jstack: 18-30 of 32 threads BLOCKED in acquireExecutionMemory).
-    // After rotation, only the returned ranks checkpoint and the
-    // scoped edge-table pin survive the RUN; both are scope-registered
-    // (Pins.pin / Pins.pinCheckpoint), so the SCOPE releases
-    // everything.
+    // After rotation, only the returned ranks state survives the RUN,
+    // and the caller's scope holds its pin (Pins.adopt), so the SCOPE
+    // releases everything.
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val during = graft.core.Pins.scoped {
@@ -106,7 +105,7 @@ class PageRankSpec extends AnyFunSuite {
 
   test("earlyRelease: bit-identical ranks, zero live state after scope") {
     // the halved peak-storage path (one eager edge pass + immediate
-    // checkpoint release) must change NOTHING observable: same ranks,
+    // ingest-pin release) must change NOTHING observable: same ranks,
     // same out-degrees, and the scope still releases every block
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -345,7 +344,7 @@ class PageRankSpec extends AnyFunSuite {
       spark.sparkContext.defaultParallelism)
     val loopSpark = org.apache.spark.sql.graft.bridge.sessionClone(spark)
     loopSpark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val eb = org.apache.spark.sql.graft.bridge.rebind(loopSpark, e0)
+    val eb = loopSpark.createDataFrame(e0.rdd, e0.schema)
 
       // The edge table is the loop's big invariant input, so it is
       // cached hash-partitioned AND sorted on the join key via
@@ -363,17 +362,11 @@ class PageRankSpec extends AnyFunSuite {
       val e = graft.core.Pins.pin(eb.withColumnRenamed("src", "node")
         .repartition(loopParts, col("node"))
         .sortWithinPartitions("node"))
-      // earlyRelease: materialize the pin NOW (one extra edge pass)
-      // and drop the ingest checkpoint immediately — everything below
-      // reads the pin, so peak block storage stays ~1× edge bytes
-      // instead of carrying checkpoint + pin (2×) through the node
-      // table's materialization (see [[ranks]]). Default path: the
-      // pin materializes lazily inside nodes' checkpoint and the
-      // release happens right after (recompute insurance intact).
-      if (earlyRelease) {
-        e.count()
-        graft.core.Pins.releaseCheckpoint(e0)
-      }
+      // earlyRelease: materialize the pin NOW (one extra edge pass).
+      // Default path: the pin materializes lazily inside nodes'
+      // checkpoint. The checkpoints are not released here: their
+      // blocks go when the checkpoint RDDs are garbage-collected.
+      if (earlyRelease) e.count()
       // Node universe AND out-degree from ONE pass (r19 optimization):
       // each edge contributes (src, 1) and (dst, 0); a
       // single map-side-combined sum(c) per node IS the out-degree,
@@ -401,7 +394,7 @@ class PageRankSpec extends AnyFunSuite {
           // the seed frame is caller-session — re-bound so the whole
           // loop dataflow lives on the clone (it is a tiny query set;
           // its one-time evaluation cost is irrelevant)
-          .join(org.apache.spark.sql.graft.bridge.rebind(loopSpark, s)
+          .join(loopSpark.createDataFrame(s.rdd, s.schema)
             .select(col("node")).distinct()
             .withColumn("_sf", lit(1)), Seq("node"), "left")
           .select(col("node"), col("od"), col("_sf").isNotNull.as("seed"))
@@ -418,13 +411,6 @@ class PageRankSpec extends AnyFunSuite {
       // seeds for personalized
       val sD = seeds.fold(nD)(_ => cnts.getLong(1).toDouble)
       require(sD > 0, "personalized PageRank needs >= 1 in-graph seed")
-      // e0's consumers are all materialized by here (the pinned edge
-      // table cached MEMORY_AND_DISK through nodes' eager checkpoint,
-      // nodes itself counted above), so the edge-sized checkpoint —
-      // the loop's biggest block set — is released before the
-      // iterations start competing for the storage pool. (Already
-      // gone on the earlyRelease path.)
-      if (!earlyRelease) graft.core.Pins.releaseCheckpoint(e0)
       var ranks = nodes.withColumn("m", lit(1.0)).localCheckpoint(true)
       var it = 0
       while (it < iters) {
@@ -464,30 +450,15 @@ class PageRankSpec extends AnyFunSuite {
                   lit(damping) * col("dm") / lit(sD))
                 .otherwise(lit(0.0))
         }
-        // state ROTATION: the eager checkpoint above fully consumed
-        // the previous round's ranks, so its blocks are released now —
-        // live checkpoint state stays O(1) in the iteration count
-        // instead of stacking `iters` superseded rank tables into the
-        // storage pool (see Pins.releaseCheckpoint for the measured
-        // memory-manager convoy that stacking causes at sf10)
-        val prev = ranks
         ranks = joined
           .select(col("node"), col("od"), col("seed"),
             round(m2, roundDp).as("m"))
           .localCheckpoint(true)
-        graft.core.Pins.releaseCheckpoint(prev)
         it += 1
       }
-    // `nodes` fed every round's join; the loop is done and the final
-    // ranks checkpoint is self-contained, so it goes too
-    graft.core.Pins.releaseCheckpoint(nodes)
-    // the final ranks checkpoint backs the returned frame — registered
-    // with the caller's pin scope (released at scope exit; consume the
-    // result in the scope)
-    graft.core.Pins.pinCheckpoint(ranks)
     // back to the caller's session (and its shuffle width): the rows
     // come straight off the final round's checkpoint blocks
-    org.apache.spark.sql.graft.bridge.rebind(spark,
-      ranks.select(col("node"), col("od"), col("m")))
+    val out = ranks.select(col("node"), col("od"), col("m"))
+    spark.createDataFrame(out.rdd, out.schema)
   }
 }
