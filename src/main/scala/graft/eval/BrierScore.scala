@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * a continuous-time curve, no nested-loop join). The prediction
   * matrix then needs one keyed equi-join to the subject table and one
   * shuffle by (cfg, τ): the split's slice kernel sums each τ's terms
-  * exactly ([[exactSum]]), so BS(τ) does not depend on how the rows
+  * exactly ([[graft.core.ExactSum]]), so BS(τ) does not depend on how the rows
   * were partitioned, and a task holds one τ slice at a time.
   */
 object BrierScore {
@@ -58,14 +58,14 @@ object BrierScore {
     * bs), sorted by tau_idx, normalized by the span of the grid points
     * it pairs. Only neighbouring grid points pair (a τ a matrix has no
     * rows at is skipped); NaN when none do. The areas are summed by
-    * [[exactSum]].
+    * [[graft.core.ExactSum]].
     */
   private[eval] def trapezoid(pts: Array[(Int, Double, Double)]): Double = {
     val steps = pts.indices.drop(1).filter(k => pts(k)._1 == pts(k - 1)._1 + 1)
     if (steps.isEmpty) Double.NaN
     else {
       val areas = steps.map(k => (pts(k)._3 + pts(k - 1)._3) / 2.0 * (pts(k)._2 - pts(k - 1)._2))
-      exactSum(areas.toArray, areas.size) /
+      graft.core.ExactSum(areas.toArray, areas.size) /
         (steps.map(k => pts(k)._2).reduce(math.max(_, _)) -
           steps.map(k => pts(k - 1)._2).reduce(math.min(_, _)))
     }
@@ -79,20 +79,6 @@ object BrierScore {
     if (t <= tau && e == 1 && gTi > 0.0) s * s / gTi
     else if (t > tau && gTau > 0.0) (1.0 - s) * (1.0 - s) / gTau
     else 0.0
-
-  /** Σ xs(0 until len), independent of the order of addition: every
-    * finite term is an exact `BigDecimal` and the sum is rounded to a
-    * double once. A config's rows spread over partitions differently in
-    * each batch it is scored in, so a double sum would score the same
-    * model differently alone and in a rung, or at another
-    * `parallelism`. Non-finite terms (a diverged model's NaN or ∞) give
-    * what the double sum gives: NaN if any is NaN, else ±∞.
-    */
-  private[eval] def exactSum(xs: Array[Double], len: Int): Double = {
-    val (finite, other) = xs.iterator.take(len).partition(java.lang.Double.isFinite)
-    if (other.hasNext) other.sum
-    else finite.foldLeft(java.math.BigDecimal.ZERO)(_ add new java.math.BigDecimal(_)).doubleValue
-  }
 
   /** The reference's default grid: 100 equidistant points over the
     * test split's [t_min, t_max] (base.py:77-81).

@@ -150,7 +150,7 @@ object ScoringSplit {
 
   /** The slice kernel: the rows of one partition, (cfg, tau, s, t, e,
     * event-at-τ, g_ti) sorted by (cfg, τ), scored one slice at a time —
-    * [[BrierScore.term]]s summed exactly ([[BrierScore.exactSum]]) and
+    * [[BrierScore.term]]s summed exactly ([[graft.core.ExactSum]]) and
     * divided by n, and the pair counts of
     * [[ScalableConcordance.sliceCounts]].
     */
@@ -174,7 +174,7 @@ object ScoringSplit {
       }
       if (i >= 0) {
         val (comparable, ties, concordant) = ScalableConcordance.sliceCounts(sl.t, sl.ev, sl.s, sl.size)
-        out += SliceScore(cfg, i, tau, BrierScore.exactSum(sl.bs, sl.size) / n.toDouble,
+        out += SliceScore(cfg, i, tau, graft.core.ExactSum(sl.bs, sl.size) / n.toDouble,
           comparable, ties, concordant)
       }
     }

@@ -1,17 +1,14 @@
 package graft.ops
 
-import graft.core.{Pins, Rounds, Width}
+import graft.core.{ByFirst, Key, Pins, Rounds, Width}
 import graft.functions.VecDot.vec_dot
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{Aggregator, HashPartitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import scala.collection.immutable.ArraySeq
-import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines: exact
   * (content hash), n-gram Jaccard, MinHash+LSH, SimHash, and
@@ -78,39 +75,6 @@ object Dedup {
         .as("sh"))
   }
 
-  /** Ids and node keys as the kernels carry them: Catalyst's internal
-    * values (UTF8String for strings; floating keys with -0.0 and NaN
-    * folded the way Spark folds join and grouping keys), ordered the
-    * way Spark SQL's `<`, `min` and `least` order them.
-    */
-  private final case class Key(dt: DataType) {
-    require(dt match {
-      case _: NumericType | _: StringType | BooleanType | DateType | TimestampType |
-           TimestampNTZType => true
-      case _ => false
-    }, s"Dedup: ids and node keys must be numbers, strings, booleans, dates or timestamps, got $dt")
-    @transient lazy val ord: Ordering[Any] = PhysicalDataType.ordering(dt)
-    @transient private lazy val toScala = CatalystTypeConverters.createToScalaConverter(dt)
-
-    def read(r: InternalRow, i: Int): Any =
-      if (r.isNullAt(i)) null
-      else dt match {
-        case DoubleType =>
-          val d = r.getDouble(i)
-          if (d.isNaN) Double.NaN else if (d == 0.0) 0.0 else d
-        case FloatType =>
-          val f = r.getFloat(i)
-          if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
-        case _ => InternalRow.copyValue(r.get(i, dt))
-      }
-
-    def external(v: Any): Any = toScala(v)
-  }
-
-  /** `ids` without nulls, sorted by `key`'s order. */
-  private def sortedIds(ids: java.util.HashSet[Any], key: Key): Array[Any] =
-    ids.asScala.iterator.filter(_ != null).toArray.sorted(key.ord)
-
   /** Candidate pairs sharing ≥1 shingle with exact Jaccard ≥ minJac:
     * (i, j, inter, un, jac) with i < j, the shared and the union
     * shingle counts, and jac = inter / un. Shingles in more than
@@ -121,12 +85,15 @@ object Dedup {
     * shingle's document frequency but never pair.
     *
     * One lazy RDD job when consumed: the (id, sh) rows are shuffled once
-    * by shingle (`repartitionAndSortWithinPartitions`), so a task sweeps
-    * one shingle's ids at a time, drops repeated (id, sh) rows and
-    * capped shingles, and emits per-doc sizes and the (a < b) pairs,
-    * each through a map-side-combined `reduceByKey`; two co-partitioned
-    * joins by id attach `sza` and `szb`. Width: [[Width.explode]], the
-    * stage emits pairs quadratic in a shingle's df.
+    * by shingle (`repartitionAndSortWithinPartitions`), and one sweep
+    * takes one shingle's ids at a time, drops repeated (id, sh) rows and
+    * capped shingles, and emits a size record `(a, null) → 1` per id and
+    * a pair record `(a, b) → 1` per pair a < b. One map-side-combined
+    * shuffle on [[ByFirst]] sums both kinds, sorted so each id's size
+    * comes before its pairs: a narrow pass then attaches `sza`, and one
+    * more sorted shuffle, keyed by b, attaches `szb` the same way. No
+    * task holds more than one id's records. Width: [[Width.explode]],
+    * the sweep emits pairs quadratic in a shingle's df.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, minJac: Double = 0.05,
@@ -138,14 +105,21 @@ object Dedup {
     val rows = shingleRows(docs, idCol, textCol, n)
     val idType = rows.schema("id").dataType
     val key = Key(idType)
-    val part = new HashPartitioner(Width.explode(spark))
-    val byShingle = rows.queryExecution.toRdd
+    val width = Width.explode(spark)
+    // the (x, null) size record first, then x's pairs by key order
+    val sizeFirst = new Ordering[(Any, Any)] {
+      def compare(p: (Any, Any), q: (Any, Any)): Int = {
+        val c = key.ord.compare(p._1, q._1)
+        if (c != 0) c
+        else if (p._2 == null) { if (q._2 == null) 0 else -1 }
+        else if (q._2 == null) 1
+        else key.ord.compare(p._2, q._2)
+      }
+    }
+    val swept = rows.queryExecution.toRdd
       .map(r => (r.getLong(1), key.read(r, 0)))
-      .repartitionAndSortWithinPartitions(part)
-    // each kept shingle's distinct non-null ids, sorted, in one sweep
-    // per consumer (both read the one sorted shuffle)
-    def sweep[T: scala.reflect.ClassTag](emit: Array[Any] => Iterator[T]): RDD[T] =
-      byShingle.mapPartitions { it =>
+      .repartitionAndSortWithinPartitions(new HashPartitioner(width))
+      .mapPartitions { it =>
         val in = it.buffered
         val ids = new java.util.HashSet[Any]()
         Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
@@ -155,23 +129,40 @@ object Dedup {
             val id = in.next()._2
             if (ids.size <= maxDocFreq) ids.add(id)
           }
-          if (ids.size > maxDocFreq) Iterator.empty else emit(sortedIds(ids, key))
+          if (ids.size > maxDocFreq) Iterator.empty
+          else {
+            val s = key.sorted(ids)
+            s.indices.iterator.flatMap(a =>
+              Iterator.single((s(a), null: Any) -> 1L) ++
+                (a + 1 until s.length).iterator.map(b => (s(a), s(b)) -> 1L))
+          }
         }
       }
-    val sizes = sweep(_.iterator.map(_ -> 1L)).reduceByKey(part, _ + _)
-    val inter = sweep { ids =>
-      ids.indices.iterator.flatMap(a =>
-        (a + 1 until ids.length).iterator.map(b => (ids(a), ids(b)) -> 1L))
-    }.reduceByKey(part, _ + _)
-    val out = inter.map { case ((i, j), c) => (i, (j, c)) }
-      .join(sizes, part)
-      .map { case (i, ((j, c), sza)) => (j, (i, c, sza)) }
-      .join(sizes, part)
-      .flatMap { case (j, ((i, c, sza), szb)) =>
-        val un = sza + szb - c
-        val jac = c.toDouble / un.toDouble
-        if (jac >= minJac) Iterator.single(Row(key.external(i), key.external(j), c, un, jac))
-        else Iterator.empty
+    val counts = new ShuffledRDD[(Any, Any), Long, Long](swept, ByFirst(width))
+      .setAggregator(Aggregator[(Any, Any), Long, Long](identity, _ + _, _ + _))
+      .setMapSideCombine(true)
+      .setKeyOrdering(sizeFirst)
+    // (a, null) → (sz, 0) stays; (a, b) → c becomes (b, a) → (c, sza)
+    val withSza = counts.mapPartitions { it =>
+      var sza = 0L
+      it.map { case ((a, b), c) =>
+        if (b == null) { sza = c; (a, null: Any) -> (c, 0L) }
+        else (b, a) -> (c, sza)
+      }
+    }
+    val out = new ShuffledRDD[(Any, Any), (Long, Long), (Long, Long)](withSza, ByFirst(width))
+      .setKeyOrdering(sizeFirst)
+      .mapPartitions { it =>
+        var szb = 0L
+        it.flatMap { case ((j, i), (c, sza)) =>
+          if (i == null) { szb = c; Iterator.empty }
+          else {
+            val un = sza + szb - c
+            val jac = c.toDouble / un.toDouble
+            if (jac >= minJac) Iterator.single(Row(key.external(i), key.external(j), c, un, jac))
+            else Iterator.empty
+          }
+        }
       }
     spark.createDataFrame(out, StructType(Seq(StructField("i", idType),
       StructField("j", idType), StructField("inter", LongType),

@@ -245,8 +245,8 @@ object TextQueries {
     }),
 
     // CCNet-style LM quality filter: corpus-fitted add-1 bigram model,
-    // per-doc average log-prob; the "model" is two count tables joined
-    // on gram content
+    // per-doc average log-prob; the "model" is the corpus gram counts,
+    // hash-joined with each doc's bigrams in one RDD kernel
     "q_text_lm" -> ((s, dir) =>
       graft.core.Pins.sortedOnce(
         graft.ops.LangModel.bigramScore(Tables.load(s, dir, "documents"),

@@ -202,12 +202,12 @@ class ScoringSplitSpec extends AnyFunSuite {
     // comparable)
     assert(sliceCounts(Array(1.0, 2.0, 3.0, 1.0), Array(true, false, false, false),
       Array(0.0, -0.0, Double.NaN, 0.9), 4) == ((2L, 1L, 1L)))
-    import BrierScore.exactSum
-    assert(exactSum(Array(1e16, 1.0, -1e16, 1.0), 4) == 2.0) // left to right: 1.0
-    assert(bits(exactSum(Array(0.1, 0.2, 0.3), 3)) == bits(exactSum(Array(0.3, 0.2, 0.1), 3)))
-    assert(exactSum(Array(1.0, Double.PositiveInfinity), 2) == Double.PositiveInfinity)
-    assert(exactSum(Array(Double.PositiveInfinity, Double.NaN, 1.0), 3).isNaN)
-    assert(exactSum(Array(5.0, 7.0, 11.0), 2) == 12.0)
+    import graft.core.ExactSum
+    assert(ExactSum(Array(1e16, 1.0, -1e16, 1.0), 4) == 2.0) // left to right: 1.0
+    assert(bits(ExactSum(Array(0.1, 0.2, 0.3), 3)) == bits(ExactSum(Array(0.3, 0.2, 0.1), 3)))
+    assert(ExactSum(Array(1.0, Double.PositiveInfinity), 2) == Double.PositiveInfinity)
+    assert(ExactSum(Array(Double.PositiveInfinity, Double.NaN, 1.0), 3).isNaN)
+    assert(ExactSum(Array(5.0, 7.0, 11.0), 2) == 12.0)
   }
 
   /** The query executions `f` completes, in order. */
